@@ -18,9 +18,7 @@ import graft.sources.Tables
   *
   * The JSON line is printed to stdout and also written to
   * `BENCH_LAST.json` (launchers like sbt prefix stdout, which defeats a
-  * log-scrape json parse). A `bucketed` field re-times the two
-  * shuffle-dominated queries over pre-bucketed lineitem/orders — the
-  * measured version of the co-located-join story in SCALE.md.
+  * log-scrape json parse).
   *
   * `BENCH_LAST.json` is the MOST RECENT capture, overwritten by every
   * run (including the driver's end-of-round run). The capture OF RECORD
@@ -166,13 +164,14 @@ object Bench {
     (out, prov.result())
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** The session every Bench-family main (Bench, OptProbe, ScaleCurve,
+    * PlanDump) runs under, so their timings and plans are the bench's. */
+  def session(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(Runtime.getRuntime.availableProcessors(), 32).toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .appName("graft-bench")
+      .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
       // The fixtures are single small parquet files; at the default 128 MB
       // maxPartitionBytes each table scans (and caches) as ONE partition,
@@ -187,62 +186,28 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-bench-wh-").toString)
+        java.nio.file.Files.createTempDirectory(s"$appName-wh-").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Total stop-the-world GC time across all collectors, in ms. */
+  def gcMillis(): Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session("graft-bench")
 
     // Pre-computation (reference parity): cache + force the TPC-H tables.
     // Queries re-reading the same parquet paths hit the cached
     // InMemoryRelation via logical-plan cache matching.
     Tables.tpch.foreach { t => Tables.load(spark, sfDir, t).cache().count() }
 
-    // THREE warmup passes: the first absorbs plan + whole-stage-codegen
-    // compilation, the second catches the stragglers (C2 recompiles, the
-    // first GC young-gen resize), the third settles allocation-rate
-    // ergonomics — at sub-second magnitudes one straggler rep moves even
-    // a median-of-5 (r8's recorded headline doubled vs r6 purely from
-    // rep-loop GC churn; per-query gc_ms up to 1.16 s proved it).
-    (1 to 3).foreach { _ =>
-      headline.foreach(q => Force.run(SparkEntry.queries(q)(spark, sfDir)))
-    }
-    // GC settle before the timed reps: force a full collection and give
-    // concurrent phases a beat to finish, so the timed loop starts from a
-    // compacted heap instead of paying the warmups' garbage.
-    System.gc()
-    Thread.sleep(1000)
-
-    /** Total stop-the-world GC time across all collectors, in ms. */
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
-    }
-
-    // Timed pass: 5 reps per query, report the median — but emit EVERY
-    // rep (plus the GC time that elapsed across the query's reps) in the
-    // artifact, so a 3× outlier is diagnosable from the JSON alone: a
-    // noisy environment shows one blown rep among four steady ones (and
-    // usually a fat gc_ms), a real regression shows five consistently
-    // slow reps. Each rep is still end-to-end (plan + execute +
-    // materialize), same warmed-cache methodology as the reference's
-    // pre-loaded tables.
-    //
-    // Reps are INTERLEAVED round-robin across queries (rep 1 of every
-    // query, then rep 2 of every query, …), not run back-to-back per
-    // query: a multi-second environment stall (page-cache writeback, a
-    // competing process, a JIT deopt storm) then lands in at most one
-    // rep of each query — where the median discards it — instead of
-    // concentrating 3 of one query's 5 reps and tripling that query's
-    // median while its neighbors stay clean (the r6 "q3 regression" and
-    // the r3→r4 "q10 regression" were exactly this ambiguity). The
-    // per-query MIN is emitted alongside the median: min is immune to
-    // one-sided noise, so median >> min flags "stalled environment"
-    // while median ≈ min ≫ last round flags a real plan regression.
-    val repCount = 5
-    val repsByQuery = collection.mutable.Map(
-      headline.map(_ -> Vector.empty[Double]): _*)
-    val gcByQuery = collection.mutable.Map(
-      headline.map(_ -> Vector.empty[Long]): _*)
     // The one timing discipline every section shares (headline, tpch22,
     // llm, ss20_train — the stall sentinel and drift watch compare
     // across sections, so they must never diverge): gc delta + wall
@@ -253,9 +218,9 @@ object Bench {
       body
       ((System.nanoTime() - t0) / 1e9, gcMillis() - gc0)
     }
-    // One timed end-to-end execution of `q` — the same measurement the
-    // rep loops take, shared with the stall-retry path so a retried rep
-    // is measured identically to the rep it may replace. Graft-pinned
+    // One timed end-to-end execution of `plan(q)` — the same measurement
+    // for every rep and for the stall-retry path, so a retried rep is
+    // measured identically to the rep it may replace. Graft-pinned
     // frames are released AFTER the timed window (round-18 honesty fix:
     // q15 persists+pins its per-supplier aggregate at construction, and
     // Spark's cache manager matches plan-identical frames — without the
@@ -263,48 +228,71 @@ object Bench {
     // aggregate instead of executing the query, so the tpch22 q15 row
     // timed a cache read; captures from r18 on pay the honest
     // re-execution, ~0.33 → ~0.7 s at sf0.1).
-    def timedRun(q: String): (Double, Long) = {
-      val r = timedBody(Force.run(SparkEntry.queries(q)(spark, sfDir)))
+    def timedRun(plan: String => DataFrame)(q: String): (Double, Long) = {
+      val r = timedBody(Force.run(plan(q)))
       graft.ops.Pipeline.releaseCaches()
       r
     }
+    val catalog: String => DataFrame = q => SparkEntry.queries(q)(spark, sfDir)
     // Stall-retry budget (see retryFlagged): per-query bound on re-runs
     // of flagged reps. SPARK_GRAFT_BENCH_RETRIES=0 disables (a pure
     // "record the contamination" capture); default 2.
     val retryBudget =
       sys.env.get("SPARK_GRAFT_BENCH_RETRIES").map(_.toInt).getOrElse(2)
     val retryProv = Seq.newBuilder[String]
-    (1 to repCount).foreach { _ =>
-      headline.foreach { q =>
-        val (sec, gc) = timedRun(q)
-        repsByQuery(q) :+= sec
-        gcByQuery(q) :+= gc
-      }
-    }
-    val timed = {
-      val rows0 = headline.map(q =>
-        (q, repsByQuery(q): Seq[Double], gcByQuery(q): Seq[Long]))
-      val (rows, prov) =
-        retryFlagged("headline", rows0, timedRun, retryBudget)
+
+    // Every timed section runs this one loop: `warmups` passes whose
+    // timings are discarded (plan + codegen for every query, so rep 1 of
+    // query 1 doesn't pay a JIT storm its neighbors skip), then `reps` passes INTERLEAVED
+    // round-robin across queries (rep 1 of every query, then rep 2 of
+    // every query, …), not back-to-back per query: a multi-second
+    // environment stall (page-cache writeback, a competing process, a
+    // JIT deopt storm) then lands in at most one rep of each query —
+    // where the median/min discards it — instead of concentrating in one
+    // query's reps (the r6 "q3 regression" and the r3→r4 "q10
+    // regression" were exactly this ambiguity). EVERY rep and its GC
+    // delta go to the artifact, so an outlier is diagnosable from the
+    // JSON alone: a noisy environment shows one blown rep among steady
+    // ones (usually with a fat gc_ms), a real regression shows
+    // consistently slow reps. Stall-flagged reps are then re-run within
+    // the retry budget, and every attempt lands in stall_retries.
+    def timedSuite(section: String, names: Seq[String], warmups: Int,
+        reps: Int, settleGc: Boolean = false)(run: String => (Double, Long))
+        : Seq[(String, Seq[Double], Seq[Long])] = {
+      (1 to warmups).foreach(_ => names.foreach(run))
+      // GC settle before the timed reps: force a full collection and give
+      // concurrent phases a beat to finish, so the timed loop starts from
+      // a compacted heap instead of paying the warmups' garbage.
+      if (settleGc) { System.gc(); Thread.sleep(1000) }
+      val acc = collection.mutable.Map(names.map(_ -> Vector.empty[(Double, Long)]): _*)
+      (1 to reps).foreach(_ => names.foreach(q => acc(q) :+= run(q)))
+      val (rows, prov) = retryFlagged(section,
+        names.map(q => (q, acc(q).map(_._1): Seq[Double], acc(q).map(_._2): Seq[Long])),
+        run, retryBudget)
       retryProv ++= prov
       rows
     }
+
+    // Headline: THREE warmup passes — the first absorbs plan +
+    // whole-stage-codegen compilation, the second catches the stragglers
+    // (C2 recompiles, the first GC young-gen resize), the third settles
+    // allocation-rate ergonomics; at sub-second magnitudes one straggler
+    // rep moves even a median-of-5 (r8's recorded headline doubled vs r6
+    // purely from rep-loop GC churn; per-query gc_ms up to 1.16 s proved
+    // it). Then 5 reps per query, median reported; the per-query MIN is
+    // emitted alongside: min is immune to one-sided noise, so median >>
+    // min flags "stalled environment" while median ≈ min ≫ last round
+    // flags a real plan regression. Each rep is end-to-end (plan +
+    // execute + materialize), same warmed-cache methodology as the
+    // reference's pre-loaded tables.
+    val repCount = 5
+    val timed = timedSuite("headline", headline, warmups = 3, reps = repCount,
+      settleGc = true)(timedRun(catalog))
     val results = timed.map { case (q, reps, _) =>
       q -> reps.sorted.apply(repCount / 2)
     }
     val mins = timed.map { case (q, reps, _) => q -> reps.min }
 
-    // Informational full-suite sweep: every TPC-H shape in the catalog —
-    // not part of the headline metric (BASELINE.md defines the 8-query
-    // suite) but a regression in e.g. q9/q18/q21 becomes visible
-    // round-over-round instead of timed nowhere. Same discipline as the
-    // headline: one warmup pass over the whole suite, then 3 INTERLEAVED
-    // reps with the per-query MIN reported and every rep + its GC delta
-    // in the artifact — r10 committed a single-rep sweep whose heavy rows
-    // (q10 6.5 s, q4 3.9 s) contradicted the same JVM's rep'd sections
-    // (q10 min 1.02 s) and was un-adjudicable from the JSON alone; this
-    // section was the last one violating the reps+min+gc house rule.
-    // Disable with SPARK_GRAFT_BENCH_TPCH22=0.
     // Informational sweeps are wrapped: a crash in one must NOT kill the
     // headline artifact (round 7's driver bench lost its number exactly
     // this way — a loader regression threw inside the tpch22 sweep and the
@@ -318,74 +306,21 @@ object Bench {
           System.err.println(s"[bench] $label sweep failed, omitting: ${e.getMessage}")
           Nil
       }
-    // Saved-table pair for the bucketed-layout paths: identical parquet
-    // tables except for the bucketing spec. Bucket count is sized to the
-    // DATA, not the core count: each bucket holds roughly one scan-task's
-    // worth (~16 MB compressed here; ~128 MB at cluster scale) — 32
-    // buckets over an 11 MB fact table measured SLOWER than shuffling.
-    // Written lazily once; reused by the tpch22 bucketed mode, the layout
-    // experiment, and the end-to-end sweep.
-    // One-time cost of the bucketed layout (the two writeBucketed calls),
-    // charged into the bucketed_e2e section's break-even arithmetic.
-    var bucketedWriteSec: Double = -1.0
-    lazy val bucketedTablesReady: Boolean =
-      try {
-        val factBytes =
-          graft.ops.Pipeline.directoryBytes(spark, s"$sfDir/lineitem.parquet")
-        val b = sys.env.get("SPARK_GRAFT_BENCH_BUCKETS").map(_.toInt)
-          .getOrElse(math.max(4, (factBytes / (16L << 20)).toInt))
-        val liSrc = Tables.load(spark, sfDir, "lineitem")
-        val ordSrc = Tables.load(spark, sfDir, "orders")
-        liSrc.write.mode("overwrite").format("parquet").saveAsTable("bench_li_p")
-        ordSrc.write.mode("overwrite").format("parquet").saveAsTable("bench_ord_p")
-        val t0 = System.nanoTime()
-        Tables.writeBucketed(liSrc, "bench_li_b", b, "l_orderkey")
-        Tables.writeBucketed(ordSrc, "bench_ord_b", b, "o_orderkey")
-        bucketedWriteSec = (System.nanoTime() - t0) / 1e9
-        true
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] bucketed table write failed: ${e.getMessage}")
-          false
-      }
 
-    // SPARK_GRAFT_BUCKETED=1 routes the WHOLE tpch22 sweep over the
-    // bucketed fact tables through the unmodified SparkEntry entry points
-    // (Tables.overrides) — the reproducible end-to-end form of the
-    // co-located-join claim, not just the side experiment.
-    val tpch22Bucketed =
-      sys.env.get("SPARK_GRAFT_BUCKETED").contains("1")
+    // Informational full-suite sweep: every TPC-H shape in the catalog —
+    // not part of the headline metric (BASELINE.md defines the 8-query
+    // suite) but a regression in e.g. q9/q18/q21 becomes visible
+    // round-over-round instead of timed nowhere. One warmup pass, then 3
+    // reps with the per-query MIN reported (r10 committed a single-rep
+    // sweep whose heavy rows contradicted the same JVM's rep'd sections
+    // and was un-adjudicable from the JSON alone). Disable with
+    // SPARK_GRAFT_BENCH_TPCH22=0.
     val tpch22Raw: Seq[(String, Seq[Double], Seq[Long])] = informational("tpch22") {
       if (sys.env.get("SPARK_GRAFT_BENCH_TPCH22").contains("0")) Nil
       else {
-        if (tpch22Bucketed && bucketedTablesReady) {
-          Tables.overrides("lineitem") = spark.table("bench_li_b")
-          Tables.overrides("orders") = spark.table("bench_ord_b")
-        }
         val qs = graft.queries.TpchQueries.queries.keys.toSeq
           .sortBy(n => n.drop(1).takeWhile(_.isDigit).toInt)
-        try {
-          qs.foreach(q => Force.run(SparkEntry.queries(q)(spark, sfDir))) // warmup/codegen
-          graft.ops.Pipeline.releaseCaches() // drop warmup pins (q15) so rep 1 executes, not cache-reads
-          val acc = collection.mutable.Map(qs.map(_ -> Vector.empty[Double]): _*)
-          val gcAcc = collection.mutable.Map(qs.map(_ -> Vector.empty[Long]): _*)
-          (1 to 3).foreach { _ =>
-            qs.foreach { q =>
-              val (sec, gc) = timedRun(q)
-              acc(q) :+= sec
-              gcAcc(q) :+= gc
-            }
-          }
-          // retry INSIDE the try: the bucketed-mode table overrides must
-          // still be live when a flagged rep re-runs
-          val (rows, prov) = retryFlagged("tpch22",
-            qs.map(q => (q, acc(q): Seq[Double], gcAcc(q): Seq[Long])),
-            timedRun, retryBudget)
-          retryProv ++= prov
-          rows
-        } finally {
-          Tables.overrides.remove("lineitem"); Tables.overrides.remove("orders")
-        }
+        timedSuite("tpch22", qs, warmups = 1, reps = 3)(timedRun(catalog))
       }
     }
     // per-query min = steady-state cost; the total is a sum of mins
@@ -396,14 +331,11 @@ object Bench {
     // operators (dedup, similarity join, text filters, packing,
     // behavioral) — the throughput evidence for the non-TPC-H half of the
     // catalog, which the headline metric never touches. One warmup pass,
-    // then 3 INTERLEAVED reps per query with the per-query MIN reported
-    // (same discipline as the headline, same reason: r9's single-rep
-    // sweep "showed" dd16 4.7→26 s and ta14 0.13→1.7 s while pl21 —
-    // which composes ta14 — improved 5×; a single rep in a 24-query
-    // sweep attributes environment stalls and cache evictions to
-    // whichever query they land on). Raw reps go to the full artifact
-    // (`llm_reps`) so median-vs-min noise stays diagnosable. Disable
-    // with SPARK_GRAFT_BENCH_LLM=0.
+    // then 3 reps per query with the per-query MIN reported (r9's
+    // single-rep sweep "showed" dd16 4.7→26 s and ta14 0.13→1.7 s while
+    // pl21 — which composes ta14 — improved 5×; a single rep in a
+    // 24-query sweep attributes environment stalls and cache evictions to
+    // whichever query they land on). Disable with SPARK_GRAFT_BENCH_LLM=0.
     // dd3 (MinHash-LSH) is the timed similarity join — the scale path.
     // The exactness baselines are deliberately NOT here: dd7's global
     // PPJoin admits huge candidate sets on the shared-token word-salad
@@ -421,10 +353,6 @@ object Bench {
     // agreement matrix composed over the bucketed scale-path signals
     // (exact/prefix md5 equi-joins + dd3's MinHash-LSH + dd8's SimHash
     // buckets) — the 100 TB form, every input shuffle-keyed, never n².
-    // Each rep also records its stop-the-world GC delta (`llm_gc_ms` in
-    // the artifact): a rep-2-style stall cluster (r10 saw dd16 39.1 s in
-    // one rep) is then attributable from the JSON alone — fat gc_ms on
-    // the blown rep says heap churn, flat gc_ms says external stall.
     // --- ss20 train/serve split (round 18) -------------------------------
     // The old ss20_ivfpq_topk llm row bundled PQ codebook TRAINING
     // (k-means — once-per-corpus at 100 TB) with query SERVING, so the
@@ -471,20 +399,15 @@ object Bench {
     // One timed end-to-end training run: coarse collect + residual
     // materialization + Lloyd rounds + encoded-frame materialization,
     // pinned into a throwaway scope released AFTER the timed window.
-    // MUST run only after ss20Scope is released: Spark's cache manager
-    // matches plan-identical frames, so a still-cached serve model
-    // would turn this run into a cache read (not a training run) and
-    // this scope.release() would unpersist the serve model's frames
-    // (r18 review finding).
     def ss20TrainTimed(): (Double, Long) = {
-      // Machine-check of the must-run-after-release ordering (round-19
-      // advice — it previously lived only in comments): a still-pinned
-      // serve model would turn this "training" run into a
-      // plan-identical cache READ, and this scope's release would then
-      // unpersist the serve model out from under any later consumer.
-      // Both halves checked: the scope queue is drained AND the model's
-      // encoded frame has actually left the cache manager (release()
-      // removes entries synchronously even with blocking=false).
+      // MUST run only after ss20Scope is released: Spark's cache manager
+      // matches plan-identical frames, so a still-pinned serve model
+      // would turn this "training" run into a cache READ, and this
+      // scope's release would then unpersist the serve model out from
+      // under any later consumer (r18 review finding). Both halves
+      // checked: the scope queue is drained AND the model's encoded frame
+      // has actually left the cache manager (release() removes entries
+      // synchronously even with blocking=false).
       require(ss20Scope.isEmpty && ss20Model.forall(
           _.encoded.storageLevel == org.apache.spark.storage.StorageLevel.NONE),
         "ss20TrainTimed must run only after ss20Scope.release(): a " +
@@ -549,47 +472,17 @@ object Bench {
         // additions-only, llm_total grows by this row's cost at the
         // r20→r21 boundary — compare per-query)
         "ta22_hashed_classifier")
-        // ss20_serve resolves through the shared model; every other row
-        // is its unmodified SparkEntry catalog entry
+        // ss20_serve resolves through the shared model (its warmup also
+        // trains+pins the model it serves against); every other row is
+        // its unmodified SparkEntry catalog entry
         def llmPlan(q: String): DataFrame =
-          if (q == "ss20_serve") ss20ServePlan()
-          else SparkEntry.queries(q)(spark, sfDir)
-        // warmup pass (plan + codegen for every query, so rep 1 of query
-        // 1 doesn't pay a JIT storm its neighbors skip); ss20_serve's
-        // warmup also trains+pins the model it serves against
-        suite.foreach { q =>
-          Force.run(llmPlan(q))
-          graft.ops.Pipeline.releaseCaches()
-        }
-        val acc = collection.mutable.Map(suite.map(_ -> Vector.empty[Double]): _*)
-        val gcAcc = collection.mutable.Map(suite.map(_ -> Vector.empty[Long]): _*)
-        // the shared `timed` discipline, routed through llmPlan; caches
-        // released AFTER the timed window, exactly like timedRun
-        def llmRun(q: String): (Double, Long) = {
-          val r = timedBody(Force.run(llmPlan(q)))
-          graft.ops.Pipeline.releaseCaches()
-          r
-        }
-        (1 to 3).foreach { _ =>
-          suite.foreach { q =>
-            val (sec, gc) = llmRun(q)
-            acc(q) :+= sec
-            gcAcc(q) :+= gc
-          }
-        }
-        val (rows, prov) = retryFlagged("llm",
-          suite.map(q => (q, acc(q): Seq[Double], gcAcc(q): Seq[Long])),
-          llmRun, retryBudget)
-        retryProv ++= prov
-        rows
+          if (q == "ss20_serve") ss20ServePlan() else catalog(q)
+        timedSuite("llm", suite, warmups = 1, reps = 3)(timedRun(llmPlan))
       }
     }
     // The serve model's pins are no longer needed once the llm sweep
     // (including its retries) has run — and they MUST be gone before
-    // the training rows below: a still-cached plan-identical model
-    // would turn the training warmup into a cache read and let its
-    // throwaway scope release unpersist the model (r18 review finding;
-    // Spark's cache manager matches by canonicalized plan).
+    // the training rows below (see ss20TrainTimed).
     ss20Scope.release()
     // Gated training rows: same reps+min+gc+retry discipline as every
     // timed section. Runs AFTER the llm sweep so its throwaway training
@@ -598,286 +491,23 @@ object Bench {
     val ss20TrainRaw: Seq[(String, Seq[Double], Seq[Long])] =
       informational("ss20_train") {
         if (sys.env.get("SPARK_GRAFT_BENCH_LLM").contains("0")) Nil
-        else {
-          ss20TrainTimed() // warmup (training-plan codegen)
-          val reps = (1 to 3).map(_ => ss20TrainTimed())
-          val rows0 = Seq(("ss20_train",
-            reps.map(_._1): Seq[Double], reps.map(_._2): Seq[Long]))
-          val (rows, prov) = retryFlagged("ss20_train", rows0,
-            _ => ss20TrainTimed(), retryBudget)
-          retryProv ++= prov
-          rows
-        }
+        else timedSuite("ss20_train", Seq("ss20_train"), warmups = 1,
+          reps = 3)(_ => ss20TrainTimed())
       }
-    val llmRepsRaw: Seq[(String, Seq[Double])] =
-      llmRepsFull.map { case (q, reps, _) => (q, reps) }
     // Per-query MIN is the reported number (steady-state cost; immune to
     // the one-sided stalls a 24-query sweep accumulates).
-    val llmSuite: Seq[(String, Double)] = llmRepsRaw.map { case (q, reps) => q -> reps.min }
-
-    // (The r9/r10 `tpch_repd` two-query subset is gone: it existed only
-    // because the full tpch22 sweep was single-rep, and the sweep now
-    // carries the same reps+min+gc discipline for every query.)
-
-    // Bucketed-layout experiment on the two fact-to-fact queries, measured
-    // apples-to-apples (the r2 numbers were not: plain read startup-cached
-    // tables while bucketed read freshly written ones, and AQE could
-    // broadcast the small cached side — so the comparison said nothing
-    // about exchanges). Both variants here:
-    //   - read UNCACHED parquet tables freshly written to the warehouse,
-    //     identical except for the bucketing spec;
-    //   - run with autoBroadcastJoinThreshold=-1, because the 100 TB
-    //     question bucketing answers is "fact⋈fact where neither side can
-    //     broadcast" — at fixture SF AQE would otherwise broadcast orders
-    //     and hide the layout entirely;
-    //   - are gated on plan shape: the bucketed variant must execute with
-    //     strictly fewer shuffle exchanges than the shuffled one (the
-    //     fact-join Exchange pair gone), else nothing is reported.
-    // Reported as `bucketed` vs its true baseline `shuffled`; neither is
-    // part of `value`. Disable with SPARK_GRAFT_BENCH_BUCKETED=0.
-    val layout: Option[(Seq[(String, Seq[Double])], Seq[(String, Seq[Double])])] =
-      if (sys.env.get("SPARK_GRAFT_BENCH_BUCKETED").contains("0")) None
-      else try {
-        require(bucketedTablesReady, "bucketed tables unavailable")
-        val cust = Tables.load(spark, sfDir, "customer")
-        val nat = Tables.load(spark, sfDir, "nation")
-        def runs(li: DataFrame, ord: DataFrame): Seq[(String, () => DataFrame)] = Seq(
-          "q3_shipping_priority" ->
-            (() => graft.queries.TpchQueries.q3Body(li, ord, cust)),
-          "q10_returned_items" ->
-            (() => graft.queries.TpchQueries.q10Body(li, ord, cust, nat)))
-        val shuffled = runs(spark.table("bench_li_p"), spark.table("bench_ord_p"))
-        val bucketed = runs(spark.table("bench_li_b"), spark.table("bench_ord_b"))
-        val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try {
-          // Warmup both variants; the warmup run doubles as the plan gate.
-          // The gate executes the inspected Dataset itself (count() would
-          // spawn a separate QueryExecution and leave this one's adaptive
-          // plan un-finalized) and counts real ShuffleExchange nodes in the
-          // FINAL adaptive plan — not substring hits, which also match
-          // Broadcast/ReusedExchange.
-          import org.apache.spark.sql.execution.SparkPlan
-          import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-          import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-          def countShuffles(p: SparkPlan): Int = p match {
-            case a: AdaptiveSparkPlanExec => countShuffles(a.executedPlan)
-            case q: QueryStageExec => countShuffles(q.plan)
-            case s: ShuffleExchangeLike =>
-              1 + s.children.map(countShuffles).sum
-            case other => other.children.map(countShuffles).sum
-          }
-          def exchanges(f: () => DataFrame): Int = {
-            val df = f(); df.collect()
-            countShuffles(df.queryExecution.executedPlan)
-          }
-          val gate = (shuffled zip bucketed).map { case ((q, sf_), (_, bf)) =>
-            (q, exchanges(sf_), exchanges(bf))
-          }
-          val bad = gate.filter { case (_, s, bk) => bk >= s }
-          if (bad.nonEmpty) {
-            System.err.println(
-              s"[bench] bucketed plans not exchange-reduced, not reporting: $bad")
-            None
-          } else {
-            // 3 reps, report the min (plus the raw reps for the
-            // artifact): single runs at these magnitudes are dominated by
-            // GC/JIT noise (driver r2/r3 runs swung 2× between rounds);
-            // min-of-3 is the steady-state cost of each layout.
-            def time(rs: Seq[(String, () => DataFrame)]) = rs.map { case (k, f) =>
-              val reps = (1 to 3).map { _ =>
-                val t0 = System.nanoTime()
-                Force.run(f())
-                (System.nanoTime() - t0) / 1e9
-              }
-              (k, reps)
-            }
-            Some((time(shuffled), time(bucketed)))
-          }
-        } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      } catch {
-        case e: Exception =>
-          System.err.println(s"[bench] bucketed mode failed: ${e.getMessage}")
-          None
-      }
-
-    // End-to-end bucketed sweep: the two fact⋈fact queries through the
-    // UNMODIFIED SparkEntry.queries entry points (not the q3Body/q10Body
-    // harness), with lineitem/orders resolved via Tables.overrides to the
-    // plain vs bucketed saved tables — proving the co-located-join win
-    // survives the real query path, not just the side experiment. Both
-    // legs read fresh uncached fact tables (dims stay cached in both);
-    // broadcast disabled for the same reason as the layout experiment.
-    // Reported as `e2e_plain`/`e2e_bucketed`; min-of-3 per query.
-    val bucketedE2e: Seq[(String, Double)] = informational("bucketed_e2e") {
-      if (sys.env.get("SPARK_GRAFT_BENCH_BUCKETED").contains("0") ||
-          !bucketedTablesReady) Nil
-      else {
-        val qs = Seq("q3_shipping_priority", "q10_returned_items")
-        val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try {
-          def leg(li: String, ord: String, suffix: String): Seq[(String, Double)] = {
-            Tables.overrides("lineitem") = spark.table(li)
-            Tables.overrides("orders") = spark.table(ord)
-            try qs.map { q =>
-              Force.run(SparkEntry.queries(q)(spark, sfDir)) // warmup/codegen
-              val reps = (1 to 3).map { _ =>
-                val t0 = System.nanoTime()
-                Force.run(SparkEntry.queries(q)(spark, sfDir))
-                (System.nanoTime() - t0) / 1e9
-              }
-              s"${q}_$suffix" -> reps.min
-            } finally {
-              Tables.overrides.remove("lineitem"); Tables.overrides.remove("orders")
-            }
-          }
-          leg("bench_li_p", "bench_ord_p", "e2e_plain") ++
-            leg("bench_li_b", "bench_ord_b", "e2e_bucketed")
-        } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      }
-    }
-
-    // Materialized-partsupp experiment: the 5 partsupp-family TPC-H
-    // queries run their derived-view CTE (a full lineitem group-by) once
-    // PER QUERY in the tpch22 sweep — correct for the oracle contract,
-    // but SCALE.md's deployment story is "materialize partsupp ONCE,
-    // reuse". This measures that story: same query bodies, `partsupp`
-    // now a cached materialized temp view (materialization time charged
-    // to `partsupp_build`), vs their CTE forms. Informational; disable
-    // with SPARK_GRAFT_BENCH_PSMAT=0.
-    // Materialize-once is now the DEFAULT Spark path (Tables.registerAll
-    // registers a cached partsupp; the q2/q9/q11/q16/q20 entries run raw
-    // bodies against it). This experiment keeps the comparison honest by
-    // timing the old per-query-CTE form (the oracle text, which carries
-    // the derivation inline) against the default path, plus the one-time
-    // materialization cost it amortizes.
-    val psmat: Seq[(String, Double)] = informational("psmat") {
-      if (sys.env.get("SPARK_GRAFT_BENCH_PSMAT").contains("0")) Nil
-      else {
-        import graft.queries.TpchQueries
-        Tables.registerAll(spark, sfDir)
-        // min-of-2 per query: the r10 full run recorded cte 3.2 s vs
-        // materialized 4.4 s — inverting r9's 7.1 vs 3.0 — purely from
-        // single-rep noise; same discipline as every other section now.
-        def timeAll(run: String => org.apache.spark.sql.DataFrame): Double =
-          TpchQueries.partsuppRaw.keys.toSeq.sorted.map { q =>
-            Force.run(run(q)) // warmup/codegen
-            (1 to 2).map { _ =>
-              val t0 = System.nanoTime()
-              Force.run(run(q))
-              (System.nanoTime() - t0) / 1e9
-            }.min
-          }.sum
-        // CTE leg: the oracle text re-derives partsupp inside every query
-        // (twice for q11's HAVING scalar subquery) — what each execution
-        // paid before materialize-once became the default.
-        val cte = timeAll(q => spark.sql(TpchQueries.oracle(q)))
-        // Cold-build leg: drop the memoized cache first, else the timed
-        // materialization plan-matches the live InMemoryRelation and
-        // measures nothing.
-        Tables.invalidatePartsupp(spark, sfDir)
-        val t0 = System.nanoTime()
-        Tables.partsupp(spark, sfDir).count()
-        val build = (System.nanoTime() - t0) / 1e9
-        Tables.registerAll(spark, sfDir)
-        val mat = timeAll(q => SparkEntry.queries(q)(spark, sfDir))
-        Seq("partsupp_cte_total" -> cte, "partsupp_build" -> build,
-          "partsupp_materialized_total" -> mat)
-      }
-    }
-
-    // Skew-join experiment: synthesize the adversarial 99%-hot-key fact
-    // join (99% of lineitem rows collapse onto one key) and measure three
-    // physical strategies on IDENTICAL inputs, broadcast disabled (the
-    // 100 TB question is fact⋈dim-too-big-to-broadcast under skew):
-    //   naive  — sort-merge join, AQE fully off: one reducer owns the hot
-    //            key, the straggler the other strategies exist to kill;
-    //   aqe    — AQE skew-join ON with thresholds scaled to fixture size
-    //            (production tunes the same knobs relative to partition
-    //            sizes): runtime split of the oversized partition;
-    //   salted — explicit (key, salt-of-32) rewrite via Joins.saltedUniform
-    //            (round-robin salt: the hot key's rows are byte-identical
-    //            in no column, but uniform spreading is the general tool).
-    // Gated on result-count equality across strategies — a strategy that
-    // changes the answer reports nothing. Informational; min-of-2 per
-    // strategy. Disable with SPARK_GRAFT_BENCH_SKEW=0.
-    //
-    // Measured finding (sf0.1, 99% hot key ≈ 594k rows ≈ 30 MB): naive
-    // 0.46 s, aqe 0.42 s, salted 0.49 s — the fixture sits BELOW the
-    // skew crossover: one task absorbs the hot partition well inside its
-    // budget, so AQE's split is near-free and salting's replicated-dim
-    // exchange is pure overhead. That ordering is itself the lesson the
-    // experiment exists to teach: salt only when the hot key EXCEEDS a
-    // task's budget (at 100 TB a single hot key can be hundreds of GB —
-    // 1000× past the crossover), and prefer AQE's runtime split until
-    // then. SCALE.md §skew carries the full decision rule.
-    val skew: Seq[(String, Double)] = informational("skew") {
-      if (sys.env.get("SPARK_GRAFT_BENCH_SKEW").contains("0")) Nil
-      else {
-        import org.apache.spark.sql.functions._
-        // 99% of fact rows collapse onto key 1; the dim stays SMALL
-        // (~1% of order keys + the hot key) so the replicated-dim cost
-        // of salting is the operator's own overhead, not an artifact of
-        // replicating a fact-sized table.
-        def key(c: String) =
-          when(col(c) % 100 < 99, lit(1L)).otherwise(col(c))
-        val li = Tables.load(spark, sfDir, "lineitem")
-          .select(key("l_orderkey").as("skew_key"), col("l_extendedprice"))
-        val dim = Tables.load(spark, sfDir, "orders")
-          .select(key("o_orderkey").as("skew_key")).distinct()
-          .withColumn("dim_payload", col("skew_key") * 2L)
-        val confKeys = Seq(
-          "spark.sql.adaptive.enabled",
-          "spark.sql.autoBroadcastJoinThreshold",
-          "spark.sql.adaptive.skewJoin.enabled",
-          "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-          "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-          "spark.sql.adaptive.skewJoin.skewedPartitionFactor")
-        val saved = confKeys.map(k => k -> spark.conf.getOption(k))
-        def leg(confs: Map[String, String])(result: => Long): (Long, Double) =
-          try {
-            confs.foreach { case (k, v) => spark.conf.set(k, v) }
-            result // warmup, and the count the equality gate checks
-            val reps = (1 to 2).map { _ =>
-              val t0 = System.nanoTime()
-              val n = result
-              (n, (System.nanoTime() - t0) / 1e9)
-            }
-            (reps.head._1, reps.map(_._2).min)
-          } finally saved.foreach {
-            case (k, Some(v)) => spark.conf.set(k, v)
-            case (k, None)    => spark.conf.unset(k)
-          }
-        val off = Map(
-          "spark.sql.adaptive.enabled" -> "false",
-          "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-        val (nNaive, tNaive) = leg(off)(Force.run(li.join(dim, "skew_key")))
-        val (nAqe, tAqe) = leg(Map(
-          "spark.sql.adaptive.enabled" -> "true",
-          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-          "spark.sql.adaptive.skewJoin.enabled" -> "true",
-          "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1m",
-          "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1m",
-          "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2"))(
-          Force.run(li.join(dim, "skew_key")))
-        val (nSalt, tSalt) = leg(off)(
-          Force.run(graft.ops.Joins.saltedUniform(li, dim, "skew_key",
-            "skew_key", salt = 16)))
-        if (nNaive != nAqe || nNaive != nSalt) {
-          System.err.println(
-            s"[bench] skew legs disagree on rows ($nNaive/$nAqe/$nSalt), not reporting")
-          Nil
-        } else Seq("skew_naive" -> tNaive, "skew_aqe" -> tAqe,
-          "skew_salted" -> tSalt)
-      }
-    }
+    val llmSuite: Seq[(String, Double)] =
+      llmRepsFull.map { case (q, reps, _) => q -> reps.min }
 
     def jsonMap(kvs: Seq[(String, Double)]): String =
       kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     def jsonRepMap(kvs: Seq[(String, Seq[Double])]): String =
       kvs.map { case (k, vs) =>
         "\"" + k + "\":" + vs.map(v => f"$v%.4f").mkString("[", ",", "]")
+      }.mkString("{", ",", "}")
+    def jsonGcMap(kvs: Seq[(String, Seq[Long])]): String =
+      kvs.map { case (k, vs) =>
+        "\"" + k + "\":" + vs.mkString("[", ",", "]")
       }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val repsField = jsonRepMap(timed.map { case (q, reps, _) => (q, reps) })
@@ -886,10 +516,6 @@ object Bench {
     // stall sentinel below.
     val gcField = jsonMap(timed.map { case (q, _, gcMs) => (q, gcMs.sum.toDouble) })
     val minField = jsonMap(mins)
-    def jsonGcMap(kvs: Seq[(String, Seq[Long])]): String =
-      kvs.map { case (k, vs) =>
-        "\"" + k + "\":" + vs.mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
     val tpch22Field =
       if (tpch22.isEmpty) ""
       else s""","tpch22_total":${tpch22.map(_._2).sum},"tpch22":${jsonMap(tpch22)}""" +
@@ -898,7 +524,7 @@ object Bench {
     val llmField =
       if (llmSuite.isEmpty) ""
       else s""","llm_total":${llmSuite.map(_._2).sum},"llm":${jsonMap(llmSuite)}""" +
-        s""","llm_reps":${jsonRepMap(llmRepsRaw)}""" +
+        s""","llm_reps":${jsonRepMap(llmRepsFull.map { case (q, r, _) => (q, r) })}""" +
         s""","llm_gc_ms":${jsonGcMap(llmRepsFull.map { case (q, _, g) => (q, g) })}"""
     val ss20TrainField =
       if (ss20TrainRaw.isEmpty) ""
@@ -908,26 +534,6 @@ object Bench {
           s""","ss20_train_reps":${reps.map(r => f"$r%.4f").mkString("[", ",", "]")}""" +
           s""","ss20_train_gc_ms":${gcs.mkString("[", ",", "]")}"""
       }
-    val skewField =
-      if (skew.isEmpty) "" else s""","skew":${jsonMap(skew)}"""
-    val psmatField =
-      if (psmat.isEmpty) "" else s""","psmat":${jsonMap(psmat)}"""
-    val layoutField = layout.map { case (sh, bk) =>
-      s""","shuffled":${jsonMap(sh.map { case (k, r) => (k, r.min) })}""" +
-      s""","bucketed":${jsonMap(bk.map { case (k, r) => (k, r.min) })}""" +
-      s""","shuffled_reps":${jsonRepMap(sh)},"bucketed_reps":${jsonRepMap(bk)}"""
-    }.getOrElse("")
-    // bucketed_write_sec sits next to the e2e numbers so the artifact
-    // itself carries the amortization arithmetic: the bucketed legs are
-    // only wins once the one-time layout cost divides over enough reads
-    // (r10 verdict flagged the raw juxtaposition as misleading).
-    val e2eField =
-      if (bucketedE2e.isEmpty) ""
-      else s""","bucketed_e2e":${jsonMap(bucketedE2e)}""" +
-        (if (bucketedWriteSec >= 0)
-           s""","bucketed_write_sec":$bucketedWriteSec""" else "")
-    val layoutTag =
-      if (tpch22Bucketed) s""","tpch22_layout":"bucketed"""" else ""
     // Stall sentinel over every rep'd section (thresholds + rationale on
     // the stallFlags method, which BenchSentinelSpec pins). Flags are
     // computed on the POST-retry reps — a capture that converged via
@@ -959,7 +565,7 @@ object Bench {
     val slim =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":${jsonMap(results)},"sf":$sfField}"""
     val full =
-      s"""{"metric":"total","value":$total,"value_min":$totalMin,"unit":"sec","queries":${jsonMap(results)},"queries_min":$minField,"reps":$repsField,"gc_ms":$gcField$tpch22Field$layoutTag$llmField$ss20TrainField$psmatField$skewField$layoutField$e2eField$stallField,"sf":$sfField,"sf_dir":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"value_min":$totalMin,"unit":"sec","queries":${jsonMap(results)},"queries_min":$minField,"reps":$repsField,"gc_ms":$gcField$tpch22Field$llmField$ss20TrainField$stallField,"sf":$sfField,"sf_dir":"$sfDir"}"""
     println(slim)
     java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LAST.json"), full + "\n")
     spark.stop()

@@ -4,94 +4,31 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.sources.Tables
 
 /** Optimization probe harness (rounds 20–21): same-session A/B of
-  * runtime-conf candidates and code-shape rewrites over the catalog
-  * queries they could move, under the Bench timing discipline (warmup,
-  * interleaved order-alternated reps, min reported, GC delta per rep).
-  * Same-session interleaving is the house method for A/B decisions —
-  * cross-capture ratios are confounded by machine-hour drift (SCALE.md
-  * drift watch).
-  *
-  * Conf case (round 20, guide §3.1, SETTLED — kept re-runnable): AQE
-  * SortMergeJoin → ShuffledHashJoin conversion, proven a no-op (final
-  * adaptive plans byte-identical); the conf A/B now only runs when
-  * SPARK_GRAFT_OPTPROBE_QUERIES is set.
+  * code-shape rewrites over the catalog queries they could move, under
+  * the Bench timing discipline (warmup, interleaved order-alternated
+  * reps, min reported, GC delta per rep). Same-session interleaving is
+  * the house method for A/B decisions — cross-capture ratios are
+  * confounded by machine-hour drift (SCALE.md drift watch). (The round-20
+  * runtime-conf A/B — AQE SortMergeJoin → ShuffledHashJoin conversion —
+  * was settled as a no-op, final adaptive plans byte-identical, and
+  * retired; its numbers are in OPTPROBE_r20.json.)
   *
   * Rewrite cases select via SPARK_GRAFT_OPTPROBE_CASES (comma list of
   * labels, default = the round-21 set; the round-20 cases remain
   * defined and selectable so their numbers stay reproducible).
   *
   * Run: `sbt "runMain graft.OptProbe <sfDir>"`. Output: one JSON line
-  * per case / (query, mode) with min/reps, written to
+  * per case with min/reps, written to
   * SPARK_GRAFT_OPTPROBE_OUT (default /tmp/optprobe.json) and echoed to
   * stdout.
   */
 object OptProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors(), 32).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-optprobe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", (1L << 20).toString)
-      .config("spark.sql.files.openCostInBytes", (64L << 10).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-optprobe-wh-").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session("graft-optprobe")
     Tables.tpch.foreach { t => Tables.load(spark, sfDir, t).cache().count() }
-
-    // Conf-mode A/B queries: default EMPTY since round 21 — the SMJ→SHJ
-    // question was settled in r20 (byte-identical final plans); set
-    // SPARK_GRAFT_OPTPROBE_QUERIES to re-run it.
-    val queries = sys.env.get("SPARK_GRAFT_OPTPROBE_QUERIES")
-      .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty)
-    // modes: conf-key settings applied around each run (runtime AQE confs)
-    val modes: Seq[(String, Map[String, String])] = Seq(
-      "smj" -> Map(
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "0"),
-      "shj" -> Map(
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "67108864"))
-
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
-    }
-    def run(q: String, confs: Map[String, String]): (Double, Long) = {
-      val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toSeq
-      try {
-        confs.foreach { case (k, v) => spark.conf.set(k, v) }
-        val gc0 = gcMillis(); val t0 = System.nanoTime()
-        Force.run(SparkEntry.queries(q)(spark, sfDir))
-        ((System.nanoTime() - t0) / 1e9, gcMillis() - gc0)
-      } finally {
-        // release INSIDE the finally (round-20 advice): a throwing rep
-        // must not leak pinned caches into subsequent reps and skew them
-        graft.ops.Pipeline.releaseCaches()
-        saved.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None)    => spark.conf.unset(k)
-        }
-      }
-    }
-    // warmup both modes (codegen per distinct final plan)
-    for (q <- queries; (_, confs) <- modes) run(q, confs)
-    val acc = collection.mutable.Map[(String, String), Vector[(Double, Long)]]()
-      .withDefaultValue(Vector.empty)
     val reps = sys.env.get("SPARK_GRAFT_OPTPROBE_REPS").map(_.toInt).getOrElse(3)
-    // Mode order ALTERNATES per rep (round-20 lesson: with a fixed
-    // order, decaying host load reads as a systematic win for whichever
-    // mode runs second — the falsified shj "win" of probe run 1).
-    (1 to reps).foreach { r =>
-      val ms = if (r % 2 == 0) modes.reverse else modes
-      for (q <- queries; (mode, confs) <- ms)
-        acc((q, mode)) :+= run(q, confs)
-    }
+
     // Rewrite probes: code-shape A/Bs (label -> the two plan builders),
     // timed under the same discipline. dd26: the corpus-wide gram
     // occurrence count as a window over hashpartitioning(gram) + string
@@ -327,33 +264,26 @@ object OptProbe {
       sel.map(l => l -> rewriteCases.toMap.apply(l))
     }
     def runCase(f: () => DataFrame): (Double, Long) = {
-      val gc0 = gcMillis(); val t0 = System.nanoTime()
+      val gc0 = Bench.gcMillis(); val t0 = System.nanoTime()
       try {
         Force.run(f())
-        ((System.nanoTime() - t0) / 1e9, gcMillis() - gc0)
+        ((System.nanoTime() - t0) / 1e9, Bench.gcMillis() - gc0)
       } finally graft.ops.Pipeline.releaseCaches() // r20 advice: also on throw
     }
     val caseAcc = collection.mutable.Map[String, Vector[(Double, Long)]]()
       .withDefaultValue(Vector.empty)
-    if (!sys.env.get("SPARK_GRAFT_OPTPROBE_REWRITES").contains("0")) {
-      selectedCases.foreach { case (_, f) => runCase(f) } // warmup
-      (1 to reps).foreach { r =>
-        val cs = if (r % 2 == 0) selectedCases.reverse else selectedCases
-        cs.foreach { case (l, f) => caseAcc(l) :+= runCase(f) }
-      }
+    selectedCases.foreach { case (_, f) => runCase(f) } // warmup
+    // Case order ALTERNATES per rep (round-20 lesson: with a fixed
+    // order, decaying host load reads as a systematic win for whichever
+    // case runs second — the falsified shj "win" of probe run 1).
+    (1 to reps).foreach { r =>
+      val cs = if (r % 2 == 0) selectedCases.reverse else selectedCases
+      cs.foreach { case (l, f) => caseAcc(l) :+= runCase(f) }
     }
 
     val sb = new StringBuilder
     for ((l, _) <- selectedCases; rs = caseAcc(l) if rs.nonEmpty) {
       val line = s"""{"case":"$l","min":${rs.map(_._1).min},""" +
-        s""""reps":${rs.map(r => f"${r._1}%.4f").mkString("[", ",", "]")},""" +
-        s""""gc_ms":${rs.map(_._2).mkString("[", ",", "]")}}"""
-      println("[optprobe] " + line)
-      sb.append(line).append('\n')
-    }
-    for (q <- queries; (mode, _) <- modes) {
-      val rs = acc((q, mode))
-      val line = s"""{"query":"$q","mode":"$mode","min":${rs.map(_._1).min},""" +
         s""""reps":${rs.map(r => f"${r._1}%.4f").mkString("[", ",", "]")},""" +
         s""""gc_ms":${rs.map(_._2).mkString("[", ",", "]")}}"""
       println("[optprobe] " + line)

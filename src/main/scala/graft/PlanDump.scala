@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.sources.Tables
 
 /** Plan-capture harness for the optimization rounds: writes
@@ -11,28 +10,14 @@ import graft.sources.Tables
   * Run: `sbt "runMain graft.PlanDump <sfDir> <outDir> [query ...]"`.
   * With no explicit query list, dumps the three timed bench suites
   * (headline, tpch22, llm) — the surfaces the optimization rounds audit.
-  * Session config mirrors Bench exactly (same master/shuffle/split
-  * settings), so the dumped plans are the plans the bench times.
+  * The session is Bench's own ([[Bench.session]]), so the dumped plans
+  * are the plans the bench times.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "plans/r20"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors(), 32).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", (1L << 20).toString)
-      .config("spark.sql.files.openCostInBytes", (64L << 10).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-plandump-wh-").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session("graft-plandump")
     Tables.tpch.foreach { t => Tables.load(spark, sfDir, t).cache().count() }
 
     val llmSuite = Seq(

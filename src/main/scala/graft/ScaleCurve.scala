@@ -86,21 +86,7 @@ object ScaleCurve {
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "3").toInt
     val regen = sys.env.get("SPARK_GRAFT_SCALE_REGEN").contains("1")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors(), 32).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-curve")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", (1L << 20).toString)
-      .config("spark.sql.files.openCostInBytes", (64L << 10).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-scale-wh-").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session("graft-scale-curve")
 
     // ---- synthetic scale points -------------------------------------
     val dirs: Seq[(Int, String)] =
@@ -115,12 +101,6 @@ object ScaleCurve {
         } else System.err.println(s"[scale] reusing $out")
         f -> out
       }
-
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
-    }
 
     // ---- timed passes ------------------------------------------------
     // (factor, query) -> (reps, gcPerRep); Bench discipline per scale
@@ -157,11 +137,11 @@ object ScaleCurve {
       val gcAcc = collection.mutable.Map(suite.map(_ -> Vector.empty[Long]): _*)
       (1 to reps).foreach { _ =>
         suite.foreach { q =>
-          val gc0 = gcMillis()
+          val gc0 = Bench.gcMillis()
           val t0 = System.nanoTime()
           Force.run(SparkEntry.queries(q)(spark, dir))
           acc(q) :+= (System.nanoTime() - t0) / 1e9
-          gcAcc(q) :+= gcMillis() - gc0
+          gcAcc(q) :+= Bench.gcMillis() - gc0
           graft.ops.Pipeline.releaseCaches()
         }
       }

@@ -46,14 +46,6 @@ object TpchQueries extends QueryPack {
   private def withPartsupp(q: String): String =
     s"WITH partsupp AS (${Tables.partsuppViewSql})\n$q"
 
-  /** The partsupp-family query bodies WITHOUT the derived-view CTE —
-    * the Spark-side form (resolved against the cached `partsupp` view);
-    * Bench's psmat experiment also times them against the CTE forms. */
-  lazy val partsuppRaw: Map[String, String] = Map(
-    "q2_min_cost_supplier" -> q2Raw, "q9_product_profit" -> q9Raw,
-    "q11_important_stock" -> q11Raw, "q16_supplier_count" -> q16Raw,
-    "q20_part_promotion" -> q20Raw)
-
   /** Q15's literal CTE + scalar-max text — the ORACLE form and the
     * RewriteAb literal side (quantized revenue, the q1 convention). */
   val q15Sql: String =

@@ -17,18 +17,10 @@ object Tables {
     Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
   val all: Seq[String] = tpch ++ Seq("events", "documents", "embeddings")
 
-  /** Opt-in per-table layout overrides (Bench's bucketed end-to-end path):
-    * while a name is present, [[load]] returns the override instead of the
-    * parquet scan, so the SAME unmodified query entry points run over an
-    * alternative physical layout (e.g. bucketed saved tables). Bench sets
-    * and clears these around its timed legs; empty in every other context,
-    * so correctness runs never see it. */
-  val overrides = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   /** Parquet scan of one fixture table. Column pruning + predicate pushdown
     * reach the scan automatically because this stays a plain relation. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    overrides.getOrElse(name, spark.read.parquet(s"$dir/$name.parquet"))
+    spark.read.parquet(s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")
@@ -93,67 +85,88 @@ object Tables {
          CAST(min(l_extendedprice) AS DOUBLE) AS ps_supplycost
        FROM lineitem GROUP BY l_partkey, l_suppkey"""
 
-  // Materialize-once memo for the derived partsupp, keyed per (session,
-  // fixture dir). Plain `CREATE TEMP VIEW` inlines the CTE body at every
-  // reference — q11's HAVING scalar subquery then recomputes the full
-  // lineitem groupBy TWICE per execution (measured: 36% of the tpch22
-  // sweep). Caching the derivation is the single-node analog of the
-  // 100 TB deployment story (materialize bucketed on ps_partkey once,
-  // reuse across the query mix); the decimal sum/min derivation is
-  // order-insensitive, so cached and inline results are bit-identical
-  // and the DuckDB oracle keeps running the CTE text.
-  private val psCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  // One registration per session: the fixture dir its temp views point
+  // at, a version stamp per table, and the memoized partsupp frame. Views
+  // are global per session, so the memo is "current dir per session";
+  // asking for a different dir re-registers. The un-memoized registration
+  // re-read ten parquet footers per call (measured ~0.5 s), and EVERY
+  // SQL-path catalog query calls registerAll — a flat tax on the whole
+  // sweep.
+  //
+  // partsupp is cached rather than a plain `CREATE TEMP VIEW`, which
+  // inlines the CTE body at every reference — q11's HAVING scalar
+  // subquery then recomputes the full lineitem groupBy TWICE per
+  // execution (measured: 36% of the tpch22 sweep). Caching the derivation
+  // is the single-node analog of the 100 TB deployment story
+  // (materialize bucketed on ps_partkey once, reuse across the query
+  // mix); the decimal sum/min derivation is order-insensitive, so cached
+  // and inline results are bit-identical and the DuckDB oracle keeps
+  // running the CTE text.
+  private final case class Registration(
+      dir: String, stamps: Map[String, Long], partsupp: Option[DataFrame])
+  private val registrations =
+    scala.collection.mutable.Map.empty[SparkSession, Registration] // guarded by `register`
 
-  /** The derived partsupp as a DataFrame, cached on first use (lazy — no
-    * cost until a partsupp-family query materializes it). Re-registers
-    * `lineitem` from `dir` so the SQL derivation binds to the right
-    * fixture even when called before [[registerAll]]. */
-  def partsupp(spark: SparkSession, dir: String): DataFrame =
-    psCache.getOrElseUpdate((spark, dir), {
-      lineitem(spark, dir).createOrReplaceTempView("lineitem")
-      spark.sql(partsuppViewSql).cache()
-    })
-
-  /** Drop the memoized partsupp cache for (session, dir) — used by Bench's
-    * psmat experiment to time a cold materialization honestly (a fresh
-    * `spark.sql(partsuppViewSql).cache()` would otherwise plan-match the
-    * live InMemoryRelation and measure nothing). */
-  def invalidatePartsupp(spark: SparkSession, dir: String): Unit = {
-    psCache.remove((spark, dir)).foreach(_.unpersist(blocking = true))
-    // the `partsupp` temp view still references the dropped frame — force
-    // the next registerAll to re-register against the fresh cache
-    registeredDir.remove(spark)
+  /** One version stamp per fixture table present under `dir`: the table
+    * path's modification time, all read with ONE directory listing. A
+    * parquet write sets its directory's mtime when it commits, and a swap
+    * (write `t.next`, move the old path aside, move the new one in)
+    * changes the stamp, so a live session sees a replaced table instead
+    * of reading the files the old view listed. */
+  private def versionStamps(spark: SparkSession, dir: String): Map[String, Long] = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val byName = all.map(n => s"$n.parquet" -> n).toMap
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(root)
+      .flatMap(st => byName.get(st.getPath.getName).map(_ -> st.getModificationTime))
+      .toMap
   }
 
-  // Which fixture dir each session's temp views currently point at. The
-  // un-memoized registration re-read ten parquet footers per call
-  // (measured ~0.5 s), and EVERY SQL-path catalog query calls
-  // registerAll — a flat tax on the whole sweep. Views are global per
-  // session, so the memo is "current dir per session", not a set: asking
-  // for a different dir re-registers.
-  private val registeredDir =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, String]
+  /** Bring the session's views in line with `dir`: a no-op while the dir
+    * and every stamp are unchanged; otherwise re-register every table
+    * present under `dir` (views of absent tables are dropped, so none can
+    * keep serving another dir's data) and keep the partsupp frame only if
+    * `lineitem`'s stamp held — a stale one is unpersisted and rebuilt. */
+  private def register(spark: SparkSession, dir: String): Registration =
+    synchronized {
+      val stamps = versionStamps(spark, dir)
+      val prev = registrations.get(spark)
+      prev.filter(r => r.dir == dir && r.stamps == stamps).getOrElse {
+        all.foreach { n =>
+          if (stamps.contains(n)) accessors(n)(spark, dir).createOrReplaceTempView(n)
+          else spark.catalog.dropTempView(n)
+        }
+        val kept = prev.filter(r => r.dir == dir &&
+          r.stamps.get("lineitem") == stamps.get("lineitem")).flatMap(_.partsupp)
+        if (kept.isEmpty) prev.flatMap(_.partsupp).foreach(_.unpersist(blocking = true))
+        val ps = kept.orElse(
+          if (stamps.contains("lineitem")) Some(spark.sql(partsuppViewSql).cache())
+          else None)
+        ps match {
+          case Some(df) => df.createOrReplaceTempView("partsupp")
+          case None     => spark.catalog.dropTempView("partsupp")
+        }
+        val r = Registration(dir, stamps, ps)
+        registrations(spark) = r
+        r
+      }
+    }
+
+  /** The derived partsupp as a DataFrame, cached on first use (lazy — no
+    * cost until a partsupp-family query materializes it). Registers the
+    * session's views from `dir` first, so the SQL derivation binds to the
+    * right fixture even when called before [[registerAll]]. */
+  def partsupp(spark: SparkSession, dir: String): DataFrame =
+    register(spark, dir).partsupp.getOrElse(
+      throw new IllegalArgumentException(s"no lineitem.parquet under $dir"))
 
   /** Register every fixture table as a temp view so `spark.sql` text queries
     * resolve — the Spark analog of the reference's global `hm` catalog map
-    * (Microbase.scala:29). Memoized per (session → dir); events is
-    * registered normalized; the derived partsupp stand-in registers as a
-    * CACHED `partsupp` view (see [[partsupp]]) so the q2/q9/q11/q16/q20
-    * family reuses one materialization instead of re-deriving per
-    * reference. While Bench's layout [[overrides]] are active the memo is
-    * bypassed (views must re-bind to the override frames) and dropped, so
-    * the next plain call re-registers the real fixtures. */
-  def registerAll(spark: SparkSession, dir: String): Unit = {
-    def doRegister(): Unit = {
-      all.foreach(n => accessors(n)(spark, dir).createOrReplaceTempView(n))
-      partsupp(spark, dir).createOrReplaceTempView("partsupp")
-    }
-    if (overrides.nonEmpty) { registeredDir.remove(spark); doRegister() }
-    else if (!registeredDir.get(spark).contains(dir)) {
-      doRegister(); registeredDir(spark) = dir
-    }
-  }
+    * (Microbase.scala:29). Memoized per session and checked against the
+    * tables' version stamps on every call; events is registered
+    * normalized; the derived partsupp stand-in registers as a CACHED
+    * `partsupp` view (see [[partsupp]]) so the q2/q9/q11/q16/q20 family
+    * reuses one materialization instead of re-deriving per reference. */
+  def registerAll(spark: SparkSession, dir: String): Unit = register(spark, dir)
 
   /** Reference-style CSV DDL (Microbase.scala:960-983): delimiter-split
     * text with a user-declared schema. `eager=true` mirrors the reference's

@@ -1,12 +1,15 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
 /** Source/DDL coverage (SURVEY.md §2a): the reference's pipe-delimited CSV
   * loader with declared schema (S1/S2), eager materialization, and the
-  * five reference primitive types — rebuilt over Spark's CSV source. */
+  * five reference primitive types — rebuilt over Spark's CSV source —
+  * plus `Tables.registerAll`'s per-session views over a dir whose
+  * tables are swapped while the session lives. */
 class SourcesSpec extends GraftSuite {
 
   test("pipe-delimited CSV round-trips the nation table") {
@@ -120,5 +123,79 @@ class SourcesSpec extends GraftSuite {
     val dates = df.orderBy("C").select("A").collect()
       .map(_.getDate(0).toString)
     assert(dates === Array("2020-03-15", "1999-12-31"))
+  }
+
+  // ---- registerAll over a live dir ----------------------------------
+  // Each case runs on its own temp copy of the fixture dir and its own
+  // session, so swapping a table touches no other suite's views.
+
+  private def fixtureCopy(): String = {
+    val src = Paths.get(sf)
+    val dst = Files.createTempDirectory("graft-swap-")
+    scala.util.Using.resource(Files.walk(src)) { paths =>
+      paths.forEach { p =>
+        val t = dst.resolve(src.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+      }
+    }
+    dst.toString
+  }
+
+  /** Replace `table` under `dir` the way an ingest job does: write
+    * `<table>.next`, move the live path aside, atomically move the new
+    * version in, then delete the old one. */
+  private def swap(s: SparkSession, dir: String, table: String)(
+      change: DataFrame => DataFrame): Unit = {
+    val live = Paths.get(dir, s"$table.parquet")
+    val next = Paths.get(dir, s"$table.next")
+    val prev = Paths.get(dir, s"$table.prev")
+    change(Tables.load(s, dir, table)).write.parquet(next.toString)
+    Files.move(live, prev)
+    Files.move(next, live, StandardCopyOption.ATOMIC_MOVE)
+    org.apache.commons.io.FileUtils.forceDelete(prev.toFile)
+  }
+
+  test("registerAll re-registers a table swapped in a live session") {
+    val d = fixtureCopy()
+    val s = spark.newSession()
+    SparkEntry.queries("q4_order_priority")(s, d).collect()
+    val before = Tables.orders(s, d).count()
+    swap(s, d, "orders")(_.filter(col("o_orderkey") % 2 === 0))
+    // the SQL path re-lists orders instead of reading the deleted files
+    SparkEntry.queries("q4_order_priority")(s, d).collect()
+    val viaSql = s.sql("SELECT count(*) FROM orders").head.getLong(0)
+    assert(viaSql === Tables.orders(s, d).count())
+    assert(viaSql < before)
+  }
+
+  test("a lineitem swap rebuilds the cached partsupp from the new data") {
+    val d = fixtureCopy()
+    val s = spark.newSession()
+    def rows(df: DataFrame) =
+      df.orderBy("ps_partkey", "ps_suppkey").collect().toSeq
+    val old = rows(Tables.partsupp(s, d)) // materializes the cache
+    swap(s, d, "lineitem")(_.filter(col("l_linenumber") === 1))
+    Tables.registerAll(s, d)
+    val fresh = Tables.lineitem(s, d)
+      .groupBy(col("l_partkey").as("ps_partkey"), col("l_suppkey").as("ps_suppkey"))
+      .agg(
+        sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("ps_availqty"),
+        min(col("l_extendedprice")).cast("double").as("ps_supplycost"))
+    val view = rows(s.table("partsupp"))
+    assert(view === rows(fresh))
+    assert(view !== old)
+    assert(Tables.partsupp(s, d).storageLevel.useMemory)
+  }
+
+  test("registerAll on an unchanged dir discovers no files") {
+    import org.apache.spark.metrics.source.HiveCatalogMetrics.METRIC_FILES_DISCOVERED
+    val d = fixtureCopy()
+    val s = spark.newSession()
+    val c0 = METRIC_FILES_DISCOVERED.getCount
+    Tables.registerAll(s, d)
+    val c1 = METRIC_FILES_DISCOVERED.getCount
+    Tables.registerAll(s, d)
+    assert(c1 > c0, "the first registration lists the tables")
+    assert(METRIC_FILES_DISCOVERED.getCount - c1 === 0)
   }
 }

@@ -39,7 +39,7 @@ class TpchRewriteSpec extends GraftSuite
     * suites (observed: PlanSpec's q2 plan collapsed to an empty
     * relation when this suite's 10-row lineitem view won the race).
     * `newSession()` shares the SparkContext but isolates the temp-view
-    * catalog, and the (session, dir)-keyed partsupp/view memos key off
+    * catalog, and the per-session partsupp/view registration keys off
     * it too. */
   private lazy val s2 = spark.newSession()
 
@@ -182,22 +182,19 @@ class TpchRewriteSpec extends GraftSuite
     d
   }
 
-  /** Register ONLY the seven TPC-H views from the mini dir (into the
-    * dedicated session's catalog) — NOT Tables.registerAll, which also
-    * loads events/documents/embeddings this fixture deliberately
-    * omits. The q2 oracle text carries its own `WITH partsupp AS
-    * (...)` CTE, so no partsupp view is needed. */
+  /** The oracle text over the mini dir's views (registered into the
+    * dedicated session's catalog; registerAll registers the seven
+    * TPC-H tables the dir holds). The oracle texts carry their own
+    * `WITH partsupp AS (...)` CTE, so the cached partsupp view is not
+    * read. */
   private def literalSql(name: String): DataFrame = {
-    Seq("region", "nation", "supplier", "part", "customer", "orders",
-      "lineitem").foreach { t =>
-      Tables.load(s2, dir, t).createOrReplaceTempView(t)
-    }
+    Tables.registerAll(s2, dir)
     s2.sql(SparkEntry.oracleSql(name))
   }
 
   override def afterAll(): Unit = {
     // Unpersist the mini-dir partsupp cache this suite materialized.
-    Tables.invalidatePartsupp(s2, dir)
+    Tables.partsupp(s2, dir).unpersist(blocking = true)
     super.afterAll()
   }
 
@@ -255,9 +252,7 @@ class TpchRewriteSpec extends GraftSuite
     // the IN (0,1,2) set. Only s1 (p6 windowed 10, availqty 10 > 5)
     // qualifies. (Evaluated through the oracle text with its partsupp
     // CTE — the catalog entry is the same text over the CACHED partsupp
-    // derivation, whose decimal sum/min is bit-identical, but its
-    // registerAll needs the events/documents tables this mini fixture
-    // deliberately omits.)
+    // derivation, whose decimal sum/min is bit-identical.)
     val rows = rowsOf(literalSql("q20_part_promotion"))
     assert(rows.map(r => (r.getAs[Long]("s_suppkey"),
       r.getAs[String]("s_name"))) === Seq((1L, "S#1")))
