@@ -44,25 +44,24 @@ object Bench {
     * of 8.8/8.1/12.9 s with 599–798 ms GC per rep and q21 reps
     * [1.57, 3.25, 5.40] on code commit-identical to a round that
     * measured 2.84 s / [1.2, 1.1, 0.98] — a background-load signature
-    * that was only diagnosable by hand-reading rep arrays. Flag, in the
-    * artifact itself, every rep whose stop-the-world GC exceeds
-    * `gcThresholdMs` (clean runs top out well under 100 ms per rep;
-    * contaminated reps measured 468–798 ms) or whose wall time exceeds
-    * `ratio`× that query's own min (a one-sided environment stall; a
-    * real plan regression moves ALL reps). A run with a non-trivial
+    * that was only diagnosable by hand-reading rep arrays. A rep is
+    * flagged when its stop-the-world GC exceeds `gcThresholdMs` (clean
+    * runs top out well under 100 ms per rep; contaminated reps measured
+    * 468–798 ms) or its wall time exceeds `ratio`× that query's own min
+    * (a one-sided environment stall; a real plan regression moves ALL
+    * reps). Sub-50 ms query mins are exempt from the ratio rule
+    * (scheduler jitter alone can triple them). A run with a non-trivial
     * stall_flag_count is machine-detectably contaminated and must not
-    * become the artifact of record without adjudication. Sub-50 ms
-    * query mins are exempt from the ratio rule (scheduler jitter alone
-    * can triple them). Returns one JSON object string per flagged rep. */
-  /** The sentinel's per-rep decision rule, shared by [[stallFlags]]
-    * (which reports) and [[retryFlagged]] (which re-runs) so the two can
-    * never diverge: fat stop-the-world GC, or wall time beyond `ratio`×
-    * the query's own min — with sub-50 ms mins exempt from the ratio
-    * rule (scheduler jitter alone can triple them). */
+    * become the artifact of record without adjudication.
+    *
+    * This per-rep decision rule is shared by [[stallFlags]] (which
+    * reports) and [[retryFlagged]] (which re-runs) so the two can never
+    * diverge. */
   private[graft] def repFlagged(sec: Double, gcMs: Long, minSec: Double,
       gcThresholdMs: Long, ratio: Double): Boolean =
     (minSec > 0.05 && sec > ratio * minSec) || gcMs > gcThresholdMs
 
+  /** One JSON object string per rep that [[repFlagged]] flags. */
   private[graft] def stallFlags(section: String,
       rows: Seq[(String, Seq[Double], Seq[Long])],
       gcThresholdMs: Long = 150L, ratio: Double = 2.5): Seq[String] =
@@ -164,8 +163,8 @@ object Bench {
     (out, prov.result())
   }
 
-  /** The session every Bench-family main (Bench, OptProbe, ScaleCurve,
-    * PlanDump) runs under, so their timings and plans are the bench's. */
+  /** The session every Bench-family main (Bench, ScaleCurve, PlanDump)
+    * runs under, so their timings and plans are the bench's. */
   def session(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(Runtime.getRuntime.availableProcessors(), 32).toString)
@@ -199,6 +198,67 @@ object Bench {
       .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
   }
 
+  /** The one timing discipline every timed section shares (Bench's
+    * headline, tpch22, llm and ss20_train, and ScaleCurve's points — the
+    * stall sentinel and drift watch compare across sections, so they
+    * must never diverge): gc delta + wall clock around the body. */
+  private[graft] def timedBody(body: => Unit): (Double, Long) = {
+    val gc0 = gcMillis()
+    val t0 = System.nanoTime()
+    body
+    ((System.nanoTime() - t0) / 1e9, gcMillis() - gc0)
+  }
+
+  /** One timed end-to-end execution of `plan(q)` — the same measurement
+    * for every rep and for the stall-retry path, so a retried rep is
+    * measured identically to the rep it may replace. Graft-pinned frames
+    * are released AFTER the timed window (round-18 honesty fix: q15
+    * persists+pins its per-supplier aggregate at construction, and
+    * Spark's cache manager matches plan-identical frames — without the
+    * release, every rep after the warmup read the warmup's cached
+    * aggregate instead of executing the query, so the tpch22 q15 row
+    * timed a cache read; captures from r18 on pay the honest
+    * re-execution, ~0.33 → ~0.7 s at sf0.1). */
+  def timedRun(plan: String => DataFrame)(q: String): (Double, Long) = {
+    val r = timedBody(Force.run(plan(q)))
+    graft.ops.Pipeline.releaseCaches()
+    r
+  }
+
+  /** The one timed loop: `warmups` passes whose timings are discarded
+    * (plan + codegen for every query, so rep 1 of query 1 doesn't pay a
+    * JIT storm its neighbors skip), then `reps` passes INTERLEAVED
+    * round-robin across queries (rep 1 of every query, then rep 2 of
+    * every query, …), not back-to-back per query: a multi-second
+    * environment stall (page-cache writeback, a competing process, a JIT
+    * deopt storm) then lands in at most one rep of each query — where
+    * the median/min discards it — instead of concentrating in one
+    * query's reps (the r6 "q3 regression" and the r3→r4 "q10
+    * regression" were exactly this ambiguity). EVERY rep and its GC
+    * delta go to the artifact, so an outlier is diagnosable from the
+    * JSON alone: a noisy environment shows one blown rep among steady
+    * ones (usually with a fat gc_ms), a real regression shows
+    * consistently slow reps. Stall-flagged reps are then re-run within
+    * `retryBudget` ([[retryFlagged]]; 0 passes the rows through).
+    * `settleGc` forces a full collection and gives concurrent phases a
+    * beat to finish before the timed reps, so they start from a
+    * compacted heap instead of paying the warmups' garbage.
+    *
+    * Returns the (query, reps, gc per rep) rows in `names` order and the
+    * retry provenance (stall_retries entries). */
+  def timedSuite(section: String, names: Seq[String], warmups: Int,
+      reps: Int, retryBudget: Int, settleGc: Boolean = false)(
+      run: String => (Double, Long))
+      : (Seq[(String, Seq[Double], Seq[Long])], Seq[String]) = {
+    (1 to warmups).foreach(_ => names.foreach(run))
+    if (settleGc) { System.gc(); Thread.sleep(1000) }
+    val acc = collection.mutable.Map(names.map(_ -> Vector.empty[(Double, Long)]): _*)
+    (1 to reps).foreach(_ => names.foreach(q => acc(q) :+= run(q)))
+    retryFlagged(section,
+      names.map(q => (q, acc(q).map(_._1): Seq[Double], acc(q).map(_._2): Seq[Long])),
+      run, retryBudget)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = session("graft-bench")
@@ -208,67 +268,19 @@ object Bench {
     // InMemoryRelation via logical-plan cache matching.
     Tables.tpch.foreach { t => Tables.load(spark, sfDir, t).cache().count() }
 
-    // The one timing discipline every section shares (headline, tpch22,
-    // llm, ss20_train — the stall sentinel and drift watch compare
-    // across sections, so they must never diverge): gc delta + wall
-    // clock around a Force.run of the full plan.
-    def timedBody(body: => Unit): (Double, Long) = {
-      val gc0 = gcMillis()
-      val t0 = System.nanoTime()
-      body
-      ((System.nanoTime() - t0) / 1e9, gcMillis() - gc0)
-    }
-    // One timed end-to-end execution of `plan(q)` — the same measurement
-    // for every rep and for the stall-retry path, so a retried rep is
-    // measured identically to the rep it may replace. Graft-pinned
-    // frames are released AFTER the timed window (round-18 honesty fix:
-    // q15 persists+pins its per-supplier aggregate at construction, and
-    // Spark's cache manager matches plan-identical frames — without the
-    // release, every rep after the warmup read the warmup's cached
-    // aggregate instead of executing the query, so the tpch22 q15 row
-    // timed a cache read; captures from r18 on pay the honest
-    // re-execution, ~0.33 → ~0.7 s at sf0.1).
-    def timedRun(plan: String => DataFrame)(q: String): (Double, Long) = {
-      val r = timedBody(Force.run(plan(q)))
-      graft.ops.Pipeline.releaseCaches()
-      r
-    }
     val catalog: String => DataFrame = q => SparkEntry.queries(q)(spark, sfDir)
     // Stall-retry budget (see retryFlagged): per-query bound on re-runs
     // of flagged reps. SPARK_GRAFT_BENCH_RETRIES=0 disables (a pure
     // "record the contamination" capture); default 2.
     val retryBudget =
       sys.env.get("SPARK_GRAFT_BENCH_RETRIES").map(_.toInt).getOrElse(2)
+    // every section's retry provenance lands in one stall_retries list
     val retryProv = Seq.newBuilder[String]
-
-    // Every timed section runs this one loop: `warmups` passes whose
-    // timings are discarded (plan + codegen for every query, so rep 1 of
-    // query 1 doesn't pay a JIT storm its neighbors skip), then `reps` passes INTERLEAVED
-    // round-robin across queries (rep 1 of every query, then rep 2 of
-    // every query, …), not back-to-back per query: a multi-second
-    // environment stall (page-cache writeback, a competing process, a
-    // JIT deopt storm) then lands in at most one rep of each query —
-    // where the median/min discards it — instead of concentrating in one
-    // query's reps (the r6 "q3 regression" and the r3→r4 "q10
-    // regression" were exactly this ambiguity). EVERY rep and its GC
-    // delta go to the artifact, so an outlier is diagnosable from the
-    // JSON alone: a noisy environment shows one blown rep among steady
-    // ones (usually with a fat gc_ms), a real regression shows
-    // consistently slow reps. Stall-flagged reps are then re-run within
-    // the retry budget, and every attempt lands in stall_retries.
-    def timedSuite(section: String, names: Seq[String], warmups: Int,
-        reps: Int, settleGc: Boolean = false)(run: String => (Double, Long))
+    def section(name: String, names: Seq[String], warmups: Int, reps: Int,
+        settleGc: Boolean = false)(run: String => (Double, Long))
         : Seq[(String, Seq[Double], Seq[Long])] = {
-      (1 to warmups).foreach(_ => names.foreach(run))
-      // GC settle before the timed reps: force a full collection and give
-      // concurrent phases a beat to finish, so the timed loop starts from
-      // a compacted heap instead of paying the warmups' garbage.
-      if (settleGc) { System.gc(); Thread.sleep(1000) }
-      val acc = collection.mutable.Map(names.map(_ -> Vector.empty[(Double, Long)]): _*)
-      (1 to reps).foreach(_ => names.foreach(q => acc(q) :+= run(q)))
-      val (rows, prov) = retryFlagged(section,
-        names.map(q => (q, acc(q).map(_._1): Seq[Double], acc(q).map(_._2): Seq[Long])),
-        run, retryBudget)
+      val (rows, prov) = timedSuite(name, names, warmups, reps, retryBudget,
+        settleGc)(run)
       retryProv ++= prov
       rows
     }
@@ -286,7 +298,7 @@ object Bench {
     // execute + materialize), same warmed-cache methodology as the
     // reference's pre-loaded tables.
     val repCount = 5
-    val timed = timedSuite("headline", headline, warmups = 3, reps = repCount,
+    val timed = section("headline", headline, warmups = 3, reps = repCount,
       settleGc = true)(timedRun(catalog))
     val results = timed.map { case (q, reps, _) =>
       q -> reps.sorted.apply(repCount / 2)
@@ -320,7 +332,7 @@ object Bench {
       else {
         val qs = graft.queries.TpchQueries.queries.keys.toSeq
           .sortBy(n => n.drop(1).takeWhile(_.isDigit).toInt)
-        timedSuite("tpch22", qs, warmups = 1, reps = 3)(timedRun(catalog))
+        section("tpch22", qs, warmups = 1, reps = 3)(timedRun(catalog))
       }
     }
     // per-query min = steady-state cost; the total is a sum of mins
@@ -477,7 +489,7 @@ object Bench {
         // its unmodified SparkEntry catalog entry
         def llmPlan(q: String): DataFrame =
           if (q == "ss20_serve") ss20ServePlan() else catalog(q)
-        timedSuite("llm", suite, warmups = 1, reps = 3)(timedRun(llmPlan))
+        section("llm", suite, warmups = 1, reps = 3)(timedRun(llmPlan))
       }
     }
     // The serve model's pins are no longer needed once the llm sweep
@@ -491,7 +503,7 @@ object Bench {
     val ss20TrainRaw: Seq[(String, Seq[Double], Seq[Long])] =
       informational("ss20_train") {
         if (sys.env.get("SPARK_GRAFT_BENCH_LLM").contains("0")) Nil
-        else timedSuite("ss20_train", Seq("ss20_train"), warmups = 1,
+        else section("ss20_train", Seq("ss20_train"), warmups = 1,
           reps = 3)(_ => ss20TrainTimed())
       }
     // Per-query MIN is the reported number (steady-state cost; immune to

@@ -32,7 +32,8 @@ import graft.sources.Tables
   *  - `embeddings` get one dimension nudged per copy (deterministic, no
   *    RNG) so ANN top-k doesn't degenerate into 0-distance ties.
   *
-  * Methodology matches Bench: cached TPC-H tables, a warmup pass per scale
+  * Methodology is Bench's, through its one timed loop
+  * ([[Bench.timedSuite]]): cached TPC-H tables, a warmup pass per scale
   * point, interleaved reps, per-query MIN reported, GC delta per rep in
   * the artifact. Output: one JSON object in `SCALECURVE.json` with
   * per-query seconds at each factor and the fitted log-log exponent
@@ -103,8 +104,9 @@ object ScaleCurve {
       }
 
     // ---- timed passes ------------------------------------------------
-    // (factor, query) -> (reps, gcPerRep); Bench discipline per scale
-    // point: cache tpch tables, warmup pass, interleaved reps, min.
+    // (factor, query) -> (reps, gcPerRep); Bench's timed loop per scale
+    // point: cache tpch tables, one warmup pass, GC settle, interleaved
+    // reps, no stall retries (the curve reports every rep and its min).
     val suite = sys.env.get("SPARK_GRAFT_SCALE_QUERIES") match {
       case Some(qs) =>
         // (the SPARK_GRAFT_SCALE_OUT requirement for subset runs is
@@ -128,24 +130,10 @@ object ScaleCurve {
       // Tables.events normalizes them — a bare Tables.load here threw on
       // such fixtures even with replicas already generated).
       tableRows((f, "events")) = Tables.events(spark, dir).count()
-      suite.foreach { q =>
-        Force.run(SparkEntry.queries(q)(spark, dir)) // warmup: plan + codegen
-        graft.ops.Pipeline.releaseCaches()
-      }
-      System.gc(); Thread.sleep(500)
-      val acc = collection.mutable.Map(suite.map(_ -> Vector.empty[Double]): _*)
-      val gcAcc = collection.mutable.Map(suite.map(_ -> Vector.empty[Long]): _*)
-      (1 to reps).foreach { _ =>
-        suite.foreach { q =>
-          val gc0 = Bench.gcMillis()
-          val t0 = System.nanoTime()
-          Force.run(SparkEntry.queries(q)(spark, dir))
-          acc(q) :+= (System.nanoTime() - t0) / 1e9
-          gcAcc(q) :+= Bench.gcMillis() - gc0
-          graft.ops.Pipeline.releaseCaches()
-        }
-      }
-      suite.foreach(q => rows((f, q)) = (acc(q), gcAcc(q)))
+      val (timed, _) = Bench.timedSuite(s"x$f", suite, warmups = 1, reps = reps,
+        retryBudget = 0, settleGc = true)(
+        Bench.timedRun(q => SparkEntry.queries(q)(spark, dir)))
+      timed.foreach { case (q, secs, gcs) => rows((f, q)) = (secs, gcs) }
       spark.catalog.clearCache()
     }
 

@@ -543,7 +543,7 @@ object Dedup {
         greatest(col("id_l"), col("id_r")).as("id_b"), col("jaccard"))
   }
 
-  /** Shared verification leg for the sorted-neighborhood variants: join
+  /** Verification leg of [[sortedNeighborhoodPairs]]: join
     * the candidate ID pairs back to per-doc sorted char-n-gram sets and
     * keep pairs at/above the Jaccard threshold. Grams shuffle exactly
     * once per side, by id.
@@ -601,128 +601,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(least(col("id_l"), col("id_r")).as("id_a"),
         greatest(col("id_l"), col("id_r")).as("id_b"), col("jaccard"))
-  }
-
-  /** Single-sort sorted-neighborhood variant (round-15 probe of the
-    * suite's steepest curve, α 0.91): ONE `repartitionByRange` +
-    * `sortWithinPartitions` on (key, id) replaces [[Pipeline
-    * .globalPosition]]'s range sort PLUS its `_pid`-keyed window
-    * re-exchange PLUS the position self-equi-join — each physical
-    * partition already holds a contiguous slice of the global sort
-    * order, so a per-partition sliding buffer (`mapPartitions`: the
-    * genuine per-partition-imperative case) emits every within-slice
-    * neighbor pair directly, and the only cross-slice pairs possible
-    * are (tail of p) × (head of p+1) with rank distance < window —
-    * recovered by an equi-join of two (window−1)·P-row boundary strips
-    * on the partition id. Same candidate set, same verification leg,
-    * one wide exchange instead of three.
-    *
-    * Precondition (checked, loud): every range slice holds ≥ window−1
-    * rows — otherwise a neighborhood could span three slices. Holds
-    * whenever n ≫ window·partitions (the operating regime of a
-    * neighborhood method); the check is a bounded per-partition count
-    * (≤ P rows collected, the [[Pipeline]] offsets precedent).
-    * Restricted to LONG ids (the corpus contract) and STRING sort keys
-    * (checked loud — a cast would silently sort non-string keys by
-    * their string form and diverge from the two-phase variant).
-    *
-    * KEEP-NOTE (round 15, measured in ABRW.json via graft.RewriteAb,
-    * sectioned capture): candidate sets are bit-identical to
-    * [[sortedNeighborhoodPairs]] (DedupSpec + the sf0.001/0.01/0.1
-    * equivalence probe), but the end-to-end A/B is a wash — 2.67 vs
-    * 2.81 s (×1), 21.16 vs 23.07 (×10), 63.66 vs 64.13 (×30), same
-    * α ≈ 0.92 — because the steep dd16 curve is the O(n·w)
-    * sorted-merge gram VERIFICATION both variants share, not the
-    * candidate-stage sorts this rewrite eliminates. The two-phase
-    * original stays the catalog entry (pure-DataFrame plan, no
-    * minimum-slice precondition); this variant stays as the measured
-    * library alternative. */
-  def sortedNeighborhoodPairsRanged(
-      docs: DataFrame, id: Column, text: Column, sortKey: Column,
-      window: Int = 5, n: Int = 3, threshold: Double = 0.5,
-      preGate: Boolean = false): DataFrame = {
-    require(window >= 2, "window must be >= 2")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    val keyed = docs.select(id.cast("long").as("sn_id"),
-      sortKey.as("sn_key"))
-    // Loud type precondition, not a silent cast: the slice buffers read
-    // the key as String, and casting a non-string key here would SORT by
-    // its string form ("10" < "2") — a silently different neighborhood
-    // than the two-phase variant's native-order sort, breaking the
-    // bit-identical-candidates contract the keep-note and DedupSpec pin.
-    require(keyed.schema("sn_key").dataType ==
-        org.apache.spark.sql.types.StringType,
-      "sortedNeighborhoodPairsRanged requires a string sort key (a cast " +
-        "would change the sort order vs sortedNeighborhoodPairs, which " +
-        "sorts any key type natively — use that variant instead)")
-    val ranged = keyed
-      .repartitionByRange(nPart, col("sn_key"), col("sn_id"))
-      .sortWithinPartitions(col("sn_key"), col("sn_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // loud precondition, not a silent wrong answer: a slice thinner than
-    // window−1 (or an interior EMPTY slice — the boundary join keys on
-    // pid adjacency) would let a neighborhood span non-adjacent slices.
-    // The pin happens only AFTER the check passes — a refused call must
-    // not leave a materialized cache parked until someone else's
-    // releaseCaches() (it is unpersisted before the throw).
-    val sizes = ranged.groupBy(spark_partition_id().as("_pid"))
-      .count().collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val pids = sizes.map(_._1)
-    val contiguous = pids.isEmpty || (pids.last - pids.head + 1 == pids.length)
-    val slicesOk = sizes.length <= 1 ||
-      (contiguous && sizes.forall(_._2 >= window - 1))
-    if (!slicesOk) ranged.unpersist()
-    require(slicesOk,
-      s"sortedNeighborhoodPairsRanged needs contiguous range slices of >= " +
-        s"${window - 1} rows (got ${sizes.map(_._2).min} min over " +
-        s"${sizes.length} slices, contiguous=$contiguous); use " +
-        "sortedNeighborhoodPairs for corpora this small or skewed")
-    Pipeline.pin(ranged)
-    val w = window // avoid capturing `this` in the task closure
-    // (kind, a, b, pid): P = candidate pair (a=id_l, b=id_r);
-    // T = tail-strip row (a=id, b=rows-from-slice-end, 0-based);
-    // H = head-strip row (a=id, b=1-based rank from slice start).
-    // The slice id MUST be the RDD partition index
-    // (rdd.mapPartitionsWithIndex), never TaskContext.getPartitionId()
-    // or spark_partition_id(): those are STAGE-relative — when the
-    // boundary join's probe leg later runs inside a union stage its
-    // task ids shift by the other child's partition count, the strip
-    // pids stop matching, and every boundary pair silently vanishes
-    // (caught by the equivalence probe, round 15).
-    val emitted = ranged.as[(Long, String)].rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        val buf = new scala.collection.mutable.ArrayDeque[Long](w - 1)
-        val head = Vector.newBuilder[(String, Long, Long, Int)]
-        var seen = 0L
-        val pairs = it.flatMap { case (docId, _) =>
-          seen += 1
-          if (seen < w) head += (("H", docId, seen, pid))
-          val out = buf.iterator.map(prev => ("P", prev, docId, pid)).toVector
-          buf.append(docId)
-          if (buf.size >= w) buf.removeHead()
-          out
-        }
-        // tail strip reads the ring AFTER the pairs iterator drains (the
-        // ++ operands are by-name, so evaluation order is guaranteed)
-        def tail = buf.iterator.toVector.reverseIterator.zipWithIndex
-          .map { case (docId, back) => ("T", docId, back.toLong, pid) }
-        pairs ++ head.result().iterator ++ tail
-      }
-    val out = spark.createDataset(emitted).toDF("kind", "a", "b", "pid")
-    val localPairs = out.filter(col("kind") === "P")
-      .select(col("a").as("id_l"), col("b").as("id_r"))
-    val tailStrip = out.filter(col("kind") === "T")
-      .select(col("pid"), col("a").as("id_l"), col("b").as("back"))
-    val headStrip = out.filter(col("kind") === "H")
-      .select((col("pid") - 1).as("pid"), col("a").as("id_r"),
-        col("b").as("fwd"))
-    val boundary = tailStrip.join(headStrip, "pid")
-      .filter(col("back") + col("fwd") < w)
-      .select(col("id_l"), col("id_r"))
-    verifySortedNeighborhoodCand(docs, id, text, n, threshold,
-      localPairs.unionByName(boundary), preGate)
   }
 
   /** Repeated-passage detection — the chunk-level form of exact-substring
@@ -1303,94 +1181,6 @@ object Dedup {
       fpp: Double = 0.01): org.apache.spark.util.sketch.BloomFilter =
     existing.select(md5(key).as("digest"))
       .stat.bloomFilter("digest", expectedItems, fpp)
-
-  /** Native-expression variant of the Bloom gate (round-19 A/B probe of
-    * the ONE remaining hot-path UDF): builds the snapshot sketch with
-    * Catalyst's `BloomFilterAggregate` over `xxhash64(digest)` (the
-    * runtime-filter pair Spark's own InjectRuntimeFilter uses) and
-    * probes with `BloomFilterMightContain` — a codegen'd long-probe
-    * that stays inside whole-stage codegen, vs the UDF's per-row
-    * UTF8String→String conversion + murmur of a 32-char string outside
-    * it. The verdict column is identical either way: BOTH sketches
-    * contain every existing digest (no false negatives), and false
-    * positives die in the same exact semi-join verification — only the
-    * candidate-set size (≈fpp of the batch) and per-row probe cost can
-    * differ. Scale note: the sketch bytes ride the plan as a LITERAL
-    * (shipped with every task binary) where the UDF form broadcasts —
-    * at snapshot sizes past tens of MB the broadcast form travels
-    * better; at the ~KB–MB snapshot sizes the gate targets the literal
-    * is free.
-    *
-    * KEEP-NOTE (round 19, ABRW.json "dd22bloom", native listed first):
-    * a WASH — 0.40 vs 0.42 s (×1), 0.49 vs 0.51 (×10), 1.01 vs 0.97
-    * (×30). The gate probes only the (small) ingest BATCH, so per-row
-    * probe cost is microseconds either way and job/stage overhead plus
-    * the corpus-side sketch build dominate both forms. The UDF
-    * incumbent stays the catalog/streaming default (wash rule + the
-    * broadcast travels better at big snapshots); this pair stays the
-    * measured alternative for batch-heavy regimes where per-row probe
-    * cost would surface, re-runnable from RewriteAb. */
-  def buildDigestBloomNative(
-      existing: DataFrame, key: Column, expectedItems: Long,
-      fpp: Double = 0.01): Array[Byte] = {
-    import org.apache.spark.sql.GraftBridge
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    val numBits = org.apache.spark.util.sketch.BloomFilter
-      .optimalNumOfBits(expectedItems, fpp)
-    val agg = new BloomFilterAggregate(
-      GraftBridge.expression(xxhash64(md5(key))),
-      Literal(expectedItems), Literal(numBits))
-    val bytes = existing
-      .select(GraftBridge.column(agg.toAggregateExpression()).as("bf"))
-      .head().getAs[Array[Byte]](0)
-    if (bytes != null) bytes
-    else {
-      // Empty snapshot: BloomFilterAggregate yields NULL (no rows seen).
-      // Return an explicitly EMPTY sketch in the same wire format
-      // (sketch.BloomFilter — what BloomFilterMightContain deserializes)
-      // so the probe is a well-defined all-false gate, instead of a null
-      // Literal whose correctness rests on implicit null propagation in
-      // the filter (round-19 advice).
-      val bf = org.apache.spark.util.sketch.BloomFilter
-        .create(math.max(1L, expectedItems), numBits)
-      val out = new java.io.ByteArrayOutputStream()
-      bf.writeTo(out)
-      out.toByteArray
-    }
-  }
-
-  /** [[bloomIngestGate]] with the native probe — see
-    * [[buildDigestBloomNative]]. Same (incoming_id, digest, is_dup)
-    * output. */
-  def bloomIngestGateNative(
-      existing: DataFrame, incoming: DataFrame, id: Column, key: Column,
-      bloomBytes: Array[Byte]): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    val ex = existing.select(md5(key).as("digest"))
-    val in = incoming.select(id.as("incoming_id"), md5(key).as("digest"))
-    val probe = GraftBridge.column(BloomFilterMightContain(
-      Literal(bloomBytes, org.apache.spark.sql.types.BinaryType),
-      GraftBridge.expression(xxhash64(col("digest")))))
-    val candDigests = in
-      .filter(col("digest").isNotNull && probe)
-      .select("digest").distinct()
-    val dupDigests = ex
-      .join(broadcast(candDigests), Seq("digest"), "left_semi")
-      .distinct()
-    in.join(broadcast(dupDigests.withColumn("is_dup", lit(true))),
-        Seq("digest"), "left")
-      .na.fill(false, Seq("is_dup"))
-      .select("incoming_id", "digest", "is_dup")
-  }
-
-  /** One-call form of the native-pair gate (the dd22 shape). */
-  def bloomIngestGateNative(
-      existing: DataFrame, incoming: DataFrame, id: Column, key: Column,
-      expectedItems: Long, fpp: Double): DataFrame =
-    bloomIngestGateNative(existing, incoming, id, key,
-      buildDigestBloomNative(existing, key, expectedItems, fpp))
 
   // One Spark broadcast per DISTINCT bloom object, not per call: the
   // streaming gate invokes [[bloomIngestGate]] once per micro-batch with

@@ -436,9 +436,9 @@ object Similarity {
     * `sqrt(M² − ‖x‖²)` appended (M = max corpus norm, a 1-row
     * broadcast), queries get `0` — returns `(augmented queries,
     * augmented corpus)`, both as `(id, vec)` with dim+1 components.
-    * Factored out (r18 review) so [[mipsViaCosine]] and the IvfPqSweep
-    * ss11 row compose the SAME transform with different search
-    * backends — any fix here reaches both. */
+    * Factored out (r18 review) so any cosine search backend composes
+    * the SAME transform as [[mipsViaCosine]] — a fix here reaches all
+    * of them. */
   def mipsAugment(
       queriesDf: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String): (DataFrame, DataFrame) = {

@@ -47,7 +47,8 @@ object TpchQueries extends QueryPack {
     s"WITH partsupp AS (${Tables.partsuppViewSql})\n$q"
 
   /** Q15's literal CTE + scalar-max text — the ORACLE form and the
-    * RewriteAb literal side (quantized revenue, the q1 convention). */
+    * literal side of the round-14 rewrite A/B (quantized revenue, the
+    * q1 convention). */
   val q15Sql: String =
     """WITH revenue AS (
          SELECT l_suppkey AS supplier_no,
@@ -490,7 +491,7 @@ object TpchQueries extends QueryPack {
     // KEEP-NOTE (round 19, ABRW.json "q7"): the one untried idea from
     // the r18 plan audit — pre-aggregating the lineitem⋈supplier⋈nation
     // side by (l_orderkey, supp_region, l_year) before the orders/
-    // customer joins (RewriteAb.q7Probe) — LOSES at every point: probe
+    // customer joins (the A/B's q7 probe) — LOSES at every point: probe
     // 1.06/3.16/5.57 s vs this text 0.95/2.84/5.18 s at ×1/×10/×30.
     // The order-level groupBy keys on nearly one group per 4 input rows,
     // so its full-width shuffle + hash aggregate costs more than the
@@ -550,9 +551,9 @@ object TpchQueries extends QueryPack {
     // this entry BUILDS its plan (no job — persist is lazy — but one
     // pinned cache-manager entry per construction). A loop that
     // constructs per rep (explain sweeps, bench harnesses) must release
-    // between constructions — RewriteAb and the Bench/Verify loops do;
-    // dev mains follow the same rule (DevQ15). Callers needing isolation
-    // from OTHER threads' release points wrap in Pipeline.withScope.
+    // between constructions — the Bench/Verify loops do. Callers
+    // needing isolation from OTHER threads' release points wrap in
+    // Pipeline.withScope.
     "q15_top_supplier" -> ((s, d) => {
       val rev0 = Tables.lineitem(s, d)
         .filter(col("l_shipdate") >= lit("1999-01-01").cast("timestamp") &&
@@ -762,10 +763,10 @@ object TpchQueries extends QueryPack {
     // the agg so only ~4% of the windowed rows aggregate — trades that
     // smaller agg for an extra full-fact probe + two more exchanges,
     // and MEASURED A LOSS at every scale point — the committed
-    // ABRW.json (written by graft.RewriteAb, which keeps the probe
-    // re-runnable and whose numbers SCALE.md quotes under the doc-sync
-    // gate) has the literal at 0.81/1.89/2.50 s vs the probe's
-    // 1.18/2.29/2.81 s at ×1/×10/×30; the smaller-agg advantage grows
+    // ABRW.json (whose numbers SCALE.md quotes under the doc-sync gate;
+    // the A/B harness that wrote it is at commit dad73c5) has the
+    // literal at 0.81/1.89/2.50 s vs the probe's 1.18/2.29/2.81 s at
+    // ×1/×10/×30; the smaller-agg advantage grows
     // with the fact but never catches the extra probe, and the original
     // 8g A/B showed the same ordering. The pair grain is
     // nearly row grain in the window (174k distinct pairs of 175k

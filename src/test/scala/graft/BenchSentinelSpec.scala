@@ -209,4 +209,35 @@ class BenchSentinelSpec extends AnyFunSuite {
     assert(rows.head._2 === Seq(0.1, 0.11, 0.11))
     assert(Bench.stallFlags("headline", rows).isEmpty)
   }
+
+  // --- timedSuite: the one timed loop Bench's sections and ScaleCurve's
+  // scale points share (no Spark needed — `run` is a stub)
+
+  test("timedSuite: warmups first and discarded, reps round-robin, exactly reps samples, budget 0 passes through") {
+    val names = Seq("a", "b", "c")
+    val calls = Vector.newBuilder[String]
+    var n = 0
+    // warmup calls (the first 2 passes) return 1000+ s so a leaked warmup
+    // timing is unmistakable; timed call k returns (k s, k ms), except
+    // b's second rep, which carries fat GC so the sentinel flags it
+    val (rows, prov) = Bench.timedSuite("unit", names, warmups = 2, reps = 3,
+      retryBudget = 0) { q =>
+      calls += q
+      val k = n; n += 1
+      if (k < 2 * names.size) (1000.0 + k, 0L)
+      else (k.toDouble, if (q == "b" && k == 10) 700L else k.toLong)
+    }
+    // 2 warmup passes then 3 interleaved rep passes, and no retry run
+    assert(calls.result() === Vector.fill(5)(names).flatten)
+    assert(rows.map(_._1) === names)
+    assert(rows.forall { case (_, reps, gcs) => reps.size == 3 && gcs.size == 3 })
+    assert(rows.flatMap(_._2).forall(_ < 1000.0), "a warmup timing leaked into the reps")
+    assert(rows === Seq(
+      ("a", Seq(6.0, 9.0, 12.0), Seq(6L, 9L, 12L)),
+      ("b", Seq(7.0, 10.0, 13.0), Seq(7L, 700L, 13L)),
+      ("c", Seq(8.0, 11.0, 14.0), Seq(8L, 11L, 14L))))
+    // the flagged rep passes through untouched and no retry is recorded
+    assert(Bench.stallFlags("unit", rows).size === 1)
+    assert(prov.isEmpty)
+  }
 }

@@ -375,28 +375,6 @@ class DedupSpec extends GraftSuite {
     }
   }
 
-  test("sortedNeighborhoodPairsRanged: pair set identical to the two-phase original") {
-    // the round-15 single-sort probe must be a pure plan change: same
-    // candidate semantics (within-slice sliding window + boundary
-    // strips), so the verified pair set — ids AND jaccards — is
-    // bit-identical to sortedNeighborhoodPairs on the same corpus
-    // (also asserted at sf0.01/sf0.1 by the round-15 equivalence probe)
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val key = substring(
-      regexp_replace(lower(col("text")), "[^a-z0-9]", ""), 1, 12)
-    def collect(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .toSet
-    val orig = collect(Dedup.sortedNeighborhoodPairs(
-      docs, col("doc_id"), col("text"), key, window = 5, n = 3,
-      threshold = 0.5))
-    val ranged = collect(Dedup.sortedNeighborhoodPairsRanged(
-      docs, col("doc_id"), col("text"), key, window = 5, n = 3,
-      threshold = 0.5))
-    assert(orig.nonEmpty && ranged === orig)
-    graft.ops.Pipeline.releaseCaches()
-  }
-
   test("duplicateSpans gram stream: native word_ngrams identical to the retired transform form") {
     // round-20 swapped dd26's gram builder from an interpreted
     // transform(sequence(1, size−k+1), i => concat_ws(" ", slice(toks,
@@ -559,57 +537,6 @@ class DedupSpec extends GraftSuite {
       }
       assert(direct === viaStrings, s"input len $len")
     }
-  }
-
-  test("bloomIngestGateNative: verdicts identical to the UDF-probe gate") {
-    // the round-19 native-pair probe (BloomFilterAggregate +
-    // BloomFilterMightContain) must agree row-for-row with the
-    // broadcast-UDF gate: different sketches, same NO-false-negative
-    // guarantee, same exact verification — so identical verdicts
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val ex = docs.filter(col("doc_id") % 5 =!= 0)
-    val in = docs.filter(col("doc_id") % 5 === 0)
-    val key = substring(col("text"), 1, 64)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getString(1), r.getBoolean(2)))
-        .toSet
-    val udfGate = rows(Dedup.bloomIngestGate(
-      ex, in, col("doc_id"), key, expectedItems = 1000L))
-    val native = rows(Dedup.bloomIngestGateNative(
-      ex, in, col("doc_id"), key, expectedItems = 1000L, fpp = 0.01))
-    assert(udfGate.nonEmpty && native === udfGate)
-    assert(udfGate.exists(_._3), "fixture must contain at least one dup")
-  }
-
-  test("bloomIngestGateNative: empty snapshot is a stated all-false gate") {
-    // round-19 advice: BloomFilterAggregate over zero rows yields a NULL
-    // sketch; buildDigestBloomNative must hand back an explicit EMPTY
-    // bloom (not a null literal whose behavior rests on null
-    // propagation), so every incoming row passes the gate as is_dup=false
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val empty = docs.filter(lit(false))
-    val in = docs.limit(20)
-    val key = substring(col("text"), 1, 64)
-    val bytes = Dedup.buildDigestBloomNative(
-      empty, key, expectedItems = 1000L, fpp = 0.01)
-    assert(bytes != null && bytes.nonEmpty,
-      "empty snapshot must serialize an explicit empty sketch")
-    val out = Dedup.bloomIngestGateNative(
-      empty, in, col("doc_id"), key, bytes).collect()
-    assert(out.length == 20 && out.forall(!_.getBoolean(2)))
-  }
-
-  test("sortedNeighborhoodPairsRanged refuses slices thinner than the window") {
-    // a range slice with < window-1 rows would let a neighborhood span
-    // non-adjacent slices — the precondition must fail LOUDLY, never
-    // return a silently incomplete pair set
-    import spark.implicits._
-    val tiny = (1L to 6L).map(i => (i, s"doc text $i")).toDF("doc_id", "text")
-    val e = intercept[IllegalArgumentException] {
-      Dedup.sortedNeighborhoodPairsRanged(
-        tiny, col("doc_id"), col("text"), col("text"), window = 5)
-    }
-    assert(e.getMessage.contains("sortedNeighborhoodPairs"))
   }
 
   test("thetaOverlapAudit: exact columns match dd18, every verdict true") {

@@ -355,6 +355,32 @@ class SimilaritySpec extends GraftSuite {
     val f = fdf.select(
       graft.functions.Vectors.vec_sqdist(col("a"), col("b"))).head.getDouble(0)
     assert(f == (1.0 + 25.0 + 16.0))
+    // Upcast-first, pinned on floats that are NOT exactly representable
+    // (0.1f, 1f/3, 2f/7, …): each element widens to double BEFORE the
+    // subtraction, so the result is the ascending double fold of
+    // (x.toDouble − y.toDouble)², not a fold of float-precision squares.
+    // The exact values above cannot tell the two semantics apart.
+    val fracs = Seq(0.1f, 1f / 3, 2f / 7, 0.7f, 5f / 9, 1.1f, 3f / 11)
+    val frows = (0 until 16).map { i =>
+      (fracs.indices.map(j => fracs((i + j) % fracs.size) * (i + 1)),
+        fracs.indices.map(j => fracs((i * 3 + j + 1) % fracs.size) - j))
+    }
+    val fgot = frows.toDF("a", "b").select(
+      graft.functions.Vectors.vec_sqdist(col("a"), col("b"))).collect()
+      .map(_.getDouble(0))
+    def upcastFirst(a: Seq[Float], b: Seq[Float]): Double =
+      a.zip(b).foldLeft(0.0) { case (acc, (x, y)) =>
+        val d = x.toDouble - y.toDouble; acc + d * d }
+    def floatFirst(a: Seq[Float], b: Seq[Float]): Double =
+      a.zip(b).foldLeft(0.0) { case (acc, (x, y)) =>
+        val d = x - y; acc + (d * d).toDouble }
+    frows.zip(fgot).foreach { case ((a, b), g) =>
+      assert(java.lang.Double.doubleToRawLongBits(g) ==
+        java.lang.Double.doubleToRawLongBits(upcastFirst(a, b)),
+        s"native $g != upcast-first fold ${upcastFirst(a, b)}")
+    }
+    // the inputs do separate the two semantics
+    assert(frows.exists { case (a, b) => upcastFirst(a, b) != floatFirst(a, b) })
     // ragged vectors throw (vec_dot rule) — the declarative dual would
     // yield NULL via zip_with's null padding, silently corrupting ranks
     val ragged = Seq((Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0))).toDF("a", "b")

@@ -299,7 +299,8 @@ if os.path.exists(x100_path):
         # Fail fast if two artifact query names collapse to the same
         # short prefix (e.g. q1_a and q1_b) — json dicts would silently
         # keep only the last, the same silent-duplicate-key failure
-        # class round 15 fixed in RewriteAb/IvfPqSweep (round-16 advice).
+        # class round 15 fixed in the A/B and sweep harnesses (round-16
+        # advice).
         prefixes = [q.split("_")[0] for q in x100["queries"]]
         dupes = {p for p in prefixes if prefixes.count(p) > 1}
         if dupes:
