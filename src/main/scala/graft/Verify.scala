@@ -48,8 +48,8 @@ object Verify {
         Files.writeString(sentinelDir.resolve(s"$name.txt"),
           s"${e.getClass.getName}: ${e.getMessage}\n")
       }
-      // free any frames the two-phase prefix sum pinned for this query —
-      // the write above consumed them, and a 140-query session must not
+      // free any frames an operator pinned for this query — the write
+      // above consumed them, and a full-catalog session must not
       // accumulate pinned cache entries
       graft.ops.Pipeline.releaseCaches()
     }

@@ -581,7 +581,7 @@ object Dedup {
     val grams = (if (preGate) base.withColumn("gmask", gramMask(col("g")))
       else base)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Pipeline.pin(grams) // released with the two-phase caches
+    Pipeline.pin(grams) // reuse only; released by releaseCaches
     def side(tag: String) = grams.select(Seq(
         col("g_id").as(s"id_$tag"), col("g").as(s"g_$tag"),
         col("gsz").as(s"sz_$tag")) ++

@@ -605,11 +605,11 @@ object EventAnalytics {
   def lorenzCurve(
       events: DataFrame, userCol: String): DataFrame = {
     // persist the user-grain rollup: it feeds globalPosition AND
-    // runningTotal (whose offset jobs run as SEPARATE actions — no
-    // exchange reuse across job boundaries) AND the grand-total branch,
-    // so without the pin the event corpus was scanned and user-shuffled
-    // three times (round-16 review). Pinned via Pipeline.pin (caller-scoped), the
-    // same release contract as the prefix sums it feeds.
+    // runningTotal (whose subtotal jobs run separately from the emitting
+    // job) AND the grand-total branch, so without the pin the event
+    // corpus is scanned and user-shuffled once per reader. Reuse only:
+    // an evicted rollup is recomputed, never wrong. Pinned via
+    // Pipeline.pin (caller-scoped, released by releaseCaches).
     val per = events.groupBy(col(userCol))
       .agg(count(lit(1)).as("n_events"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -10,38 +10,23 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
-  /** Name of the per-row content-fingerprint column the running-sum
-    * two-phase pass materializes and [[runningSumPass]] re-verifies at
-    * partition exhaustion. Exported (and deliberately namespaced) so
-    * EntrySpec's guard-gap pin recognizes a fingerprint-guarded
-    * MapPartitions by THIS exact marker — a user/catalog column that
-    * happened to be named `_ph` can no longer be misclassified as one
-    * (round-19 advice). Internal-only: dropped before any operator
-    * output. */
-  val RunningSumFingerprintCol: String = "_graft_rsum_ph"
-
   /** A pin scope: frames persisted mid-operator land in exactly one
     * scope, and only that scope's [[release]] unpersists them. Scoping
-    * (round-18, closing the round-17 concurrency caveat) is what makes
-    * pinning safe under concurrent callers in one JVM: each caller
-    * wraps its operator calls in [[Pipeline.withScope]] and releases its
-    * own token — a global release point can no longer unpersist frames
-    * another thread's in-flight operator just pinned (which forced a
-    * recompute whose re-derived prefix-sum partition boundaries are not
-    * guaranteed to match already-collected offsets).
+    * is what makes pinning safe under concurrent callers in one JVM:
+    * each caller wraps its operator calls in [[Pipeline.withScope]] and
+    * releases its own token — a global release point can no longer
+    * unpersist frames another thread's in-flight operator just pinned.
     *
-    * LIMIT (r18 review): isolation is of release LIFECYCLE, not of the
-    * cache entries themselves — Spark's cache manager keys entries by
-    * canonicalized PLAN, so two callers running the IDENTICAL operator
-    * over the IDENTICAL input share ONE entry even across scopes, and
-    * the first scope's release uncaches it for both (the survivor
-    * recomputes; measured on this repo's Spark 4.1.2). The offset-
-    * consistency hazard that recompute creates is therefore closed
-    * DOWNSTREAM, not here: the two-phase operators verify a
-    * per-partition content fingerprint at execution and refuse loudly
-    * on membership drift ([[runningSumPass]]; Relational.skyline2D's
-    * deferred check), so a cross-scope uncache costs a recompute or a
-    * loud retryable error, never a silent wrong answer. */
+    * LIMIT: isolation is of release LIFECYCLE, not of the cache entries
+    * themselves — Spark's cache manager keys entries by canonicalized
+    * PLAN, so two callers running the IDENTICAL operator over the
+    * IDENTICAL input share ONE entry even across scopes, and the first
+    * scope's release uncaches it for both (the survivor recomputes;
+    * measured on this repo's Spark 4.1.2). Every remaining pin exists
+    * for reuse only — no operator's answer depends on a pinned frame
+    * staying cached (the two-phase prefix scans compute inside
+    * execution, see [[graft.plans.PrefixScanExec]]) — so a cross-scope
+    * uncache costs a recompute and nothing else. */
   final class PinScope {
     private val frames =
       new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
@@ -56,8 +41,7 @@ object Pipeline {
     }
     /** Unpersist every frame pinned into THIS scope. Call AFTER the
       * action(s) consuming their results — a further action on an
-      * already-returned frame would re-run the pinned stage (see the
-      * recompute hazard above). */
+      * already-returned frame would re-run the pinned stage. */
     def release(): Unit = {
       var df = frames.poll()
       while (df != null) {
@@ -78,9 +62,9 @@ object Pipeline {
   /** The scope pins currently route to. DynamicVariable rides an
     * InheritableThreadLocal, so the binding holds across the operator
     * call stack on the caller's thread (where graft operators persist
-    * and pin — all pinning happens at plan-construction/collect time on
-    * the driver) and is inherited by threads SPAWNED inside the scope;
-    * unrelated threads keep the default scope. */
+    * and pin — all pinning happens at plan construction on the driver)
+    * and is inherited by threads SPAWNED inside the scope; unrelated
+    * threads keep the default scope. */
   private val currentScope =
     new scala.util.DynamicVariable[PinScope](defaultScope)
 
@@ -97,9 +81,11 @@ object Pipeline {
   def withScope[T](scope: PinScope)(body: => T): T =
     currentScope.withValue(scope)(body)
 
-  /** Unpersist every frame pinned into the DEFAULT scope (the prefix-sum
-    * operators, skyline, multimodal keyframes, … when called without
-    * [[withScope]]). Call AFTER the action(s) consuming their results.
+  /** Unpersist every frame pinned into the DEFAULT scope (multimodal
+    * keyframes, dedup gram tables, the Lorenz user rollup, … when called
+    * without [[withScope]]). Call AFTER the action(s) consuming their
+    * results; releasing earlier only costs a recompute of the pinned
+    * stage.
     *
     * CALLER CONTRACT for direct library use: a session that invokes a
     * pinning operator and never releases leaks one persisted frame per
@@ -113,7 +99,7 @@ object Pipeline {
     * CONCURRENCY: this releases ONLY the default scope. Concurrent
     * pipelines in one JVM isolate themselves with [[withScope]] — their
     * pins are untouchable from here — rather than serializing release
-    * points (the round-17 workaround this replaces). */
+    * points. */
   def releaseCaches(): Unit = defaultScope.release()
 
   /** Stratified sample: per-stratum Bernoulli fractions, seeded. The
@@ -187,183 +173,47 @@ object Pipeline {
   def deterministicShuffle(df: DataFrame, seed: Long, keyCols: Column*): DataFrame =
     df.orderBy(xxhash64(lit(seed) +: keyCols: _*), keyCols.head)
 
-  /** Two-phase global prefix-sum machinery. A naive global window
-    * (`Window.orderBy(key)` with no partitionBy) funnels the whole dataset
-    * through ONE task — correct on fixtures, dead at 100 TB. Instead:
-    * range-partition by the order key, run one tiny per-partition
-    * aggregate (phase 1), turn its result into exclusive per-partition
-    * offsets, and combine them with a partition-LOCAL running sum
-    * (phase 2). Every stage is balanced across executors; the only
-    * driver-side data is one row per partition.
-    *
-    * Phase 2 deliberately avoids `Window.partitionBy(_pid)`: the cached
-    * frame is RANGE-partitioned by the order keys, which does not satisfy
-    * a window's hash-clustering requirement on `_pid`, so Spark inserted a
-    * SECOND full-data Exchange — the corpus shuffled twice per prefix
-    * sum, and hashing ~numShufflePartitions distinct pid values skews
-    * (round-16 review, plan-verified). Instead the running sum is a
-    * partition-local sort plus one sequential pass per partition
-    * (`mapPartitions`): each cached partition holds exactly one `_pid`
-    * by construction (spark_partition_id() was materialized INTO the
-    * cached rows — the offsets key and the row's partition can never
-    * disagree, and nothing re-reads a stage-relative id at map time, per
-    * the union-stage hazard rule), so the pass seeds its accumulator from
-    * the first row's stored pid and adds `perRow` (nulls count 0) in
-    * order. One Exchange total; PipelineSpec pins the plan shape.
-    *
-    * The range-partitioned frame is persisted before the offsets action so
-    * the main job reuses the SAME partitioning instead of re-running the
-    * range sampler — correctness does not lean on re-computation
-    * determinism, and the shuffle is materialized once (evicted by Spark's
-    * LRU when memory is needed; spills to disk first). The cache lives as
-    * long as the returned frame's lineage; every pinned frame is also
-    * tracked so [[releaseCaches]] can free them once the caller's action
-    * has consumed the result — a long-lived session running many
-    * prefix-sum jobs would otherwise accumulate one pinned frame per
-    * call (LRU bounds the memory, but the disk blocks and cache-manager
-    * entries persist for the session).
-    *
-    * Returns `df` plus `name`: the INCLUSIVE global running sum of
-    * `perRow` (cast to long) under the total order `orderCols`. */
-  private def globalRunningSum(
-      df: DataFrame, perRow: Column, name: String,
-      orderCols: Seq[Column]): DataFrame = {
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    // RunningSumFingerprintCol: a content hash over (order keys,
-    // per-row value) materialized
-    // into the cached rows — the partition-membership fingerprint the
-    // offsets collect records and phase 2 re-verifies (see below).
-    // Callers may pass SortOrder-wrapped order columns (asc/desc), which
-    // repartitionByRange accepts but a hash expression cannot evaluate —
-    // strip to the child column for the fingerprint.
-    val keyCols =
-      orderCols.map(org.apache.spark.sql.GraftBridge.stripSortOrder)
-    val ranged = df.repartitionByRange(parts, orderCols: _*)
-      .withColumn("_pid", spark_partition_id())
-      .withColumn("_prs", perRow.cast("long"))
-      .withColumn(RunningSumFingerprintCol, xxhash64(keyCols :+ coalesce(
-        perRow.cast("long"), lit(Long.MinValue)): _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pin(ranged)
-    var acc = 0L
-    val phase1 = ranged
-      .groupBy(col("_pid"))
-      .agg(coalesce(sum(col("_prs")), lit(0L)).as("_subtotal"),
-        count(lit(1)).as("_n"),
-        expr(s"bit_xor($RunningSumFingerprintCol)").as("_hx"))
-      .collect()
-      .sortBy(_.getInt(0))
-    val offsets: Map[Int, Long] = phase1
-      .map { r => val e = r.getInt(0) -> acc; acc += r.getLong(1); e }
-      .toMap
-    val expected: Map[Int, (Long, Long)] = phase1
-      .map(r => r.getInt(0) -> ((r.getLong(2), r.getLong(3)))).toMap
-    runningSumPass(ranged.sortWithinPartitions(orderCols: _*),
-      name, offsets, expected)
+  /** Appends `name`, the `fold` of `value` under the total order
+    * `orderCols` (plain or `asc`/`desc` columns), as one
+    * [[graft.plans.PrefixScan]]. A naive global window
+    * (`Window.orderBy(key)` with no partitionBy) funnels the whole
+    * dataset through ONE task; the prefix scan range-partitions by the
+    * order instead, folds each partition to one subtotal, and streams
+    * every partition once, seeded by the subtotals before it (the plan
+    * and why it needs no guard: [[graft.plans.PrefixScanExec]]). All of
+    * it runs when the frame is executed: building it starts no job and
+    * caches nothing. */
+  private[graft] def prefixScan(
+      df: DataFrame, value: Column, fold: graft.plans.PrefixFold,
+      name: String, orderCols: Seq[Column]): DataFrame = {
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
+    import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}
+    val spark = df.sparkSession
+    GraftBridge.registerStrategy(spark, graft.plans.PrefixScanStrategy)
+    // let the analyzer resolve the columns against df's own output
+    val (order, child) = df.sort(orderCols: _*).queryExecution.analyzed match {
+      case Sort(o, true, c, _) => (o, c)
+      case other => throw new IllegalArgumentException(
+        s"prefix-scan order must use columns of the frame, got:\n$other")
+    }
+    val v = df.select(value.as(name)).queryExecution.analyzed match {
+      case Project(Seq(Alias(e, _)), _) => e
+      case other => throw new IllegalArgumentException(
+        s"prefix-scan value must be a column expression, got:\n$other")
+    }
+    val out = AttributeReference(name, fold.resultType(v.dataType), fold.nullable)()
+    GraftBridge.ofRows(spark, graft.plans.PrefixScan(v, order, fold, out, child))
   }
 
-  /** Phase 2 of the prefix sum: the partition-local sequential pass,
-    * seeded per partition from `offsets` keyed by the STORED `_pid`, and
-    * GUARDED by the per-partition content fingerprint collected in
-    * phase 1 (`expected`: pid → (row count, xor of the stored
-    * [[RunningSumFingerprintCol]])).
-    *
-    * The guard exists because correctness leans on the pinned frame's
-    * partition membership being EXACTLY what the offsets collect
-    * observed — and Spark cannot promise that: the cache manager keys
-    * entries by canonicalized PLAN (a plan-identical frame pinned by a
-    * concurrent caller shares this entry, and either side's unpersist
-    * drops it for both), and LRU pressure can evict it wholesale; a
-    * later action then re-executes repartitionByRange, whose re-sampled
-    * boundaries need not reproduce the observed mapping while the
-    * re-derived `_pid` stays self-consistent (so the one-pid-per-
-    * partition check alone cannot fire). Verifying (count, hash-xor)
-    * per partition at iterator exhaustion turns every such membership
-    * drift into a LOUD IllegalStateException before the action
-    * completes, instead of silently wrong running sums. XOR is the
-    * order-independent accumulator that cannot overflow under ANSI;
-    * with the callers' total orders (unique keys — the repo's
-    * determinism convention) pair-cancellation needs a 64-bit hash
-    * collision, i.e. never in honest recomputes. Package-private so the
-    * refusal is unit-testable with a doctored expectation map.
-    *
-    * KNOWN GAP, stated honestly: the check fires at partition
-    * EXHAUSTION, so a consumer that truncates consumption (a pushed
-    * `limit` draining only the head of partition 0) can read rows
-    * without the verification ever running. The wrongness window needs
-    * BOTH a mid-lifetime recompute AND a limit-truncated consumer —
-    * every oracle/bench/catalog path consumes fully, and since round 19
-    * that invariant is MACHINE-CHECKED, not prose: EntrySpec's
-    * "guard-gap pin" walks every catalog query's analyzed plan
-    * (subqueries included) and fails if any Limit sits above a
-    * [[RunningSumFingerprintCol]]-fingerprinted MapPartitions without a full-consumption
-    * barrier (Sort/Aggregate) between them. An eager verify-before-emit
-    * would need either partition buffering (unbounded memory) or a
-    * second cached-scan aggregation per execution (the skyline2D
-    * deferred-check cost, not a wash for the hot prefix-sum rows), so
-    * exhaustion-time plus the spec pin is the chosen point. */
-  private[graft] def runningSumPass(
-      sorted: DataFrame, name: String, offsets: Map[Int, Long],
-      expected: Map[Int, (Long, Long)]): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(sorted.schema.fields :+
-      StructField(name, LongType, nullable = false))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(schema)
-    val pidIdx = sorted.schema.fieldIndex("_pid")
-    val prsIdx = sorted.schema.fieldIndex("_prs")
-    val phIdx = sorted.schema.fieldIndex(RunningSumFingerprintCol)
-    sorted.mapPartitions { it =>
-      var run = 0L
-      var pid = Int.MinValue
-      var seeded = false
-      var n = 0L
-      var hx = 0L
-      var checked = false
-      val rows = it.map { r =>
-        val rowPid = r.getInt(pidIdx)
-        if (!seeded) { pid = rowPid; run = offsets.getOrElse(pid, 0L); seeded = true }
-        else if (rowPid != pid)
-          // every cached partition holds exactly one _pid by
-          // construction (_pid was materialized INTO the cached rows);
-          // if a caching/partitioning change breaks that, fail loudly
-          throw new IllegalStateException(
-            s"globalRunningSum invariant broken: one partition holds " +
-              s"_pid=$pid and _pid=$rowPid - offsets would misapply; " +
-              "the cached range partitioning no longer matches the " +
-              "materialized partition ids")
-        n += 1L
-        hx ^= r.getLong(phIdx)
-        if (!r.isNullAt(prsIdx)) run += r.getLong(prsIdx)
-        Row.fromSeq(r.toSeq :+ run)
-      }
-      new Iterator[Row] {
-        def hasNext: Boolean = {
-          val h = rows.hasNext
-          if (!h && seeded && !checked) {
-            checked = true
-            val (en, ehx) = expected.getOrElse(pid, (0L, 0L))
-            if (n != en || hx != ehx)
-              throw new IllegalStateException(
-                s"globalRunningSum fingerprint mismatch for _pid=$pid: " +
-                  s"phase 1 observed (rows=$en, hash=$ehx) but phase 2 " +
-                  s"streamed (rows=$n, hash=$hx) - the pinned range-" +
-                  "partitioned frame was recomputed with different " +
-                  "partition boundaries after the offsets were " +
-                  "collected (cache evicted, or a plan-identical frame " +
-                  "was unpersisted by another caller); the broadcast " +
-                  "offsets no longer describe these partitions. Re-run " +
-                  "the operator; keep the pinned frame alive until its " +
-                  "consuming action (Pipeline.withScope isolates " +
-                  "release points across callers).")
-          }
-          h
-        }
-        def next(): Row = rows.next()
-      }
-    }(enc).drop("_pid", "_prs", RunningSumFingerprintCol)
-  }
+  /** Returns `df` plus `name`: the INCLUSIVE global running sum of
+    * `perRow` (cast to long; a null counts as 0) under the total order
+    * `orderCols`. */
+  private def globalRunningSum(
+      df: DataFrame, perRow: Column, name: String,
+      orderCols: Seq[Column]): DataFrame =
+    prefixScan(df, perRow.cast("long"), graft.plans.PrefixFold.InclusiveSum,
+      name, orderCols)
 
   /** Curriculum difficulty buckets: `ntile(n)` within each stratum under
     * a total per-stratum order (tie-broken by the trailing key so the
@@ -385,8 +235,9 @@ object Pipeline {
     * preceding cumulative token count falls in [b*budget, (b+1)*budget).
     * Prefix-sum semantics (a doc may straddle its boundary) rather than
     * stateful first-fit: exact first-fit would need a sequential scan.
-    * Distributed via the two-phase prefix sum above — no single-task
-    * window stage anywhere in the plan (PlanSpec asserts this). */
+    * Distributed via the two-phase prefix sum ([[prefixScan]]) — no
+    * single-task window stage anywhere in the plan (PlanSpec asserts
+    * this). */
   def packByTokenBudget(
       df: DataFrame, idCol: Column, tokensCol: Column,
       budget: Int): DataFrame =
@@ -709,18 +560,14 @@ object Pipeline {
   }
 
   /** Global 1-based position of each row under `orderCols` — the scalable
-    * form of `row_number()` over an unpartitioned window (same two-phase
-    * scheme: per-partition counts, broadcast offsets, local row_number).
+    * form of `row_number()` over an unpartitioned window (the same
+    * prefix scan as [[runningTotal]], summing 1 per row).
     *
     * PRECONDITION (shared with [[runningTotal]] and every other
     * prefix-sum entry point): `orderCols` must be a TOTAL order with
-    * UNIQUE keys per row — the repo's determinism convention, but here
-    * it is also what gives the recompute fingerprint its teeth: the
-    * drift guard xors a per-row content hash, and two IDENTICAL
-    * (order-key, per-row-value) rows swapping partitions leave both the
-    * count and the xor unchanged, so duplicate keys would re-open
-    * exactly the silent-drift window the guard closes. With unique keys
-    * a silent swap needs a 64-bit hash collision. */
+    * UNIQUE keys per row — the repo's determinism convention. Rows with
+    * equal keys are numbered in shuffle-arrival order, which can differ
+    * between runs and layouts. */
   def globalPosition(
       df: DataFrame, posName: String, orderCols: Column*): DataFrame =
     globalRunningSum(df, lit(1L), posName, orderCols)
@@ -729,8 +576,7 @@ object Pipeline {
     * `orderCols` — `sum() OVER (ORDER BY …)` without the SinglePartition
     * window (same two-phase scheme as [[globalPosition]]). The growth
     * curve / cumulative-count primitive. Same unique-total-order
-    * precondition as [[globalPosition]] — see its scaladoc for why the
-    * drift guard needs it. */
+    * precondition as [[globalPosition]], for determinism. */
   def runningTotal(
       df: DataFrame, valueCol: Column, totalName: String,
       orderCols: Column*): DataFrame =

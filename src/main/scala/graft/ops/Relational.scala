@@ -184,143 +184,24 @@ object Relational {
     * preceding row with `y ≤` this one's always dominates (its `x` is ≤,
     * and equality on both is impossible). A naive Spark rendering of
     * "preceding running min" is a global-order window — one task, dead at
-    * 100 TB. This uses the same two-phase shape as
-    * [[Pipeline.packByTokenBudget]]: range-partition by `(x, y)`, take the
-    * per-partition y-minimum (one tiny row per partition on the driver),
-    * broadcast the exclusive prefix-minima, and combine with a
-    * partition-local sequential running-min pass ([[skylineEmit]] —
-    * sortWithinPartitions + mapPartitions on the cached range
-    * partitioning, no window, no `_pid` re-shuffle) — every stage
-    * balanced, no SinglePartition anywhere in the emitting scan
-    * (PlanSpec asserts).
+    * 100 TB. This is the same rule as [[skylineByGroup]]'s window, run
+    * as the global prefix scan behind [[Pipeline.packByTokenBudget]]: the
+    * exclusive running min of `y` under `(x, y)` ([[Pipeline.prefixScan]]
+    * with `ExclusiveMin` — one range exchange, one tiny per-partition
+    * minimum on the driver, one seeded pass per partition, all inside
+    * execution), and a row is kept iff its `y` is below that minimum or
+    * no row precedes it. Every stage is balanced; no SinglePartition
+    * anywhere in the emitting scan (PlanSpec asserts).
     *
-    * `x`/`y` must be numeric (compared as their native types; the
-    * broadcast prefix map is double, exact for values < 2^53). */
+    * `x`/`y` must be orderable; `y` is compared in its own type. */
   def skyline2D(df: DataFrame, xCol: Column, yCol: Column): DataFrame = {
-    val spark = df.sparkSession
     val pts = df
       .where(xCol.isNotNull && yCol.isNotNull)
       .groupBy(xCol.as("x"), yCol.as("y"))
       .agg(count(lit(1)).as("n_rows"))
-    val parts = spark.sessionState.conf.numShufflePartitions
-    // Persisted before the per-partition-min action so the main job reuses
-    // the SAME range boundaries (the range sampler is not deterministic
-    // across re-runs); released via Pipeline.releaseCaches.
-    val ranged = pts.repartitionByRange(parts, col("x"), col("y"))
-      .withColumn("_pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Pipeline.pin(ranged)
-    // one driver pass collects the per-partition minima AND the
-    // membership fingerprint (count + xor of a content hash) the
-    // in-stream guard in skylineEmit re-verifies at exhaustion
-    val mins = ranged.groupBy(col("_pid"))
-      .agg(min(col("y").cast("double")).as("_min_y"),
-        count(lit(1)).as("_n"),
-        expr("bit_xor(xxhash64(x, y))").as("_hx"))
-      .collect()
-      .sortBy(_.getInt(0))
-    var run = Double.NaN
-    val prefix: Map[Int, Double] = mins.map { r =>
-      val e = r.getInt(0) -> run
-      val m = r.getDouble(1)
-      run = if (run.isNaN || m < run) m else run
-      e
-    }.toMap.filterNot(_._2.isNaN) // partitions with no preceding minimum
-    val expected: Map[Int, (Long, Long)] =
-      mins.map(r => r.getInt(0) -> ((r.getLong(2), r.getLong(3)))).toMap
-    skylineEmit(ranged.sortWithinPartitions(col("x"), col("y")),
-      prefix, expected)
-  }
-
-  /** Phase 2 of [[skyline2D]] — the partition-local sequential
-    * running-min pass, seeded per partition from the broadcast exclusive
-    * prefix minima keyed by the STORED `_pid`, with the fingerprint
-    * guard IN-STREAM (round 20, closing the round-19 TOCTOU note): the
-    * per-partition (row count, xor of xxhash64(x, y)) is accumulated
-    * over the rows THIS scan actually consumes and checked against the
-    * phase-1 observation at iterator exhaustion — exactly
-    * [[Pipeline.runningSumPass]]'s shape. The previous form verified
-    * the fingerprint in a SECOND broadcast scan of the cached frame,
-    * which left an eviction-between-scans escape; one scan has no
-    * between. The rewrite also deletes that plan's
-    * `Exchange hashpartitioning(_pid)` (the `_pid` window re-shuffled
-    * the full frame; sortWithinPartitions + mapPartitions keeps the
-    * cached range partitioning — the round-16 prefix-sum lesson), so
-    * the guard upgrade is also the better 100 TB plan. As with
-    * runningSumPass, membership drift that moves rows BETWEEN
-    * partitions is caught on every affected partition; the check fires
-    * at exhaustion, and o7's catalog/oracle consumers drain fully
-    * (EntrySpec's guard-gap pin machine-checks the no-truncation
-    * invariant for the running sums; the same full-consumption
-    * convention holds here). Package-private so the refusal is
-    * unit-testable with a doctored expectation map. */
-  private[graft] def skylineEmit(
-      sorted: DataFrame, prefix: Map[Int, Double],
-      expected: Map[Int, (Long, Long)]): DataFrame = {
-    import org.apache.spark.sql.Row
-    val withAux = sorted
-      .withColumn("_yd", col("y").cast("double"))
-      .withColumn("_rh", xxhash64(col("x"), col("y")))
-    val schema = withAux.schema
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(schema)
-    val pidIdx = schema.fieldIndex("_pid")
-    val ydIdx = schema.fieldIndex("_yd")
-    val rhIdx = schema.fieldIndex("_rh")
-    withAux.mapPartitions { it =>
-      var run = Double.PositiveInfinity
-      var pid = Int.MinValue
-      var seeded = false
-      var n = 0L
-      var hx = 0L
-      var checked = false
-      val rows = it.flatMap { r =>
-        val rowPid = r.getInt(pidIdx)
-        if (!seeded) {
-          pid = rowPid
-          run = prefix.getOrElse(pid, Double.PositiveInfinity)
-          seeded = true
-        } else if (rowPid != pid)
-          // every cached partition holds exactly one _pid by
-          // construction (_pid was materialized INTO the cached rows);
-          // if a caching/partitioning change breaks that, fail loudly
-          throw new IllegalStateException(
-            s"skyline2D invariant broken: one partition holds " +
-              s"_pid=$pid and _pid=$rowPid - the broadcast prefix " +
-              "minima would misapply; the cached range partitioning " +
-              "no longer matches the materialized partition ids")
-        n += 1L
-        hx ^= r.getLong(rhIdx)
-        val y = r.getDouble(ydIdx)
-        val emit = y < run
-        if (emit) run = y
-        if (emit) Some(r) else None
-      }
-      new Iterator[Row] {
-        def hasNext: Boolean = {
-          val h = rows.hasNext
-          if (!h && seeded && !checked) {
-            checked = true
-            val (en, ehx) = expected.getOrElse(pid, (0L, 0L))
-            if (n != en || hx != ehx)
-              throw new IllegalStateException(
-                s"skyline2D fingerprint mismatch for _pid=$pid: " +
-                  s"phase 1 observed (rows=$en, hash=$ehx) but the " +
-                  s"emitting scan consumed (rows=$n, hash=$hx) - the " +
-                  "pinned range-partitioned frame was recomputed with " +
-                  "different partition boundaries after the prefix " +
-                  "minima were collected (cache evicted, or a " +
-                  "plan-identical frame unpersisted by another " +
-                  "caller); the broadcast prefix minima no longer " +
-                  "describe these partitions. Re-run the operator; " +
-                  "keep the pinned frame alive until its consuming " +
-                  "action (Pipeline.withScope isolates release points " +
-                  "across callers).")
-          }
-          h
-        }
-        def next(): Row = rows.next()
-      }
-    }(enc).select(col("x"), col("y"), col("n_rows"))
+    Pipeline.prefixScan(pts, col("y"), graft.plans.PrefixFold.ExclusiveMin,
+        "_prefix_min", Seq(col("x"), col("y")))
+      .where(col("_prefix_min").isNull || col("y") < col("_prefix_min"))
+      .select(col("x"), col("y"), col("n_rows"))
   }
 }

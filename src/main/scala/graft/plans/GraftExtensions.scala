@@ -14,15 +14,26 @@ object AsOfJoinStrategy extends SparkStrategy {
   }
 }
 
+/** Plans [[PrefixScan]] as [[PrefixScanExec]]. */
+object PrefixScanStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case PrefixScan(value, order, fold, out, child) =>
+      PrefixScanExec(value, order, fold, out, planLater(child)) :: Nil
+    case _ => Nil
+  }
+}
+
 /** Session-extension registration — the canonical deployment path:
   * `SparkSession.builder.withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.plans.GraftExtensions`. For sessions built
-  * elsewhere, `graft.ops.Joins.asOf` also self-registers the strategy via
-  * `spark.experimental.extraStrategies` so the operator works on any
+  * elsewhere, `graft.ops.Joins.asOf` and `graft.ops.Pipeline.prefixScan`
+  * also self-register their strategy via
+  * `spark.experimental.extraStrategies` so the operators work on any
   * session. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit = {
     extensions.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    extensions.injectPlannerStrategy(_ => PrefixScanStrategy)
     extensions.injectOptimizerRule(_ => RangeJoinRewrite)
   }
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Sources + catalog.
   *
@@ -125,12 +126,15 @@ object Tables {
     * and every stamp are unchanged; otherwise re-register every table
     * present under `dir` (views of absent tables are dropped, so none can
     * keep serving another dir's data) and keep the partsupp frame only if
-    * `lineitem`'s stamp held — a stale one is unpersisted and rebuilt. */
+    * `lineitem`'s stamp held — a stale one is unpersisted and rebuilt.
+    * A partsupp frame whose cache entry a session-wide uncache
+    * (`spark.catalog.clearCache()`) dropped is cached again, so it is not
+    * re-derived by every later query. */
   private def register(spark: SparkSession, dir: String): Registration =
     synchronized {
       val stamps = versionStamps(spark, dir)
       val prev = registrations.get(spark)
-      prev.filter(r => r.dir == dir && r.stamps == stamps).getOrElse {
+      val reg = prev.filter(r => r.dir == dir && r.stamps == stamps).getOrElse {
         all.foreach { n =>
           if (stamps.contains(n)) accessors(n)(spark, dir).createOrReplaceTempView(n)
           else spark.catalog.dropTempView(n)
@@ -149,6 +153,8 @@ object Tables {
         registrations(spark) = r
         r
       }
+      reg.partsupp.filter(_.storageLevel == StorageLevel.NONE).foreach(_.cache())
+      reg
     }
 
   /** The derived partsupp as a DataFrame, cached on first use (lazy — no

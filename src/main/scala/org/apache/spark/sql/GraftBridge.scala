@@ -10,18 +10,6 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** If `c` is a sort-order column (`col.asc`/`col.desc` …), return the
-    * wrapped child column; otherwise `c` unchanged. Needed because a
-    * SortOrder is Unevaluable: passing an order column into a value
-    * expression (hash, comparison) fails at codegen. On Spark 4 the
-    * wrapping lives at the ColumnNode layer (the catalyst Expression is
-    * a lazy ColumnNodeExpression, so matching catalyst SortOrder never
-    * fires) — strip at the node. */
-  def stripSortOrder(c: Column): Column = c.node match {
-    case so: internal.SortOrder => Column(so.child)
-    case _ => c
-  }
-
   /** Build a DataFrame from a hand-constructed logical plan (the custom-
     * operator entry point; `Dataset.ofRows` is `private[sql]`). */
   def ofRows(

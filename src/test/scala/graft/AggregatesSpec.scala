@@ -284,7 +284,6 @@ class AggregatesSpec extends GraftSuite {
     def wp(num: Long, den: Long) = graft.ops.Aggregates
       .weightedPercentile(df, col("v"), col("w"), num, den, col("id"))
       .collect().map(r => (r.getDouble(0), r.getLong(1), r.getLong(2)))
-    graft.ops.Pipeline.releaseCaches()
     // W=4: median needs cum ≥ 2 → 20 (row median would also be 20, but
     // with w(10)=3 the answer flips to 10 — mass decides)
     assert(wp(1, 2).toSeq === Seq((20.0, 3L, 4L)))
@@ -294,7 +293,6 @@ class AggregatesSpec extends GraftSuite {
     val got = graft.ops.Aggregates
       .weightedPercentile(heavy, col("v"), col("w"), 1L, 2L, col("id"))
       .collect().map(r => r.getDouble(0))
-    graft.ops.Pipeline.releaseCaches()
     assert(got.toSeq === Seq(10.0))
   }
 
@@ -306,7 +304,6 @@ class AggregatesSpec extends GraftSuite {
       .equiDepthHistogram(df, col("v"), 4, col("id"))
       .orderBy("bucket").collect()
       .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2), r.getLong(3)))
-    graft.ops.Pipeline.releaseCaches()
     assert(got.toSeq === Seq(
       (0, 1.0, 3.0, 3L), (1, 4.0, 5.0, 2L),
       (2, 6.0, 8.0, 3L), (3, 9.0, 10.0, 2L)))

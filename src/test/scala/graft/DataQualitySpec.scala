@@ -61,7 +61,6 @@ class DataQualitySpec extends GraftSuite {
       (2.0, 3L), (5.0, 5L))
     val out = Relational.skyline2D(pts.toDF("x", "y"), col("x"), col("y"))
       .collect().map(r => (r.getDouble(0), r.getLong(1)) -> r.getLong(2)).toMap
-    graft.ops.Pipeline.releaseCaches()
     assert(out.keySet == naiveSkyline(pts))
     assert(out((2.0, 3L)) == 2L) // duplicate rows on one frontier point
   }
@@ -71,47 +70,7 @@ class DataQualitySpec extends GraftSuite {
     val pts = Seq.fill(300)((rnd.nextInt(40).toDouble, rnd.nextInt(40).toLong))
     val out = Relational.skyline2D(pts.toDF("x", "y"), col("x"), col("y"))
       .collect().map(r => (r.getDouble(0), r.getLong(1))).toSet
-    graft.ops.Pipeline.releaseCaches()
     assert(out == naiveSkyline(pts))
-  }
-
-  test("skylineEmit REFUSES on a partition-fingerprint mismatch") {
-    // Round-20: the skyline guard moved IN-STREAM (the runningSumPass
-    // shape) — the emitting scan accumulates per-partition (row count,
-    // xor of xxhash64(x, y)) over the rows it actually consumes and
-    // refuses at exhaustion when they differ from the phase-1
-    // observation, closing the round-19 eviction-between-scans TOCTOU
-    // note. Doctored expectation maps against the package-private pass.
-    val frame = Seq((1.0, 5L, 1L), (2.0, 3L, 1L), (3.0, 2L, 2L))
-      .toDF("x", "y", "n_rows")
-      .repartition(1)
-      .withColumn("_pid", spark_partition_id())
-      .sortWithinPartitions("x", "y")
-    val truth = frame.groupBy("_pid")
-      .agg(count(lit(1)).as("n"), expr("bit_xor(xxhash64(x, y))").as("hx"))
-      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2))))
-      .toMap
-    // matching fingerprint: emits the frontier
-    val ok = Relational.skylineEmit(frame, Map.empty, truth)
-      .collect().map(r => (r.getDouble(0), r.getLong(1))).toSet
-    assert(ok === Set((1.0, 5L), (2.0, 3L), (3.0, 2L)))
-    def chain(e: Throwable): String = {
-      var t = e; val sb = new StringBuilder
-      while (t != null) { sb.append(t.getMessage).append('\n'); t = t.getCause }
-      sb.toString
-    }
-    // doctored count: refuses loudly
-    val badN = truth.map { case (p, (n, hx)) => p -> ((n + 1L, hx)) }
-    val e1 = intercept[Exception] {
-      Relational.skylineEmit(frame, Map.empty, badN).collect()
-    }
-    assert(chain(e1).contains("fingerprint mismatch"), chain(e1))
-    // doctored content hash: refuses loudly
-    val badH = truth.map { case (p, (n, hx)) => p -> ((n, hx ^ 42L)) }
-    val e2 = intercept[Exception] {
-      Relational.skylineEmit(frame, Map.empty, badH).collect()
-    }
-    assert(chain(e2).contains("fingerprint mismatch"), chain(e2))
   }
 
   test("skylineByGroup: independent frontiers per group") {

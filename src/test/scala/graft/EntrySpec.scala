@@ -38,61 +38,6 @@ class EntrySpec extends GraftSuite {
     assert(failures.isEmpty, failures.mkString("; "))
   }
 
-  test("no Limit can truncate a fingerprint-guarded MapPartitions (guard-gap pin)") {
-    // The runningSumPass fingerprint guard fires at partition EXHAUSTION
-    // (Pipeline.scala KNOWN GAP note): a Limit that stops pulling rows
-    // before exhaustion (CollectLimit / LocalLimit take(n) per
-    // partition) would emit rows the guard never verified. This pins the
-    // documented "no catalog path truncates" invariant mechanically: in
-    // every catalog query's analyzed plan — subqueries included — no
-    // Limit sits above a running-sum MapPartitions (recognized by the
-    // dedicated Pipeline.RunningSumFingerprintCol marker in its
-    // subtree) unless a full-consumption
-    // barrier (Sort or Aggregate: both drain their child completely
-    // before emitting their first row) lies between them. A future
-    // catalog query that breaks the invariant fails HERE, turning the
-    // prose gap into a load-bearing check.
-    import org.apache.spark.sql.catalyst.plans.logical._
-    def fingerprinted(p: LogicalPlan): Boolean =
-      p.collectFirst {
-        case n if n.output.exists(
-          _.name == graft.ops.Pipeline.RunningSumFingerprintCol) => n
-      }.isDefined
-    def walk(p: LogicalPlan, limitAbove: Boolean): Seq[LogicalPlan] = {
-      val here = p match {
-        case mp: MapPartitions if limitAbove && fingerprinted(mp.child) =>
-          Seq(mp)
-        case _ => Nil
-      }
-      val below = p match {
-        case _: GlobalLimit | _: LocalLimit =>
-          p.children.flatMap(walk(_, limitAbove = true))
-        case _: Sort | _: Aggregate =>
-          p.children.flatMap(walk(_, limitAbove = false))
-        case _ => p.children.flatMap(walk(_, limitAbove))
-      }
-      // subquery plans execute as their own drained jobs (collect /
-      // hash-set build), so the limit context resets — but a Limit
-      // INSIDE one truncates that job's partitions like any other
-      val subs = p.expressions.flatMap(_.collect {
-        case sq: org.apache.spark.sql.catalyst.expressions.SubqueryExpression =>
-          walk(sq.plan, limitAbove = false)
-      }.flatten)
-      here ++ below ++ subs
-    }
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val plan = fn(spark, sf).queryExecution.analyzed
-        if (walk(plan, limitAbove = false).nonEmpty) Some(name) else None
-    }
-    graft.ops.Pipeline.releaseCaches()
-    assert(offenders.isEmpty,
-      s"Limit above an exhaustion-checked running-sum pass in: " +
-        s"${offenders.mkString(", ")} — the fingerprint guard would " +
-        "never run for truncated partitions; add a Sort/Aggregate " +
-        "barrier or verify via a deferred pre-consumption check")
-  }
-
   test("q1 flagship values are sane") {
     val q1 = SparkEntry.queries("q1_pricing_summary")(spark, sf)
     val rows = q1.collect()

@@ -223,7 +223,6 @@ class EventAnalyticsSpec extends GraftSuite {
     val got = EventAnalytics.userGrowth(events, "user_id", "ts")
       .orderBy("day").collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-    graft.ops.Pipeline.releaseCaches()
     assert(got.toSeq === Seq((0, 2L, 2L), (1, 1L, 3L), (2, 0L, 3L)))
   }
 

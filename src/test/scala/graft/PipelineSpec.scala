@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.Pipeline
+import graft.ops.{Pipeline, Relational}
 import graft.sources.Tables
 
 /** Invariants for the training-pipeline utilities. */
@@ -225,76 +225,84 @@ class PipelineSpec extends GraftSuite {
     assert(kept === Set(3L))
   }
 
-  test("releaseCaches frees the prefix-sum's pinned frames after the action") {
+  private lazy val events = Tables.events(spark, sf)
+
+  // lorenzCurve pins its user-grain rollup (reuse only): the pinning
+  // operator these lifecycle specs drive
+  private def lorenz() = graft.ops.EventAnalytics.lorenzCurve(events, "user_id")
+
+  test("releaseCaches frees an operator's pinned frames after the action") {
     val cm = spark.sharedState.cacheManager
     Pipeline.releaseCaches() // drain pins left over from earlier tests
     val cleanBefore = cm.isEmpty
-    val packed = Pipeline.packByTokenBudget(
-      docs, col("doc_id"), col("n_chars"), budget = 4096)
-    packed.count() // the consuming action
-    // the two-phase prefix sum pinned its range-partitioned frame
+    val curve = lorenz()
+    curve.count() // the consuming action
+    // the operator pinned its rollup
     assert(!cm.isEmpty)
+    assert(!Pipeline.pinned.isEmpty)
     Pipeline.releaseCaches()
+    assert(Pipeline.pinned.isEmpty)
     // releasing drops the pin; when no other suite left caches behind,
     // the session's cache manager ends the run empty (the Verify-loop
-    // contract: 140 queries, zero graft-pinned entries at exit)
+    // contract: zero graft-pinned entries at exit)
     if (cleanBefore) assert(cm.isEmpty)
   }
 
   test("pin scopes isolate concurrent callers from releaseCaches") {
-    // The round-17 concurrency caveat, closed: a caller that wraps its
-    // operator calls in withScope owns its pins — a releaseCaches()
-    // fired by ANOTHER caller (the global/default release point) must
-    // not unpersist its in-flight frames. Two scoped callers on their
-    // own threads + a default-scope caller, interleaved releases.
+    // A caller that wraps its operator calls in withScope owns its pins:
+    // a releaseCaches() fired by ANOTHER caller (the global/default
+    // release point) must not unpersist its in-flight frames. Two scoped
+    // callers on their own threads + a default-scope caller, interleaved
+    // releases.
     // KNOWN LIMIT (pinned in the PinScope scaladoc): Spark's cache is
-    // plan-keyed, so these two callers — whose pinned `ranged` plans
-    // are identical (the budget only affects post-pin computation) —
-    // actually share ONE cache entry, and the FIRST scope.release()
-    // drops it for both; what protects the survivor is the prefix-sum
-    // fingerprint guard (refuse-loudly on membership drift, tested
-    // below), not scope isolation. This test therefore pins the scope
-    // LIFECYCLE semantics: default-release can't touch scoped queues,
-    // each scope drains only its own.
+    // plan-keyed, so these two callers — whose pinned rollups are
+    // identical — actually share ONE cache entry, and the FIRST
+    // scope.release() drops it for both. That costs the survivor a
+    // recompute, never a wrong answer: no operator's result depends on
+    // a pin staying cached. This test therefore pins the scope LIFECYCLE
+    // semantics: default-release can't touch scoped queues, each scope
+    // drains only its own.
     Pipeline.releaseCaches() // drain pins left over from earlier tests
-    val base = docs.select("doc_id", "n_chars")
     val scopeA = new Pipeline.PinScope
     val scopeB = new Pipeline.PinScope
-    import java.util.concurrent.{CountDownLatch, Executors}
+    import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
     val pool = Executors.newFixedThreadPool(2)
     val built = new CountDownLatch(2)
     val released = new CountDownLatch(1)
-    def scopedRun(scope: Pipeline.PinScope, budget: Int) = pool.submit(
+    def scopedRun(scope: Pipeline.PinScope) = pool.submit(
       new java.util.concurrent.Callable[Seq[org.apache.spark.sql.Row]] {
         def call() = Pipeline.withScope(scope) {
-          val packed = Pipeline.packByTokenBudget(
-            docs, col("doc_id"), col("n_chars"), budget = budget)
+          val curve = lorenz()
           built.countDown()
           released.await() // hostile releaseCaches fires BEFORE our action
-          packed.orderBy("doc_id").collect().toSeq
+          curve.orderBy("user_id").collect().toSeq
         }
       })
-    val fa = scopedRun(scopeA, 4096)
-    val fb = scopedRun(scopeB, 2048)
-    built.await()
-    // both scoped callers have pinned; the default scope has not
-    assert(!scopeA.isEmpty && !scopeB.isEmpty)
-    assert(Pipeline.pinned.isEmpty)
-    // the hostile global release: must not touch either scope's pins
-    Pipeline.releaseCaches()
-    assert(!scopeA.isEmpty && !scopeB.isEmpty)
-    released.countDown()
-    val ra = fa.get(120, java.util.concurrent.TimeUnit.SECONDS)
-    val rb = fb.get(120, java.util.concurrent.TimeUnit.SECONDS)
-    pool.shutdown()
-    // results are correct (match a naive global running-sum reference)
-    val naive = base.orderBy("doc_id").collect().toSeq
-    assert(ra.size === naive.size && rb.size === naive.size)
+    val (ra, rb) = try {
+      val fa = scopedRun(scopeA)
+      val fb = scopedRun(scopeB)
+      assert(built.await(120, TimeUnit.SECONDS), "scoped callers never built")
+      // both scoped callers have pinned; the default scope has not
+      assert(!scopeA.isEmpty && !scopeB.isEmpty)
+      assert(Pipeline.pinned.isEmpty)
+      // the hostile global release: must not touch either scope's pins
+      Pipeline.releaseCaches()
+      assert(!scopeA.isEmpty && !scopeB.isEmpty)
+      released.countDown()
+      (fa.get(120, TimeUnit.SECONDS), fb.get(120, TimeUnit.SECONDS))
+    } finally {
+      // a failed assertion must not leave the callers parked on the latch
+      released.countDown()
+      pool.shutdown()
+    }
+    // both callers got the full, identical answer (one row per user)
+    val users = events.select("user_id").distinct().count()
+    assert(ra.size.toLong === users)
+    assert(ra === rb)
     // each caller releases its own token; the other's QUEUE survives —
     // but pin the documented plan-identity LIMIT against real cache
     // state: these two callers' pinned frames are plan-identical, so
     // they shared ONE cache entry and A's release dropped it for B too
-    // (B is protected downstream by the fingerprint guard, not here)
     val bFrames = scopeB.snapshot
     assert(bFrames.nonEmpty)
     scopeA.release()
@@ -303,68 +311,16 @@ class PipelineSpec extends GraftSuite {
         org.apache.spark.storage.StorageLevel.NONE),
       "plan-identical cross-scope entries share cache: A's release " +
         "must have dropped B's entry too (if this ever starts FAILING, " +
-        "Spark made caching handle-scoped and the PinScope scaladoc + " +
-        "fingerprint-guard rationale should be revisited)")
+        "Spark made caching handle-scoped and the PinScope scaladoc " +
+        "should be revisited)")
     scopeB.release()
     assert(scopeA.isEmpty && scopeB.isEmpty)
     // and an unwrapped call still lands in the default scope, released
     // by the classic harness release point (back-compat contract)
-    val packed = Pipeline.packByTokenBudget(
-      docs, col("doc_id"), col("n_chars"), budget = 4096)
-    packed.count()
+    lorenz().count()
     assert(!Pipeline.pinned.isEmpty)
     Pipeline.releaseCaches()
     assert(Pipeline.pinned.isEmpty)
-  }
-
-  test("prefix-sum phase 2 REFUSES on a partition-fingerprint mismatch") {
-    // The round-18 guard: phase 2 verifies per-partition (row count,
-    // xor of the materialized content hash) against what the offsets
-    // collect observed. A pinned range-partitioned frame recomputed
-    // with different boundaries (cache evicted under LRU, or a
-    // plan-identical frame unpersisted by another caller — Spark's
-    // cache manager keys entries by canonicalized PLAN, not DataFrame
-    // handle) keeps a self-consistent _pid, so only this content check
-    // can catch it; stale broadcast offsets would otherwise produce
-    // silently wrong running sums. Unit-tested with a doctored
-    // expectation map against the package-private phase-2 pass.
-    import spark.implicits._
-    val frame = Seq((1L, 10L), (2L, 20L), (3L, 30L))
-      .toDF("id", "v")
-      .repartition(1)
-      .withColumn("_pid", spark_partition_id())
-      .withColumn("_prs", col("v"))
-      .withColumn(Pipeline.RunningSumFingerprintCol,
-        xxhash64(col("id"), col("v")))
-      .sortWithinPartitions("id")
-    val truth = frame.groupBy("_pid")
-      .agg(count(lit(1)).as("n"), expr(s"bit_xor(${Pipeline.RunningSumFingerprintCol})").as("hx"))
-      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2))))
-      .toMap
-    val offsets = truth.keys.map(_ -> 0L).toMap
-    // matching fingerprint: passes and sums correctly
-    val ok = Pipeline.runningSumPass(frame, "run", offsets, truth)
-      .orderBy("id").select("id", "run").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(ok.toSeq === Seq((1L, 10L), (2L, 30L), (3L, 60L)))
-    // doctored count: refuses loudly
-    val badN = truth.map { case (p, (n, hx)) => p -> ((n + 1L, hx)) }
-    val e1 = intercept[Exception] {
-      Pipeline.runningSumPass(frame, "run", offsets, badN).collect()
-    }
-    assert(chain(e1).contains("fingerprint mismatch"), chain(e1))
-    // doctored content hash: refuses loudly
-    val badH = truth.map { case (p, (n, hx)) => p -> ((n, hx ^ 42L)) }
-    val e2 = intercept[Exception] {
-      Pipeline.runningSumPass(frame, "run", offsets, badH).collect()
-    }
-    assert(chain(e2).contains("fingerprint mismatch"), chain(e2))
-  }
-
-  private def chain(e: Throwable): String = {
-    var t = e; val sb = new StringBuilder
-    while (t != null) { sb.append(t.getMessage).append('\n'); t = t.getCause }
-    sb.toString
   }
 
   test("globalPosition matches a global row_number window") {
@@ -499,7 +455,6 @@ class PipelineSpec extends GraftSuite {
     val df = (1 to 500).map(i => (i.toLong, (i % 7).toLong)).toDF("id", "v")
     val got = Pipeline.runningTotal(df.repartition(5), col("v"), "cum", col("id"))
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    Pipeline.releaseCaches()
     var acc = 0L
     (1 to 500).foreach { i =>
       acc += i % 7
@@ -509,21 +464,96 @@ class PipelineSpec extends GraftSuite {
 
   test("prefix-sum phase 2 adds no second shuffle (one range exchange)") {
     import spark.implicits._
-    // the old Window.partitionBy(_pid) phase 2 made Spark insert an
-    // Exchange hashpartitioning(_pid) after the range repartition — the
-    // corpus shuffled TWICE per prefix sum, keyed on ~numShufflePartitions
-    // distinct pids (round-16 review, plan-verified). Phase 2 is now a
-    // partition-local sort + sequential pass; pin the plan shape.
+    // Each prefix sum plans one PrefixScanExec over exactly one range
+    // exchange: subtotals and output are read from that one shuffle, with
+    // no cached frame, no window and no re-shuffle in between.
     val df = (1 to 400).map(i => (i.toLong, (i % 5).toLong)).toDF("id", "v")
     for (out <- Seq(
         Pipeline.runningTotal(df, col("v"), "cum", col("id")),
         Pipeline.globalPosition(df, "pos", col("id")),
         Pipeline.packByTokenBudget(df, col("id"), col("v"), budget = 7))) {
       out.collect()
-      val p = out.queryExecution.executedPlan.toString
-      assert(!p.contains("hashpartitioning(_pid"),
-        s"phase 2 re-shuffled on _pid:\n$p")
-      Pipeline.releaseCaches()
+      val bad = PlanSpec.prefixScanViolations(out)
+      assert(bad.isEmpty,
+        s"${bad.mkString("; ")}\n${out.queryExecution.executedPlan}")
+    }
+  }
+
+  test("prefix scans equal their one-window references on every layout and start no job when built") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val rows = Seq(
+      (7L, Some(3L), 4.0, 2L), (2L, None, 1.0, 9L), (9L, Some(-5L), 2.0, 8L),
+      (1L, Some(4L), 5.0, 1L), (5L, Some(0L), 3.0, 3L),
+      (10L, Some(11L), 2.0, 6L), (3L, Some(2L), 6.0, 1L), (8L, None, 1.0, 7L),
+      (4L, Some(9L), 4.0, 2L), (6L, Some(1L), 7.0, 0L))
+    val data = rows.toDF("id", "v", "x", "y")
+    val empty = rows.take(0).toDF("id", "v", "x", "y")
+    // the operators under test, and the same answers from one global
+    // window each (a null value counts as 0 in the running total)
+    def ops(df: DataFrame): Seq[DataFrame] = Seq(
+      Pipeline.runningTotal(df, col("v"), "cum", col("id")).select("id", "cum"),
+      Pipeline.globalPosition(df, "pos", col("id")).select("id", "pos"),
+      Relational.skyline2D(df, col("x"), col("y")))
+    def references(df: DataFrame): Seq[DataFrame] = Seq(
+      df.select(col("id"), sum(coalesce(col("v"), lit(0L))).over(Window
+        .orderBy("id").rowsBetween(Window.unboundedPreceding, 0)).as("cum")),
+      df.select(col("id"), row_number().over(Window.orderBy("id"))
+        .cast("long").as("pos")),
+      Relational.skylineByGroup(df.withColumn("g", lit(0)), col("g"),
+        col("x"), col("y")).drop("grp"))
+    def rowsOf(df: DataFrame) =
+      df.orderBy(df.columns.map(col).toSeq: _*).collect().toSeq
+
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def check(label: String, df: DataFrame): Seq[DataFrame] = {
+      org.apache.spark.GraftTestBridge.drainListeners(sc)
+      val before = jobs.get
+      val built = ops(df)
+      org.apache.spark.GraftTestBridge.drainListeners(sc)
+      assert(jobs.get - before === 0, s"$label: building started jobs")
+      val want = references(df).map(rowsOf)
+      spark.catalog.clearCache() // between construction and action
+      built.zip(want).zipWithIndex.foreach { case ((got, ref), i) =>
+        assert(rowsOf(got) === ref, s"$label: operator $i")
+        assert(rowsOf(got) === ref, s"$label: operator $i, second collect")
+      }
+      built
+    }
+
+    // AQE coalescing forced on (64 MB advisory: every partition merges
+    // into one read) and off (1 byte), and AQE disabled
+    val modes = Seq("coalesced" -> ("true", "64m"),
+      "uncoalesced" -> ("true", "1b"), "no AQE" -> ("false", "64m"))
+    def confs(parts: Int, aqe: String, advisory: String) = Map(
+      "spark.sql.shuffle.partitions" -> parts.toString,
+      "spark.sql.adaptive.enabled" -> aqe,
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory,
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b")
+    val saved = confs(0, "", "").keys.map(k => k -> spark.conf.getOption(k))
+    sc.addSparkListener(listener)
+    try {
+      for (parts <- Seq(1, 3, 64); (mode, (aqe, advisory)) <- modes) {
+        confs(parts, aqe, advisory).foreach { case (k, v) => spark.conf.set(k, v) }
+        val built = check(s"$parts partitions, $mode", data)
+        if (mode == "coalesced" && parts > 1) {
+          built.head.collect()
+          val p = built.head.queryExecution.executedPlan.toString
+          assert(p.contains("AQEShuffleRead coalesced"), p)
+        }
+        check(s"$parts partitions, $mode, empty input", empty)
+      }
+    } finally {
+      sc.removeSparkListener(listener)
+      saved.foreach { case (k, v) =>
+        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     }
   }
 

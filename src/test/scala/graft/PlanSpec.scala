@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.ExplainMode
   * dim joins broadcast, top-k avoids a global sort.
   */
 class PlanSpec extends GraftSuite {
+  import PlanSpec.allNodes
 
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
@@ -47,7 +48,6 @@ class PlanSpec extends GraftSuite {
   test("q3's customer join broadcasts from stats, not a forced hint") {
     import org.apache.spark.sql.catalyst.optimizer.BuildLeft
     import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     val df = SparkEntry.queries("q3_shipping_priority")(spark, sf)
     // customer scales with SF: a forced broadcast would fail outright at
@@ -60,16 +60,6 @@ class PlanSpec extends GraftSuite {
     // build side outputs c_custkey — any other relation broadcasting would
     // not satisfy this).
     df.collect()
-    // Walk through AQE wrappers: query stages (incl. Spark 4's
-    // ResultQueryStage) are leaf nodes, so a plain collect() never
-    // descends into them.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.QueryStageExec
-    def allNodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
-      case q: QueryStageExec => q +: allNodes(q.plan)
-      case other => other +: other.children.flatMap(allNodes)
-    }
     val custBroadcast = allNodes(df.queryExecution.executedPlan).collect {
       case b: BroadcastHashJoinExec =>
         val build = if (b.buildSide == BuildLeft) b.left else b.right
@@ -204,15 +194,8 @@ class PlanSpec extends GraftSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val df = SparkEntry.queries("q21_suppliers_waiting")(spark, sf)
       df.collect() // finalize the adaptive plan
-      import org.apache.spark.sql.execution.SparkPlan
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
       import org.apache.spark.sql.execution.window.WindowExec
-      def allNodes(p: SparkPlan): Seq[SparkPlan] = p match {
-        case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
-        case q: QueryStageExec => q +: allNodes(q.plan)
-        case other => other +: other.children.flatMap(allNodes)
-      }
       val nodes = allNodes(df.queryExecution.executedPlan)
       val windows = nodes.collect { case w: WindowExec => w }
       assert(windows.size === 1,
@@ -256,13 +239,6 @@ class PlanSpec extends GraftSuite {
     // q18's IN-subquery text plans lineitem twice (outer join-agg + the
     // left-semi HAVING leg); the agg-first rewrite must keep it at ONE
     // scan, with the >150 filter applied post-agg before any join.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def allNodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
-      case q: QueryStageExec => q +: allNodes(q.plan)
-      case other => other +: other.children.flatMap(allNodes)
-    }
     val df18 = SparkEntry.queries("q18_large_volume")(spark, sf)
     df18.collect()
     val n18 = allNodes(df18.queryExecution.executedPlan)
@@ -296,16 +272,9 @@ class PlanSpec extends GraftSuite {
     // breaks either property, the round-14 rewrite probe (semi-join the
     // part keys into the fact below the agg) becomes worth re-measuring;
     // as measured it LOST at ×1/×10/×30.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.catalyst.plans.LeftSemi
-    def allNodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
-      case q: QueryStageExec => q +: allNodes(q.plan)
-      case other => other +: other.children.flatMap(allNodes)
-    }
     val df = SparkEntry.queries("q20_part_promotion")(spark, sf)
     df.collect() // finalize the adaptive plan
     val nodes = allNodes(df.queryExecution.executedPlan)
@@ -350,31 +319,28 @@ class PlanSpec extends GraftSuite {
     assert(offenders.isEmpty, s"unexpected cartesian products: $offenders")
   }
 
+  // The prefix sums must never funnel through one task — the one-task
+  // global window was the original hazard — nor shuffle twice: the old
+  // Window.partitionBy(_pid) phase 2 made Spark insert a SECOND
+  // full-data Exchange hashpartitioning(_pid) after the range shuffle.
+  private def assertOnePrefixScanStage(q: String): Unit = {
+    val df = SparkEntry.queries(q)(spark, sf)
+    df.collect()
+    val bad = PlanSpec.prefixScanViolations(df)
+    assert(bad.isEmpty, s"$q: ${bad.mkString("; ")}")
+    assert(!plan(df).contains("SinglePartition"), s"$q:\n${plan(df)}")
+  }
+
   test("pl3 context packing plans no single-partition stage, no pid re-shuffle") {
-    // The two-phase prefix sum must never funnel through one task — the
-    // one-task global window was the original hazard — and since round 16
-    // phase 2 is a partition-local sort + sequential pass (MapPartitions)
-    // instead of a Window: the old Window.partitionBy(_pid) form made
-    // Spark insert a SECOND full-data Exchange hashpartitioning(_pid)
-    // after the range shuffle (plan-verified).
-    val p = plan(SparkEntry.queries("pl3_context_packing")(spark, sf))
-    assert(p.contains("MapPartitions"), p)
-    assert(!p.contains("SinglePartition"), p)
-    assert(!p.contains("hashpartitioning(_pid"), p)
+    assertOnePrefixScanStage("pl3_context_packing")
   }
 
   test("pl2 shuffle position plans no single-partition or pid re-shuffle stage") {
-    val p = plan(SparkEntry.queries("pl2_deterministic_shuffle")(spark, sf))
-    assert(p.contains("MapPartitions"), p)
-    assert(!p.contains("SinglePartition"), p)
-    assert(!p.contains("hashpartitioning(_pid"), p)
+    assertOnePrefixScanStage("pl2_deterministic_shuffle")
   }
 
   test("pl5 vocabulary id assignment plans no single-partition or pid re-shuffle stage") {
-    val p = plan(SparkEntry.queries("pl5_vocabulary")(spark, sf))
-    assert(p.contains("MapPartitions"), p)
-    assert(!p.contains("SinglePartition"), p)
-    assert(!p.contains("hashpartitioning(_pid"), p)
+    assertOnePrefixScanStage("pl5_vocabulary")
   }
 
   test("event analytics and trending windows are partitioned, never single-task") {
@@ -395,75 +361,39 @@ class PlanSpec extends GraftSuite {
   }
 
   test("skyline, transitions, boilerplate strip plan no single-task stage") {
-    // o7: the two-phase running min must keep its window partition-local
-    // (the naive skyline is a global-order window); ev5: the lag window
-    // partitions by user and the normalizer by from_type; ta14: the
-    // rebuild is an aggregation, not a window at all.
-    // o7's plan since round 20 is the runningSumPass shape: a
-    // partition-local MapPartitions running min with the fingerprint
-    // guard in-stream — no window, no guard cross-join, asserted below.
+    // ev5: the lag window partitions by user and the normalizer by
+    // from_type; ta14: the rebuild is an aggregation, not a window at all.
     Seq("ev5_transition_matrix").foreach { q =>
       val p = plan(SparkEntry.queries(q)(spark, sf))
       assert(p.contains("Window"), s"$q:\n$p")
       assert(!p.contains("SinglePartition"), s"$q:\n$p")
     }
-    // ev10 rides runningTotal, which since round 16 plans a partition-
-    // local MapPartitions pass instead of any window
-    Seq("ev10_user_growth").foreach { q =>
-      val p = plan(SparkEntry.queries(q)(spark, sf))
-      assert(p.contains("MapPartitions"), s"$q:\n$p")
-      assert(!p.contains("SinglePartition"), s"$q:\n$p")
-      assert(!p.contains("hashpartitioning(_pid"), s"$q:\n$p")
-    }
     val p = plan(SparkEntry.queries("ta14_boilerplate_strip")(spark, sf))
     assert(!p.contains("SinglePartition"), p)
-    // ev13 carries a LEGITIMATE SinglePartition (the 1-row grand-total
-    // merge every ungrouped aggregate ends with), so the blanket string
-    // check is too strict — assert the precise property instead: no
-    // WINDOW stage runs single-partition.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    // The global-order operators — running sum (ev10, ev13, weighted
+    // median), rank (ev13, equi-depth) and the skyline's running min
+    // (o7) — each plan one PrefixScanExec over exactly one range
+    // exchange: no cached frame, no window, no single-partition stage.
+    Seq("ev10_user_growth", "o7_skyline").foreach(assertOnePrefixScanStage)
+    // ev13, agg_equidepth and agg_weighted_median end with a LEGITIMATE
+    // SinglePartition (the 1-row grand-total merge every ungrouped
+    // aggregate ends with), and ev13 reads its pinned user rollup, so
+    // their shape is asserted beneath each scan; any window elsewhere
+    // must be partitioned.
     import org.apache.spark.sql.execution.window.WindowExec
-    def allNodes(pl: SparkPlan): Seq[SparkPlan] = pl match {
-      case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
-      case q: QueryStageExec => q +: allNodes(q.plan)
-      case other => other +: other.children.flatMap(allNodes)
-    }
-    // the same precise property gates every two-phase global-order op:
-    // rank (ev13, equi-depth), running sum (ev13, weighted median).
-    // Since round 16 the prefix sums plan NO window at all (partition-
-    // local MapPartitions pass) — so the property is: ANY window that
-    // remains must be partitioned, and no _pid re-shuffle sneaks in.
     Seq("ev13_lorenz_curve", "agg_equidepth", "agg_weighted_median")
       .foreach { q =>
         val df = SparkEntry.queries(q)(spark, sf)
         df.collect()
-        val nodes = allNodes(df.queryExecution.executedPlan)
-        nodes.collect { case w: WindowExec => w }.foreach { w =>
+        val bad = PlanSpec.prefixScanViolations(df,
+          pinnedInput = q == "ev13_lorenz_curve")
+        assert(bad.isEmpty, s"$q: ${bad.mkString("; ")}")
+        allNodes(df.queryExecution.executedPlan).collect {
+          case w: WindowExec => w }.foreach { w =>
           assert(w.partitionSpec.nonEmpty,
             s"$q window must be partitioned, got: $w")
         }
-        assert(!df.queryExecution.executedPlan.toString
-            .contains("hashpartitioning(_pid"),
-          s"$q re-shuffled on _pid")
       }
-    // o7_skyline: since round 20 the running min is a partition-local
-    // MapPartitions pass with the fingerprint guard IN-STREAM (the
-    // runningSumPass shape) — no window at all, no _pid re-shuffle, and
-    // the old 1-row guard aggregate's SinglePartition is gone with the
-    // second scan it rode on.
-    locally {
-      val df = SparkEntry.queries("o7_skyline")(spark, sf)
-      df.collect()
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("MapPartitions"),
-        s"o7_skyline must plan the running-min MapPartitions pass:\n$p")
-      assert(!p.contains("hashpartitioning(_pid"),
-        s"o7_skyline re-shuffled on _pid:\n$p")
-      assert(allNodes(df.queryExecution.executedPlan)
-          .collect { case w: WindowExec => w }.isEmpty,
-        s"o7_skyline must not window (in-stream guarded pass):\n$p")
-    }
     graft.ops.Pipeline.releaseCaches()
   }
 
@@ -479,22 +409,15 @@ class PlanSpec extends GraftSuite {
   test("late-round-7 window ops are keyed, never single-task") {
     // ev18 sessionize lag/sum windows partition by user; dd19's election
     // window by cluster — every window must stay keyed. (pl18 rides
-    // globalPosition's two-phase scheme, whose precise WindowExec
-    // property is asserted in the ev13 test above.)
+    // globalPosition's prefix scan, whose plan shape is asserted in the
+    // ev13 test above.)
     Seq("ev18_sessions", "dd19_cluster_reps")
       .foreach { q =>
         val p = plan(SparkEntry.queries(q)(spark, sf))
         assert(p.contains("Window"), s"$q:\n$p")
         assert(!p.contains("SinglePartition"), s"$q:\n$p")
       }
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.window.WindowExec
-    def allNodes(pl: SparkPlan): Seq[SparkPlan] = pl match {
-      case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
-      case q: QueryStageExec => q +: allNodes(q.plan)
-      case other => other +: other.children.flatMap(allNodes)
-    }
     // pl19/pl21's ungrouped min-target aggregate legitimately merges on
     // one row (the ev13 exemption) — assert the precise property
     // instead: every WINDOW stage is partitioned
@@ -658,5 +581,61 @@ class PlanSpec extends GraftSuite {
     // Codegen stages render as `*(n)` prefixes in the plan string.
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("*("), p)
+  }
+}
+
+object PlanSpec {
+  import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+  import org.apache.spark.sql.execution.SparkPlan
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+  import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+  import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+  import org.apache.spark.sql.execution.window.WindowExec
+
+  /** Every node of an executed plan. Walks through AQE wrappers: query
+    * stages (incl. Spark 4's ResultQueryStage) are leaf nodes, so a plain
+    * collect() never descends into them; `throughReuse` also walks into
+    * the exchange a ReusedExchange stands for. */
+  def allNodes(p: SparkPlan, throughReuse: Boolean = false): Seq[SparkPlan] = {
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => q +: walk(q.plan)
+      case r: ReusedExchangeExec if throughReuse => r +: walk(r.child)
+      case other => other +: other.children.flatMap(walk)
+    }
+    walk(p)
+  }
+
+  /** How an executed `df` departs from the prefix-scan plan shape:
+    * it must hold a PrefixScanExec, and beneath each one exactly one
+    * range exchange (a reused one counts once), no window and no
+    * single-partition exchange, and no cached frame — or, with
+    * `pinnedInput`, only cached frames that hold no range partitioning
+    * (an operator's reuse pin, not a prefix-scan cache). */
+  def prefixScanViolations(
+      df: DataFrame, pinnedInput: Boolean = false): Seq[String] = {
+    def ranged(nodes: Seq[SparkPlan]) = nodes.collect {
+      case e: ShuffleExchangeExec
+        if e.outputPartitioning.isInstanceOf[RangePartitioning] => e }
+    val scans = allNodes(df.queryExecution.executedPlan).collect {
+      case s: graft.plans.PrefixScanExec => s }
+    if (scans.isEmpty) return Seq("no PrefixScanExec in the plan")
+    scans.flatMap { s =>
+      val nodes = allNodes(s.child, throughReuse = true)
+      val cached = nodes.collect { case c: InMemoryTableScanExec => c }
+      Seq(
+        Option.when(ranged(nodes).size != 1)(
+          s"${ranged(nodes).size} range exchanges beneath $s"),
+        Option.when(nodes.exists(_.isInstanceOf[WindowExec]))(
+          s"a window beneath $s"),
+        Option.when(nodes.exists {
+          case e: ShuffleExchangeExec => e.outputPartitioning == SinglePartition
+          case _ => false
+        })(s"a single-partition exchange beneath $s"),
+        Option.when(if (pinnedInput)
+            cached.exists(c => ranged(allNodes(c.relation.cachedPlan)).nonEmpty)
+          else cached.nonEmpty)(s"a cached frame beneath $s")
+      ).flatten
+    }
   }
 }

@@ -187,6 +187,17 @@ class SourcesSpec extends GraftSuite {
     assert(Tables.partsupp(s, d).storageLevel.useMemory)
   }
 
+  test("partsupp is cached again after a session-wide clearCache") {
+    // the memoized frame outlives its cache entry; without the re-cache
+    // every later partsupp query silently re-derived it from lineitem
+    val d = fixtureCopy()
+    val s = spark.newSession()
+    assert(Tables.partsupp(s, d).storageLevel.useMemory)
+    s.catalog.clearCache()
+    assert(Tables.partsupp(s, d).storageLevel.useMemory)
+    Tables.partsupp(s, d).unpersist(blocking = true)
+  }
+
   test("registerAll on an unchanged dir discovers no files") {
     import org.apache.spark.metrics.source.HiveCatalogMetrics.METRIC_FILES_DISCOVERED
     val d = fixtureCopy()

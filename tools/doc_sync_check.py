@@ -27,8 +27,10 @@ Checks
   4. Rewrite A/B quotes "qN A vs B s (xF)" in the same paragraph must
      match ABRW.json's rewrite/literal mins at the quoted precision.
   5. Both docs' "S/S specs": if target/test-reports/*.xml exists (a
-     fresh `sbt test`), S must equal the summed test count; otherwise
-     the spec count is reported but not enforced (stale target/ would
+     fresh `sbt test`), S must equal the summed test count of the
+     reports whose suite class is still defined under src/test/scala
+     (a deleted suite's old report is skipped); otherwise the spec
+     count is reported but not enforced (stale target/ would
      false-alarm).
 
 Usage: python3 tools/doc_sync_check.py   (from the repo root)
@@ -83,11 +85,28 @@ n_bad = n_total - n_exact - n_rows_only
 if n_bad:
     fail(f"{corr_name} has {n_bad} non-exact oracle rows — fix those first")
 
+def live_suites():
+    """Fully qualified names of the classes defined under src/test/scala."""
+    names = set()
+    for path in glob.glob(os.path.join(ROOT, "src/test/scala/**/*.scala"),
+                          recursive=True):
+        src = open(path).read()
+        pkg = re.search(r"^package\s+([\w.]+)", src, re.M)
+        prefix = pkg.group(1) + "." if pkg else ""
+        names.update(prefix + c for c in re.findall(r"\bclass\s+(\w+)", src))
+    return names
+
+
 spec_total = None
-reports = glob.glob(os.path.join(ROOT, "target/test-reports/*.xml"))
+reports = glob.glob(os.path.join(ROOT, "target/test-reports/TEST-*.xml"))
 if reports:
     spec_total = 0
+    live = live_suites()
     for r in reports:
+        suite = os.path.basename(r)[len("TEST-"):-len(".xml")]
+        if suite not in live:
+            print(f"[skip ] {os.path.basename(r)}: no such suite in src/test/scala")
+            continue
         m = re.search(r'tests="(\d+)"', open(r).read())
         if m:
             spec_total += int(m.group(1))
