@@ -20,23 +20,12 @@ object PlanDump {
     val spark = Bench.session("graft-plandump")
     Tables.tpch.foreach { t => Tables.load(spark, sfDir, t).cache().count() }
 
-    val llmSuite = Seq(
-      "dd1_exact_dedup", "dd3_minhash_dup_pairs", "dd12_repeated_chunks",
-      "dd16_sorted_neighborhood", "ta2_quality_score", "ta16_gopher_rules",
-      "ta14_boilerplate_strip", "ta18_sentence_dedup", "ss4_ivf_topk",
-      "pl3_context_packing", "ev5_transition_matrix", "ev16_rolling_wau",
-      "pl21_corpus_pipeline", "ev18_sessions", "dd22_bloom_ingest_gate",
-      "mm7_scene_cuts", "pl26_shard_plan", "ta26_lexical_diversity",
-      "ss18_mmr_topk", "dd24_semantic_decontamination",
-      "ss19_rocchio_expand", "pl27_source_interleave", "dd25_ingest_pipeline",
-      "dd26_dup_spans", "pl29_source_caps", "ev26_contribution_cap",
-      "dd27_lsh_signal_agreement", "dd28_sorted_neighborhood_hashed",
-      "ta22_hashed_classifier")
     val tpch = graft.queries.TpchQueries.queries.keys.toSeq
       .sortBy(n => n.drop(1).takeWhile(_.isDigit).toInt)
     val targets: Seq[String] =
       if (args.length > 2) args.drop(2).toSeq
-      else (Bench.headline ++ tpch ++ llmSuite).distinct
+      else (Bench.headline ++ tpch ++
+        Bench.llm.filterNot(_ == "ss20_serve")).distinct
 
     val dir = java.nio.file.Paths.get(outDir)
     java.nio.file.Files.createDirectories(dir)

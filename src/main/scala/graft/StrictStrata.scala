@@ -73,16 +73,8 @@ object StrictStrata {
         (System.nanoTime() - t0) / 1e9}%.1f s")
       graft.ops.Pipeline.releaseCaches()
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = names.map(k => s"${q(k)}: ${q(SparkEntry.oracleSql(k))}")
+    val json = names.map(k =>
+        s"${Verify.jsonString(k)}: ${Verify.jsonString(SparkEntry.oracleSql(k))}")
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     System.err.println(s"[strata] wrote $outDir/oracle_sql.json — now run:" +

@@ -146,16 +146,16 @@ object Dedup {
       shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8,
       threshold: Double = 0.6): DataFrame = {
     val r = numHashes / bands
-    // Materialized once: the signature+shingle computation feeds both the
-    // band join and the verification join; without persist the whole
-    // hash pipeline would be recomputed for each of the three scans.
-    val prepared = docs.select(
+    // Pinned: the signature+shingle frame feeds the band join and both
+    // verification joins, whose readers prune different columns, so no
+    // exchange is shared — unpinned, dd3's plan scans the documents 3×
+    // and runs the hash pipeline per scan.
+    val prepared = Pipeline.pin(docs.select(
       id.as("mh_id"),
       wordShinglesSorted(TextAnalysis.tokens(text), shingleN)
         .as("shingles"))
       .withColumn("sig", minhashSignature(col("shingles"), numHashes))
-      .withColumn("bkeys", bandKeys(col("sig"), bands, r))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("bkeys", bandKeys(col("sig"), bands, r)))
     val pairs = lshCandidatePairs(
       prepared.select(col("mh_id"), col("bkeys")), "mh_id", "bkeys")
     val sets = prepared.select(col("mh_id"), col("shingles"))
@@ -192,9 +192,11 @@ object Dedup {
   def simhashNearDupPairs(
       docs: DataFrame, id: Column, text: Column,
       maxHamming: Int = 3): DataFrame = {
-    val sigs = docs.select(id.as("sh_id"),
-      simhash64(TextAnalysis.tokens(text)).as("sim"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // Pinned: both sides of the chunk self-join read the signatures, and
+    // with broadcast joins on they share no exchange — unpinned, dd8's
+    // plan scans and hashes the documents twice.
+    val sigs = Pipeline.pin(docs.select(id.as("sh_id"),
+      simhash64(TextAnalysis.tokens(text)).as("sim")))
     val buckets = sigs.select(col("sh_id"), col("sim"),
       posexplode(simhashChunks(col("sim"))).as(Seq("chunk_idx", "chunk")))
     buckets.alias("a")
@@ -254,10 +256,14 @@ object Dedup {
     val guarded = ScaleGuard.maxRowsDeferred(docs, maxRows,
       "jaccardSimilarityJoin is a labeled oracle baseline - use " +
         "minhashNearDupPairs at scale")
-    val base = guarded.select(id.as("sj_id"), charNgrams(text, n).as("grams0"))
+    // Pinned: the gram frame feeds the df count, the rarity re-sort and
+    // both verification joins under different column prunings, so no
+    // exchange is shared — unpinned, dd7's plan builds the grams twice
+    // (4 document scans instead of 2).
+    val base = Pipeline.pin(guarded.select(id.as("sj_id"),
+        charNgrams(text, n).as("grams0"))
       .withColumn("grams", array_sort(col("grams0")))
-      .withColumn("sz", size(col("grams")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("sz", size(col("grams"))))
     val exploded = base.select(col("sj_id"), col("sz"),
       explode(col("grams0")).as("g"))
     val freq = exploded.groupBy("g").agg(count(lit(1)).as("df"))
@@ -524,12 +530,11 @@ object Dedup {
       window: Int = 5, n: Int = 3, threshold: Double = 0.5): DataFrame = {
     require(window >= 2, "window must be >= 2")
     val cand = sortedNeighborhoodCandidates(docs, id, sortKey, window)
+    // the gram side is built once: its second reader is a ReusedExchange
     val grams = docs.select(id.as("g_id"),
         graft.functions.Ngrams.char_ngram_hashes_sorted(lower(text), n)
           .as("g"))
       .withColumn("gsz", size(col("g")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Pipeline.pin(grams)
     def side(tag: String) = grams.select(col("g_id").as(s"id_$tag"),
       col("g").as(s"g_$tag"), col("gsz").as(s"sz_$tag"))
     cand
@@ -578,10 +583,9 @@ object Dedup {
     val base = docs.select(id.as("g_id"),
         charNgramsSorted(text, n).as("g"))
       .withColumn("gsz", size(col("g")))
-    val grams = (if (preGate) base.withColumn("gmask", gramMask(col("g")))
-      else base)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Pipeline.pin(grams) // reuse only; released by releaseCaches
+    // built once: the second side's reader is a ReusedExchange
+    val grams = if (preGate) base.withColumn("gmask", gramMask(col("g")))
+      else base
     def side(tag: String) = grams.select(Seq(
         col("g_id").as(s"id_$tag"), col("g").as(s"g_$tag"),
         col("gsz").as(s"sz_$tag")) ++
@@ -916,20 +920,18 @@ object Dedup {
       shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8,
       threshold: Double = 0.5): DataFrame = {
     val r = numHashes / bands
-    def prepared(df: DataFrame, pfx: String): DataFrame = df.select(
+    // Pinned: each side feeds the band join and the verification join,
+    // whose readers prune different columns, so no exchange is shared —
+    // unpinned, each side's minhash pipeline runs twice (4 scans).
+    def prepared(df: DataFrame, pfx: String): DataFrame = Pipeline.pin(
+      df.select(
         id.as(s"${pfx}_id"),
         wordShinglesSorted(TextAnalysis.tokens(text), shingleN)
           .as(s"${pfx}_sh"))
       .withColumn(s"${pfx}_bkeys",
-        bandKeys(minhashSignature(col(s"${pfx}_sh"), numHashes), bands, r))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        bandKeys(minhashSignature(col(s"${pfx}_sh"), numHashes), bands, r)))
     val ex = prepared(existing, "ex")
     val in = prepared(incoming, "in")
-    // pinned → released by Pipeline.releaseCaches after the consuming
-    // action, so repeated per-batch ingest calls (and the multi-hundred-
-    // query verify session) don't accumulate cache entries for the session
-    Pipeline.pin(ex)
-    Pipeline.pin(in)
     val cand = in.select(col("in_id"), explode(col("in_bkeys")).as("bkey"))
       .join(ex.select(col("ex_id"), explode(col("ex_bkeys")).as("bkey")),
         "bkey")
@@ -1101,17 +1103,13 @@ object Dedup {
   def signalAgreement(signals: Seq[(String, DataFrame)]): DataFrame = {
     val spark = signals.head._2.sparkSession
     import spark.implicits._
-    // persist the tagged union: it feeds the sizes aggregate AND both
-    // sides of the overlap self-join, and its leaves are the EXPENSIVE
-    // pair generators (trigram Jaccard, containment) — unpinned, those
-    // re-ran up to 3× (the honest Force-timed dd23 read 18.1 s at sf0.1;
-    // the same union-branch no-reuse class as funnel/lorenzCurve,
-    // round-16 review). Pinned via Pipeline.pin (caller-scoped), harness-released.
+    // the tagged union feeds the sizes aggregate AND both sides of the
+    // overlap self-join; each leaf's distinct ends in an exchange, so the
+    // expensive pair generators under it run once and the other readers
+    // are ReusedExchanges
     val tagged = signals.map { case (name, df) =>
       df.select(lit(name).as("sig"), col("id_a"), col("id_b")).distinct()
     }.reduce(_.unionByName(_))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Pipeline.pin(tagged)
     val sizes = tagged.groupBy("sig").agg(count(lit(1)).as("n"))
     val names = signals.map(_._1).toDF("sig")
     val common = tagged.alias("x")

@@ -62,18 +62,13 @@ object EventAnalytics {
                   maxGapUs)
             bounded.select(col("u"), col("t"))
           }
-        // persist each stage's (distinct-user-sized) completion frame:
+        // pin each stage's (distinct-user-sized) completion frame:
         // stage i+1 joins on it AND the final union counts it, and the
         // union's branches do NOT share the chained subplans (plan-
         // verified: 1 of 22 exchanges reused — AQE re-plans each branch)
         // — so without the pin stage i's filter+agg re-ran once per later
-        // stage, O(k²) scans of the event log for a k-step funnel
-        // (round-16 review). Pinned via Pipeline.pin (caller-scoped); released by the
-        // harness (or the library caller) after the consuming action.
-        val completed = reached.groupBy("u").agg(min(col("t")).as("t"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        Pipeline.pin(completed)
-        acc :+ completed
+        // stage: ev1's plan scans the event log 5× instead of once.
+        acc :+ Pipeline.pin(reached.groupBy("u").agg(min(col("t")).as("t")))
       }
     val counts = completions.zipWithIndex.map { case (df, i) =>
       df.agg(count(lit(1)).as("users"))
@@ -604,16 +599,11 @@ object EventAnalytics {
     * even with a billion users; the grand total is a 1-row broadcast. */
   def lorenzCurve(
       events: DataFrame, userCol: String): DataFrame = {
-    // persist the user-grain rollup: it feeds globalPosition AND
-    // runningTotal (whose subtotal jobs run separately from the emitting
-    // job) AND the grand-total branch, so without the pin the event
-    // corpus is scanned and user-shuffled once per reader. Reuse only:
-    // an evicted rollup is recomputed, never wrong. Pinned via
-    // Pipeline.pin (caller-scoped, released by releaseCaches).
+    // the user-grain rollup feeds globalPosition, runningTotal and the
+    // grand total inside one plan: the events are scanned and
+    // user-shuffled once, and the other readers are ReusedExchanges
     val per = events.groupBy(col(userCol))
       .agg(count(lit(1)).as("n_events"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Pipeline.pin(per)
     val order = Seq(col("n_events").desc, col(userCol).asc)
     val ranked = Pipeline.globalPosition(per, "rank", order: _*)
       .select(col(userCol), col("rank"))

@@ -544,21 +544,15 @@ object Multimodal {
       maxHamming: Int = 3): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("media_id").orderBy("frame_idx")
-    // persist: both sides of the chunk-bucket self-join derive from this
-    // frame — without the pin the mapPartitions decode+aHash pass (and
-    // the lag window) would execute twice, a double full decode of the
-    // video corpus. Pinned via Pipeline.pin (caller-scoped); the caller (harness OR
-    // direct library user) must invoke Pipeline.releaseCaches() after
-    // the action consuming the result, else the persisted keyframe frame
-    // leaks for the session (see the releaseCaches caller contract).
+    // both sides of the chunk-bucket self-join derive from this frame;
+    // the decode+aHash pass and the lag window run once, and the second
+    // side reads a ReusedExchange
     val keyframes = frameHashes(media, maxFrames)
       .withColumn("prev_hash", lag(col("ahash"), 1).over(w))
       .filter(col("prev_hash").isNull ||
         bit_count(col("ahash").bitwiseXOR(col("prev_hash")))
           .cast("int") >= cutThreshold)
       .select("media_id", "frame_idx", "ahash")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Pipeline.pin(keyframes)
     val chunks = array((0 until 4).map(c =>
       shiftright(col("ahash"), c * 16).bitwiseAND(lit(0xffffL))): _*)
     val buckets = keyframes.select(col("media_id"), col("frame_idx"),

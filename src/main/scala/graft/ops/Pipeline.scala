@@ -56,9 +56,6 @@ object Pipeline {
     * single-harness behavior, unchanged. */
   private[graft] val defaultScope = new PinScope
 
-  /** Back-compat alias for specs/tools that inspect the default queue. */
-  private[graft] def pinned: PinScope = defaultScope
-
   /** The scope pins currently route to. DynamicVariable rides an
     * InheritableThreadLocal, so the binding holds across the operator
     * call stack on the caller's thread (where graft operators persist
@@ -68,10 +65,18 @@ object Pipeline {
   private val currentScope =
     new scala.util.DynamicVariable[PinScope](defaultScope)
 
-  /** Pin `df` into the caller's current scope (the operator-side entry
-    * point — every graft operator that persists an intermediate calls
-    * this instead of touching a queue directly). */
-  private[graft] def pin(df: DataFrame): Unit = currentScope.value.add(df)
+  /** The one way an operator keeps an intermediate past the consuming
+    * action: persist `df` at MEMORY_AND_DISK, add it to the caller's
+    * current scope, and return the persisted frame. Pin only a subtree
+    * the final plan cannot share by itself — Catalyst's exchange reuse
+    * already computes a subtree once when both readers sit in one query
+    * under plan-identical exchanges. */
+  private[graft] def pin(df: DataFrame): DataFrame = {
+    val persisted =
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    currentScope.value.add(persisted)
+    persisted
+  }
 
   /** Run `body` with all graft pins routed to `scope`. The caller owns
     * the token: release it with `scope.release()` AFTER the actions
@@ -81,20 +86,22 @@ object Pipeline {
   def withScope[T](scope: PinScope)(body: => T): T =
     currentScope.withValue(scope)(body)
 
-  /** Unpersist every frame pinned into the DEFAULT scope (multimodal
-    * keyframes, dedup gram tables, the Lorenz user rollup, … when called
-    * without [[withScope]]). Call AFTER the action(s) consuming their
-    * results; releasing earlier only costs a recompute of the pinned
-    * stage.
+  /** Unpersist every frame pinned into the DEFAULT scope (the LSH
+    * signature frames, the funnel's stage completions, the k-hop
+    * adjacency, … when called without [[withScope]]). Call AFTER the
+    * action(s) consuming their results; releasing earlier only costs a
+    * recompute of the pinned stage.
     *
     * CALLER CONTRACT for direct library use: a session that invokes a
     * pinning operator and never releases leaks one persisted frame per
     * call (Spark's LRU bounds the memory, but disk blocks and
-    * cache-manager entries persist for the session). The harness loops
-    * (graft.Verify, graft.Bench, graft.ScaleCurve) call it between
-    * queries so a full-catalog session ends with zero graft-pinned cache
-    * entries; long-lived library callers should do the same after each
-    * consuming action.
+    * cache-manager entries persist for the session). Every operator
+    * persist that outlives its operator goes through [[pin]], so the
+    * harness loops (graft.Verify, graft.Bench, graft.ScaleCurve), which
+    * call this between queries, end a full-catalog session with zero
+    * graft-pinned cache entries (PipelineSpec checks it per pinning
+    * operator); long-lived library callers should do the same after
+    * each consuming action.
     *
     * CONCURRENCY: this releases ONLY the default scope. Concurrent
     * pipelines in one JVM isolate themselves with [[withScope]] — their

@@ -564,10 +564,12 @@ object Similarity {
   def srpNearDupPairs(
       df: DataFrame, idCol: String, vecCol: String, threshold: Double,
       tables: Int = 16, bits: Int = 6, dim: Int = 64): DataFrame = {
-    val prepared = df.select(col(idCol).as("sim_id"), col(vecCol).as("vec"),
-        norm(col(vecCol)).as("nrm"),
-        srpBuckets(col(vecCol), tables, bits, dim).as("buckets"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // Pinned: the bucket self-join and both verification joins read this
+    // frame under different column prunings, so no exchange is shared —
+    // unpinned, dd9's plan scans the embeddings 3×.
+    val prepared = Pipeline.pin(df.select(col(idCol).as("sim_id"),
+        col(vecCol).as("vec"), norm(col(vecCol)).as("nrm"),
+        srpBuckets(col(vecCol), tables, bits, dim).as("buckets")))
     val keyed = prepared.select(col("sim_id"), explode(col("buckets")).as("tb"))
     val candidates = keyed.alias("a")
       .join(keyed.alias("b"),
@@ -1006,12 +1008,10 @@ object Similarity {
     val spark = corp.sparkSession
     import spark.implicits._
     val coarseDf = broadcast(coarse.toDF("cid", "cvec"))
-    val residuals = kmeansAssign(corp, coarse)
+    val residuals = Pipeline.pin(kmeansAssign(corp, coarse)
       .join(coarseDf, "cid")
       .withColumn("rvec", vecSub(col("vec"), col("cvec")))
-      .select("vec_id", "cid", "rvec")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Pipeline.pin(residuals)
+      .select("vec_id", "cid", "rvec"))
     // Shared per-subspace residual codebooks — ALL m trained together
     // in one pass per Lloyd round (see [[trainSubspaceBooks]]).
     val books: Seq[Seq[Seq[Double]]] =
@@ -1022,11 +1022,9 @@ object Similarity {
         sqDist(slice(col("rvec"), j * sub + 1, sub), litVec(c))): _*)
       (array_position(dists, array_min(dists)) - 1).cast("int")
     }
-    val encoded = residuals.select(
+    val encoded = Pipeline.pin(residuals.select(
       col("vec_id") +: col("cid") +:
-        (0 until m).map(j => codeExpr(j).as(s"_c$j")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Pipeline.pin(encoded)
+        (0 until m).map(j => codeExpr(j).as(s"_c$j")): _*))
     IvfPqModel(coarse, books, encoded, residuals, m, sub)
   }
 

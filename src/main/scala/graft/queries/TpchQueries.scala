@@ -541,19 +541,15 @@ object TpchQueries extends QueryPack {
     // leg each re-aggregate the full fact scan — plan-verified, the
     // q2/q18 single-scan class). The Spark path aggregates ONCE into
     // the per-supplier frame (|suppliers| rows — persistable at any
-    // SF), pins it (both the max and the equality probe consume it —
-    // the union-branch no-reuse rule), takes the 1-row max as a
+    // SF), pins it (both the max and the equality probe consume it, and
+    // the final plan holds no ReusedExchange for the aggregate: unpinned,
+    // lineitem is aggregated twice), takes the 1-row max as a
     // broadcast, and filters by exact equality: revenue is the
     // long-quantized sum (guarded), so equal longs → equal doubles on
     // both engines and the max-equality join is exact, as the decimal
-    // form was. One fact scan, one suppkey shuffle.
-    // CONSTRUCTION-TIME SIDE EFFECT: the persist+pin below runs when
-    // this entry BUILDS its plan (no job — persist is lazy — but one
-    // pinned cache-manager entry per construction). A loop that
-    // constructs per rep (explain sweeps, bench harnesses) must release
-    // between constructions — the Bench/Verify loops do. Callers
-    // needing isolation from OTHER threads' release points wrap in
-    // Pipeline.withScope.
+    // form was. One fact scan, one suppkey shuffle. The pin registers
+    // its cache entry when the entry BUILDS its plan (persist is lazy);
+    // releaseCaches frees it like every other pin.
     "q15_top_supplier" -> ((s, d) => {
       val rev0 = Tables.lineitem(s, d)
         .filter(col("l_shipdate") >= lit("1999-01-01").cast("timestamp") &&
@@ -562,12 +558,10 @@ object TpchQueries extends QueryPack {
         .agg(quantSum(revExpr, 1e4).as("total_revenue"),
           max(abs(units(revExpr, 1e4))).as("_mu"),
           count(lit(1)).as("_n"))
-      val rev = rev0.withColumn("total_revenue",
+      val rev = graft.ops.Pipeline.pin(rev0.withColumn("total_revenue",
           quantGuarded(col("total_revenue"), col("_mu"), col("_n"),
             "double", "q15_top_supplier"))
-        .drop("_mu", "_n")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.ops.Pipeline.pin(rev)
+        .drop("_mu", "_n"))
       val mx = broadcast(rev.agg(max(col("total_revenue")).as("_mx")))
       rev.crossJoin(mx)
         .filter(col("total_revenue") === col("_mx"))

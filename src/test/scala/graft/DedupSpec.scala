@@ -331,7 +331,6 @@ class DedupSpec extends GraftSuite {
     assert(run(2) === Set((1L, 2L)))
     // window 3 reaches (1,4) at sort distance 2: J=6/13 ≥ 0.45
     assert(run(3) === Set((1L, 2L), (1L, 4L)))
-    graft.ops.Pipeline.releaseCaches()
   }
 
   test("sourceOverlapMatrix: gram-set jaccard, containments, zero pair") {
@@ -449,7 +448,6 @@ class DedupSpec extends GraftSuite {
     val gated = run(true)
     val full = run(false)
     assert(full.nonEmpty && gated === full)
-    graft.ops.Pipeline.releaseCaches()
   }
 
   test("jaccardGe and the mask-bound prune are lossless vs the full merge") {
@@ -509,7 +507,6 @@ class DedupSpec extends GraftSuite {
       docs, col("doc_id"), col("text"), key, window = 5, n = 3,
       threshold = 0.5))
     assert(str.nonEmpty && hashed === str)
-    graft.ops.Pipeline.releaseCaches()
   }
 
   test("charNgramHashesSorted = sorted distinct hashes of charNgramsSorted") {
@@ -763,12 +760,14 @@ class DedupSpec extends GraftSuite {
     val one = Dedup.signalAgreement(Seq("sa" -> dup, "sb" -> a))
       .collect().head
     assert(one.getLong(2) === 1L)
-    // the tagged union is pinned (its leaves are the expensive pair
-    // generators, consumed by sizes + both self-join sides — round-16
-    // review); releaseCaches frees it
-    assert(!graft.ops.Pipeline.pinned.isEmpty,
-      "signalAgreement must pin its tagged union")
-    graft.ops.Pipeline.releaseCaches()
+    // the tagged union feeds the sizes aggregate and both self-join
+    // sides: exchange reuse computes each pair set once, with no cache
+    val bad = PlanSpec.reuseViolations(spark, {
+        case l: org.apache.spark.sql.execution.LocalTableScanExec =>
+          l.output.exists(_.name == "id_a") // a pair set, not the names
+        case _ => false
+      }, inputs = 2)(Dedup.signalAgreement(Seq("sa" -> a, "sb" -> b)))
+    assert(bad.isEmpty, bad.mkString("; "))
   }
 
   test("bloomIngestGate: exact verdict survives a high-fp bloom; corpus never shuffles") {

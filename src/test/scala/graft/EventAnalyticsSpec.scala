@@ -236,20 +236,18 @@ class EventAnalyticsSpec extends GraftSuite {
     val got = EventAnalytics.lorenzCurve(events, "user_id")
       .orderBy("rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(3), r.getDouble(4)))
-    graft.ops.Pipeline.releaseCaches()
     assert(got.toSeq === Seq(
       (1L, 1L, 6L, 0.6), (2L, 2L, 9L, 0.9), (3L, 3L, 10L, 1.0)))
   }
 
-  test("funnel and lorenzCurve pin their reused frames; release frees them") {
+  test("funnel pins its stage completions; lorenzCurve shares its rollup by reuse") {
     import spark.implicits._
     // funnel: each stage's completion frame feeds BOTH the next stage's
     // join and the final union count, and union branches do not share
     // exchanges (plan-verified, 1 of 22 reused) — unpinned that is O(k²)
     // scans of the event log. lorenzCurve: the user-grain rollup feeds
-    // two prefix-sum offset jobs (separate actions — no cross-job
-    // exchange reuse) plus the grand total — three corpus scans unpinned
-    // (round-16 review).
+    // the rank, the running total and the grand total inside one plan,
+    // so exchange reuse computes it once with no cache.
     val cm = spark.sharedState.cacheManager
     graft.ops.Pipeline.releaseCaches()
     val cleanBefore = cm.isEmpty
@@ -260,10 +258,12 @@ class EventAnalyticsSpec extends GraftSuite {
       Seq("a", "b", "c")).count()
     assert(!cm.isEmpty, "funnel must pin per-stage completions")
     graft.ops.Pipeline.releaseCaches()
-    EventAnalytics.lorenzCurve(events, "user_id").count()
-    assert(!cm.isEmpty, "lorenzCurve must pin the user rollup")
-    graft.ops.Pipeline.releaseCaches()
     if (cleanBefore) assert(cm.isEmpty)
+    val bad = PlanSpec.reuseViolations(spark, _.isInstanceOf[
+        org.apache.spark.sql.execution.LocalTableScanExec]) {
+      EventAnalytics.lorenzCurve(events, "user_id")
+    }
+    assert(bad.isEmpty, bad.mkString("; "))
   }
 
   test("gapRegularity: metronome flagged as bot, bursty human is not") {

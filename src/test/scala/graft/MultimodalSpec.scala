@@ -290,15 +290,14 @@ class MultimodalSpec extends GraftSuite {
         ((r.getLong(2), r.getLong(3)))).toMap
     assert(got === Map((1L, 2L) -> ((1L, 0L))),
       s"expected exactly the shared-shot pair, got $got")
-    // caller contract (releaseCaches scaladoc): the operator pins its
-    // decoded-keyframe frame; the caller releases it after the consuming
-    // action, and the release drains the graft pin queue — a direct
-    // library caller that skips this leaks one persisted frame per call.
-    assert(!graft.ops.Pipeline.pinned.isEmpty,
-      "keyframeNearDups should have pinned its keyframe frame")
-    graft.ops.Pipeline.releaseCaches()
-    assert(graft.ops.Pipeline.pinned.isEmpty,
-      "releaseCaches must drain every graft-pinned frame")
+    // both sides of the chunk self-join read the keyframes: exchange
+    // reuse decodes the media once, with no cache
+    val bad = PlanSpec.reuseViolations(spark, _.isInstanceOf[
+        org.apache.spark.sql.execution.LocalTableScanExec]) {
+      Multimodal.keyframeNearDups(
+        m, maxFrames = 8, cutThreshold = 10, maxHamming = 3)
+    }
+    assert(bad.isEmpty, bad.mkString("; "))
   }
 
   test("audio fingerprint: gain-invariant envelope signature, near-dup join") {

@@ -227,21 +227,22 @@ class PipelineSpec extends GraftSuite {
 
   private lazy val events = Tables.events(spark, sf)
 
-  // lorenzCurve pins its user-grain rollup (reuse only): the pinning
+  // funnel pins each stage's completion frame (reuse only): the pinning
   // operator these lifecycle specs drive
-  private def lorenz() = graft.ops.EventAnalytics.lorenzCurve(events, "user_id")
+  private def funnel() = graft.ops.EventAnalytics.funnel(
+    events, "user_id", "ts", "event_type", Seq("view", "click", "purchase"))
 
   test("releaseCaches frees an operator's pinned frames after the action") {
     val cm = spark.sharedState.cacheManager
     Pipeline.releaseCaches() // drain pins left over from earlier tests
     val cleanBefore = cm.isEmpty
-    val curve = lorenz()
-    curve.count() // the consuming action
-    // the operator pinned its rollup
+    val stages = funnel()
+    stages.count() // the consuming action
+    // the operator pinned its stage completions
     assert(!cm.isEmpty)
-    assert(!Pipeline.pinned.isEmpty)
+    assert(!Pipeline.defaultScope.isEmpty)
     Pipeline.releaseCaches()
-    assert(Pipeline.pinned.isEmpty)
+    assert(Pipeline.defaultScope.isEmpty)
     // releasing drops the pin; when no other suite left caches behind,
     // the session's cache manager ends the run empty (the Verify-loop
     // contract: zero graft-pinned entries at exit)
@@ -255,7 +256,7 @@ class PipelineSpec extends GraftSuite {
     // callers on their own threads + a default-scope caller, interleaved
     // releases.
     // KNOWN LIMIT (pinned in the PinScope scaladoc): Spark's cache is
-    // plan-keyed, so these two callers — whose pinned rollups are
+    // plan-keyed, so these two callers — whose pinned completions are
     // identical — actually share ONE cache entry, and the FIRST
     // scope.release() drops it for both. That costs the survivor a
     // recompute, never a wrong answer: no operator's result depends on
@@ -272,10 +273,10 @@ class PipelineSpec extends GraftSuite {
     def scopedRun(scope: Pipeline.PinScope) = pool.submit(
       new java.util.concurrent.Callable[Seq[org.apache.spark.sql.Row]] {
         def call() = Pipeline.withScope(scope) {
-          val curve = lorenz()
+          val stages = funnel()
           built.countDown()
           released.await() // hostile releaseCaches fires BEFORE our action
-          curve.orderBy("user_id").collect().toSeq
+          stages.collect().toSeq
         }
       })
     val (ra, rb) = try {
@@ -284,7 +285,7 @@ class PipelineSpec extends GraftSuite {
       assert(built.await(120, TimeUnit.SECONDS), "scoped callers never built")
       // both scoped callers have pinned; the default scope has not
       assert(!scopeA.isEmpty && !scopeB.isEmpty)
-      assert(Pipeline.pinned.isEmpty)
+      assert(Pipeline.defaultScope.isEmpty)
       // the hostile global release: must not touch either scope's pins
       Pipeline.releaseCaches()
       assert(!scopeA.isEmpty && !scopeB.isEmpty)
@@ -295,9 +296,8 @@ class PipelineSpec extends GraftSuite {
       released.countDown()
       pool.shutdown()
     }
-    // both callers got the full, identical answer (one row per user)
-    val users = events.select("user_id").distinct().count()
-    assert(ra.size.toLong === users)
+    // both callers got the full, identical answer (one row per stage)
+    assert(ra.map(_.getInt(0)) === Seq(1, 2, 3))
     assert(ra === rb)
     // each caller releases its own token; the other's QUEUE survives —
     // but pin the documented plan-identity LIMIT against real cache
@@ -317,10 +317,44 @@ class PipelineSpec extends GraftSuite {
     assert(scopeA.isEmpty && scopeB.isEmpty)
     // and an unwrapped call still lands in the default scope, released
     // by the classic harness release point (back-compat contract)
-    lorenz().count()
-    assert(!Pipeline.pinned.isEmpty)
+    funnel().count()
+    assert(!Pipeline.defaultScope.isEmpty)
     Pipeline.releaseCaches()
-    assert(Pipeline.pinned.isEmpty)
+    assert(Pipeline.defaultScope.isEmpty)
+  }
+
+  test("every pinning operator leaves no cache entry after releaseCaches") {
+    // One case per operator that still pins, through its catalog entry:
+    // minhash (dd3), char-gram Jaccard (dd7), simhash (dd8) and SRP
+    // (dd9) near-dup pairs, incrementalNearDups (dd21), funnel (ev1),
+    // kHopCounts (gr7), ivfPqTrain (behind ss20) and q15. Each builds,
+    // runs one action and releases; the cache must then hold nothing
+    // but Tables' partsupp, a session-catalog cache dropped here too.
+    // Then the fault: a session-wide clearCache() between construction
+    // and action must give the clean run's rows, as every pin is reuse
+    // only.
+    val cm = spark.sharedState.cacheManager
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    def release(name: String): Unit = {
+      val pinned = !Pipeline.defaultScope.isEmpty
+      Pipeline.releaseCaches()
+      Tables.partsupp(spark, sf).unpersist(blocking = true)
+      assert(cm.isEmpty, s"$name left a cache entry after releaseCaches")
+      assert(pinned, s"$name pinned nothing")
+    }
+    Seq("dd3_minhash_dup_pairs", "dd7_jaccard_simjoin", "dd8_simhash_pairs",
+      "dd9_srp_neardup_pairs", "dd21_incremental_ingest", "ev1_funnel",
+      "gr7_khop", "ss20_ivfpq_topk", "q15_top_supplier").foreach { name =>
+      val build = SparkEntry.queries(name)
+      spark.catalog.clearCache()
+      val clean = rowsOf(build(spark, sf))
+      release(name)
+      val faulted = build(spark, sf)
+      spark.catalog.clearCache() // between construction and action
+      assert(rowsOf(faulted) === clean, s"$name: rows changed under clearCache")
+      release(name)
+    }
   }
 
   test("globalPosition matches a global row_number window") {

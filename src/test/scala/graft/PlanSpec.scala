@@ -606,6 +606,36 @@ object PlanSpec {
     walk(p)
   }
 
+  /** How the executed plan of `build` departs from "the shared subtree
+    * is computed once and re-read through exchange reuse", with default
+    * settings and again with broadcast joins off (so shuffled joins must
+    * reuse it too): the plan must hold no cached frame, exactly one leaf
+    * `isInput` accepts per input, and a ReusedExchange. */
+  def reuseViolations(spark: org.apache.spark.sql.SparkSession,
+      isInput: SparkPlan => Boolean, inputs: Int = 1)(
+      build: => DataFrame): Seq[String] = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    try Seq("default", "-1").flatMap { threshold =>
+      if (threshold == "-1") spark.conf.set(key, threshold)
+      val df = build
+      graft.Force.run(df)
+      val nodes = allNodes(df.queryExecution.executedPlan)
+      val scans = nodes.count(isInput)
+      Seq(
+        Option.when(nodes.exists(_.isInstanceOf[InMemoryTableScanExec]))(
+          s"$key=$threshold: a cached frame"),
+        Option.when(scans != inputs)(
+          s"$key=$threshold: $scans input scans, want $inputs"),
+        Option.when(!nodes.exists(_.isInstanceOf[ReusedExchangeExec]))(
+          s"$key=$threshold: no ReusedExchange")
+      ).flatten
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   /** How an executed `df` departs from the prefix-scan plan shape:
     * it must hold a PrefixScanExec, and beneath each one exactly one
     * range exchange (a reused one counts once), no window and no

@@ -137,7 +137,7 @@ class SimilaritySpec extends GraftSuite {
         numCoarse = 8, m = 8, codebookSize = 16, updates = 1)
     }
     // train pinned into the caller's scope, not the default queue
-    assert(!scope.isEmpty && Pipeline.pinned.isEmpty)
+    assert(!scope.isEmpty && Pipeline.defaultScope.isEmpty)
     // a hostile global release (what the bench rep loop fires) must not
     // unpersist the model
     Pipeline.releaseCaches()
