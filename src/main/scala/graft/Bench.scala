@@ -232,6 +232,13 @@ object Bench {
       .config("spark.sql.files.maxPartitionBytes", (1L << 20).toString)
       .config("spark.sql.files.openCostInBytes", (64L << 10).toString)
       .config("spark.sql.adaptive.enabled", "true")
+      // Spark keeps compiled generated classes in one JVM-wide LRU of 100
+      // entries. A pass over the tpch22 list generates ~430 classes and
+      // one over the llm list ~590, so at 100 (and at 250 or 500 for llm)
+      // each warm rep evicted every class before its next use and
+      // compiled them all again. At 1000 both lists fit. A static conf:
+      // it must be set when the session is built.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",

@@ -27,9 +27,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object MediaTruth {
 
   /** Where graft.Verify writes the truth tables and where the mm oracle
-    * SQL reads them back — an absolute path because the oracle SQL is
-    * static text executed by the driver's DuckDB from an unknown cwd. */
-  val defaultDir = "/root/repo/media_truth"
+    * SQL reads them back: `media_truth` under the JVM's working directory
+    * (the checkout, under sbt), an absolute path because the oracle SQL
+    * embeds it and runs from an unknown cwd. Each checkout verifies into
+    * its own. */
+  val defaultDir: String =
+    java.nio.file.Paths.get(sys.props("user.dir"), "media_truth").toString
 
   // ---- scalar re-specifications of the deterministic media math ----
   // (kept intentionally free of any reference to graft.ops.Multimodal:

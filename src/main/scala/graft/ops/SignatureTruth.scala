@@ -34,8 +34,11 @@ import org.apache.spark.unsafe.types.UTF8String
 object SignatureTruth {
 
   /** Where graft.Verify writes the truth tables and where the oracle SQL
-    * reads them back (absolute: oracle SQL is static text). */
-  val defaultDir = "/root/repo/sig_truth"
+    * reads them back: `sig_truth` under the JVM's working directory (the
+    * checkout, under sbt), an absolute path because the oracle SQL embeds
+    * it and runs from an unknown cwd. Each checkout verifies into its own. */
+  val defaultDir: String =
+    java.nio.file.Paths.get(sys.props("user.dir"), "sig_truth").toString
 
   // ---- scalar re-specifications ----
 

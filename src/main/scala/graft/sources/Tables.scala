@@ -1,6 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
@@ -19,9 +22,21 @@ object Tables {
   val all: Seq[String] = tpch ++ Seq("events", "documents", "embeddings")
 
   /** Parquet scan of one fixture table. Column pruning + predicate pushdown
-    * reach the scan automatically because this stays a plain relation. */
+    * reach the scan automatically because this stays a plain relation.
+    *
+    * The relation is resolved once per session and table version: the
+    * first load lists the table's files and reads its parquet footer, and
+    * later loads reuse that resolved relation, so they list no files and
+    * start no job. Each call hands out a fresh DataFrame with new
+    * attribute ids, so two loads of one table self-join like two reads.
+    * The version is the table path's modification time, checked on every
+    * call: a table replaced in place (written beside, then moved in) is
+    * resolved again, but a rewrite that keeps the path's mtime is not
+    * seen. A missing table is not memoized and fails as a plain read does.
+    * Only plans are kept, never data. Registers no view and caches
+    * nothing. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    frame(spark, dir, name, stampOf(spark, dir, name))
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")
@@ -45,14 +60,19 @@ object Tables {
     *    everywhere in this engine, so the cast is value-preserving) so
     *    every downstream operator sees one `ts` type.
     *  - Already TimestampType: pass through. */
-  def events(s: SparkSession, d: String): DataFrame = {
+  def events(s: SparkSession, d: String): DataFrame =
+    eventsFrame(s, d, stampOf(s, d, "events"))
+
+  // The raw relation is memoized like any table's, so the nanos retry runs
+  // once per version; the `ts` normalization is re-applied on every call.
+  private def eventsFrame(s: SparkSession, d: String, stamp: Option[Long]): DataFrame = {
     import org.apache.spark.sql.functions._
     val raw =
-      try load(s, d, "events")
+      try frame(s, d, "events", stamp)
       catch { case e: Exception if e.getMessage != null &&
           e.getMessage.contains("NANOS") =>
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        load(s, d, "events")
+        frame(s, d, "events", stamp)
       }
     raw.schema("ts").dataType match {
       case LongType         => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -62,12 +82,6 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
-
-  private val accessors: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "region" -> region, "nation" -> nation, "customer" -> customer,
-    "supplier" -> supplier, "part" -> part, "orders" -> orders,
-    "lineitem" -> lineitem, "events" -> events, "documents" -> documents,
-    "embeddings" -> embeddings)
 
   /** partsupp stand-in: the fixtures ship no partsupp.parquet, so the
     * part↔supplier link is DERIVED from lineitem — one row per observed
@@ -86,13 +100,15 @@ object Tables {
          CAST(min(l_extendedprice) AS DOUBLE) AS ps_supplycost
        FROM lineitem GROUP BY l_partkey, l_suppkey"""
 
-  // One registration per session: the fixture dir its temp views point
-  // at, a version stamp per table, and the memoized partsupp frame. Views
-  // are global per session, so the memo is "current dir per session";
-  // asking for a different dir re-registers. The un-memoized registration
-  // re-read ten parquet footers per call (measured ~0.5 s), and EVERY
-  // SQL-path catalog query calls registerAll — a flat tax on the whole
-  // sweep.
+  // One registration per session: the resolved relation of every table
+  // loaded (keyed by path, with the stamp it was resolved under), the
+  // fixture dir the temp views point at with the stamps they were built
+  // from, and the memoized partsupp frame. Views are global per session,
+  // so the view memo is "current dir per session"; asking for a different
+  // dir re-registers, from the memoized relations. EVERY SQL-path catalog
+  // query calls registerAll, and every DataFrame-path one loads its
+  // tables, so an unmemoized resolution (a file listing and a footer-read
+  // job per table) was a flat tax on the whole sweep.
   //
   // partsupp is cached rather than a plain `CREATE TEMP VIEW`, which
   // inlines the CTE body at every reference — q11's HAVING scalar
@@ -103,55 +119,111 @@ object Tables {
   // mix); the decimal sum/min derivation is order-insensitive, so cached
   // and inline results are bit-identical and the DuckDB oracle keeps
   // running the CTE text.
-  private final case class Registration(
-      dir: String, stamps: Map[String, Long], partsupp: Option[DataFrame])
-  private val registrations =
-    scala.collection.mutable.Map.empty[SparkSession, Registration] // guarded by `register`
+  //
+  // The session itself holds its registration, in its extra-strategies
+  // list (a strategy that plans nothing): the memoized relations
+  // reference their session, so a registry outside the session, even a
+  // weakly keyed one, would keep every session ever registered reachable.
+  // This way a session nobody references is collected with its plans.
+  // `ownedBy` tells a session's own registration from the one a
+  // `cloneSession()` copies out of its parent's list.
+  private final case class Resolved(stamp: Long, relation: LogicalRelation)
+  private final class Registration(owner: SparkSession) extends SparkStrategy {
+    def ownedBy(s: SparkSession): Boolean = owner eq s
+    def apply(plan: LogicalPlan): Seq[SparkPlan] = Nil
+    val relations = scala.collection.mutable.Map.empty[String, Resolved]
+    var dir: Option[String] = None
+    var stamps = Map.empty[String, Long]
+    var partsupp: Option[DataFrame] = None
+  }
 
-  /** One version stamp per fixture table present under `dir`: the table
+  private def registration(spark: SparkSession): Registration = synchronized {
+    spark.experimental.extraStrategies
+      .collectFirst { case r: Registration if r.ownedBy(spark) => r }
+      .getOrElse {
+        val r = new Registration(spark)
+        GraftBridge.registerStrategy(spark, r)
+        r
+      }
+  }
+
+  /** One version stamp per parquet table present under `dir`: the table
     * path's modification time, all read with ONE directory listing. A
     * parquet write sets its directory's mtime when it commits, and a swap
     * (write `t.next`, move the old path aside, move the new one in)
     * changes the stamp, so a live session sees a replaced table instead
-    * of reading the files the old view listed. */
+    * of reading the files the old relation listed. */
   private def versionStamps(spark: SparkSession, dir: String): Map[String, Long] = {
     val root = new org.apache.hadoop.fs.Path(dir)
-    val byName = all.map(n => s"$n.parquet" -> n).toMap
     root.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(root)
-      .flatMap(st => byName.get(st.getPath.getName).map(_ -> st.getModificationTime))
+      .collect { case st if st.getPath.getName.endsWith(".parquet") =>
+        st.getPath.getName.stripSuffix(".parquet") -> st.getModificationTime }
       .toMap
+  }
+
+  /** `name`'s stamp, or None when it or `dir` is absent. */
+  private def stampOf(spark: SparkSession, dir: String, name: String): Option[Long] =
+    try versionStamps(spark, dir).get(name)
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** A fresh DataFrame over `name`'s relation, resolved at most once per
+    * stamp. The stamp is read before resolving, so a swap racing the
+    * resolution can only cost one more resolution, never a stale hit. */
+  private def frame(
+      spark: SparkSession, dir: String, name: String, stamp: Option[Long]): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val rel = synchronized {
+      val memo = registration(spark).relations
+      memo.get(path).filter(r => stamp.contains(r.stamp)).map(_.relation).getOrElse {
+        // the analyzed plan: the reader's logical plan is still an
+        // unresolved data-source node, which would list again on use
+        val resolved = spark.read.parquet(path).queryExecution.analyzed match {
+          case lr: LogicalRelation => lr
+          case other => throw new IllegalStateException(
+            s"$path resolved to ${other.nodeName}, not a file relation")
+        }
+        stamp.foreach(st => memo(path) = Resolved(st, resolved))
+        resolved
+      }
+    }
+    GraftBridge.ofRows(spark, rel.newInstance())
   }
 
   /** Bring the session's views in line with `dir`: a no-op while the dir
     * and every stamp are unchanged; otherwise re-register every table
-    * present under `dir` (views of absent tables are dropped, so none can
-    * keep serving another dir's data) and keep the partsupp frame only if
-    * `lineitem`'s stamp held — a stale one is unpersisted and rebuilt.
-    * A partsupp frame whose cache entry a session-wide uncache
-    * (`spark.catalog.clearCache()`) dropped is cached again, so it is not
-    * re-derived by every later query. */
+    * present under `dir` from its memoized relation (only a table whose
+    * stamp changed is resolved again; views of absent tables are dropped,
+    * so none can keep serving another dir's data) and keep the partsupp
+    * frame only if `lineitem`'s stamp held — a stale one is unpersisted
+    * and rebuilt. A partsupp frame whose cache entry a session-wide
+    * uncache (`spark.catalog.clearCache()`) dropped is cached again, so it
+    * is not re-derived by every later query. */
   private def register(spark: SparkSession, dir: String): Registration =
     synchronized {
       val stamps = versionStamps(spark, dir)
-      val prev = registrations.get(spark)
-      val reg = prev.filter(r => r.dir == dir && r.stamps == stamps).getOrElse {
+      val reg = registration(spark)
+      if (!reg.dir.contains(dir) || reg.stamps != stamps) {
         all.foreach { n =>
-          if (stamps.contains(n)) accessors(n)(spark, dir).createOrReplaceTempView(n)
-          else spark.catalog.dropTempView(n)
+          stamps.get(n) match {
+            case Some(st) =>
+              val df = if (n == "events") eventsFrame(spark, dir, Some(st))
+                else frame(spark, dir, n, Some(st))
+              df.createOrReplaceTempView(n)
+            case None => spark.catalog.dropTempView(n)
+          }
         }
-        val kept = prev.filter(r => r.dir == dir &&
-          r.stamps.get("lineitem") == stamps.get("lineitem")).flatMap(_.partsupp)
-        if (kept.isEmpty) prev.flatMap(_.partsupp).foreach(_.unpersist(blocking = true))
-        val ps = kept.orElse(
+        val kept = reg.partsupp.filter(_ => reg.dir.contains(dir) &&
+          reg.stamps.get("lineitem") == stamps.get("lineitem"))
+        if (kept.isEmpty) reg.partsupp.foreach(_.unpersist(blocking = true))
+        reg.partsupp = kept.orElse(
           if (stamps.contains("lineitem")) Some(spark.sql(partsuppViewSql).cache())
           else None)
-        ps match {
+        reg.partsupp match {
           case Some(df) => df.createOrReplaceTempView("partsupp")
           case None     => spark.catalog.dropTempView("partsupp")
         }
-        val r = Registration(dir, stamps, ps)
-        registrations(spark) = r
-        r
+        reg.dir = Some(dir)
+        reg.stamps = stamps
       }
       reg.partsupp.filter(_.storageLevel == StorageLevel.NONE).foreach(_.cache())
       reg
@@ -167,11 +239,14 @@ object Tables {
 
   /** Register every fixture table as a temp view so `spark.sql` text queries
     * resolve — the Spark analog of the reference's global `hm` catalog map
-    * (Microbase.scala:29). Memoized per session and checked against the
-    * tables' version stamps on every call; events is registered
-    * normalized; the derived partsupp stand-in registers as a CACHED
-    * `partsupp` view (see [[partsupp]]) so the q2/q9/q11/q16/q20 family
-    * reuses one materialization instead of re-deriving per reference. */
+    * (Microbase.scala:29). The views are built from the same memoized
+    * relations [[load]] hands out, so the SQL path and the DataFrame path
+    * resolve each table once, under the same version stamps: checked on
+    * every call, a changed stamp re-registers the views and re-resolves
+    * only the tables it changed. events is registered normalized; the
+    * derived partsupp stand-in registers as a CACHED `partsupp` view (see
+    * [[partsupp]]) so the q2/q9/q11/q16/q20 family reuses one
+    * materialization instead of re-deriving per reference. */
   def registerAll(spark: SparkSession, dir: String): Unit = register(spark, dir)
 
   /** Reference-style CSV DDL (Microbase.scala:960-983): delimiter-split

@@ -24,7 +24,9 @@ object GraftBridge {
       spark: SparkSession,
       strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
     val exp = spark.asInstanceOf[classic.SparkSession].experimental
-    if (!exp.extraStrategies.contains(strategy))
-      exp.extraStrategies = exp.extraStrategies :+ strategy
+    exp.synchronized { // two callers appending at once must not drop one
+      if (!exp.extraStrategies.contains(strategy))
+        exp.extraStrategies = exp.extraStrategies :+ strategy
+    }
   }
 }

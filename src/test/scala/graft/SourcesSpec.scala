@@ -8,8 +8,9 @@ import graft.sources.Tables
 /** Source/DDL coverage (SURVEY.md §2a): the reference's pipe-delimited CSV
   * loader with declared schema (S1/S2), eager materialization, and the
   * five reference primitive types — rebuilt over Spark's CSV source —
-  * plus `Tables.registerAll`'s per-session views over a dir whose
-  * tables are swapped while the session lives. */
+  * plus `Tables.registerAll`'s per-session views and `Tables.load`'s
+  * per-session relation memo over a dir whose tables are swapped while
+  * the session lives. */
 class SourcesSpec extends GraftSuite {
 
   test("pipe-delimited CSV round-trips the nation table") {
@@ -208,5 +209,117 @@ class SourcesSpec extends GraftSuite {
     Tables.registerAll(s, d)
     assert(c1 > c0, "the first registration lists the tables")
     assert(METRIC_FILES_DISCOVERED.getCount - c1 === 0)
+  }
+
+  // ---- Tables.load's per-session relation memo ----------------------
+
+  private def filesDiscovered(body: => Unit): Long = {
+    import org.apache.spark.metrics.source.HiveCatalogMetrics.METRIC_FILES_DISCOVERED
+    val c0 = METRIC_FILES_DISCOVERED.getCount
+    body
+    METRIC_FILES_DISCOVERED.getCount - c0
+  }
+
+  test("a second load of an unchanged table lists no files and starts no job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val d = fixtureCopy()
+    val s = spark.newSession()
+    val sc = s.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(filesDiscovered(Tables.lineitem(s, d)) > 0, "the first load lists")
+      assert(filesDiscovered(Tables.events(s, d)) > 0)
+      org.apache.spark.GraftTestBridge.drainListeners(sc)
+      val before = jobs.get
+      assert(filesDiscovered(Tables.lineitem(s, d)) === 0)
+      assert(filesDiscovered(Tables.events(s, d)) === 0)
+      org.apache.spark.GraftTestBridge.drainListeners(sc)
+      assert(jobs.get - before === 0, "a warm load read a footer")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("load after a swap returns the new rows") {
+    val d = fixtureCopy()
+    val s = spark.newSession()
+    val before = Tables.orders(s, d).count()
+    swap(s, d, "orders")(_.filter(col("o_orderkey") % 2 === 0))
+    val after = Tables.orders(s, d)
+    assert(after.filter(col("o_orderkey") % 2 =!= 0).count() === 0)
+    assert(after.count() === s.read.parquet(s"$d/orders.parquet").count())
+    assert(after.count() < before)
+  }
+
+  test("two loads of lineitem have disjoint ids and self-join like two reads") {
+    val d = fixtureCopy()
+    val s = spark.newSession()
+    val (l1, l2) = (Tables.lineitem(s, d), Tables.lineitem(s, d))
+    assert(l1.queryExecution.analyzed.output.map(_.exprId)
+      .intersect(l2.queryExecution.analyzed.output.map(_.exprId)).isEmpty)
+    def joined(a: DataFrame, b: DataFrame) =
+      a.join(b, a("l_orderkey") === b("l_orderkey") &&
+          a("l_linenumber") =!= b("l_linenumber"))
+        .select(a("l_orderkey").as("k"), a("l_linenumber").as("n1"),
+          b("l_linenumber").as("n2"))
+        .orderBy("k", "n1", "n2").collect().toSeq
+    val p = s"$d/lineitem.parquet"
+    val viaReads = joined(s.read.parquet(p), s.read.parquet(p))
+    assert(viaReads.nonEmpty)
+    assert(joined(l1, l2) === viaReads)
+    // a cached load still serves a later load of the same table
+    l1.cache()
+    try assert(Tables.lineitem(s, d).queryExecution.withCachedData.collectLeaves()
+      .exists(_.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]))
+    finally l1.unpersist(blocking = true)
+  }
+
+  test("loading a missing table raises PATH_NOT_FOUND, and is not memoized") {
+    import org.apache.spark.sql.AnalysisException
+    val d = Files.createTempDirectory("graft-missing-").toString
+    val s = spark.newSession()
+    for (dir <- Seq(d, s"$d/absent")) {
+      val e = intercept[AnalysisException](Tables.load(s, dir, "orders"))
+      assert(e.getCondition === "PATH_NOT_FOUND", e.getMessage)
+    }
+    Tables.orders(spark, sf).write.parquet(s"$d/orders.parquet")
+    assert(Tables.load(s, d, "orders").count() === Tables.orders(spark, sf).count())
+  }
+
+  test("registerAll after an orders swap re-lists only orders") {
+    val d = fixtureCopy()
+    val s = spark.newSession()
+    Tables.registerAll(s, d)
+    swap(s, d, "orders")(_.filter(col("o_orderkey") % 2 === 0))
+    val listed = filesDiscovered(Tables.registerAll(s, d))
+    val ordersAlone = filesDiscovered(s.read.parquet(s"$d/orders.parquet"))
+    assert(ordersAlone > 0)
+    assert(listed === ordersAlone)
+    assert(s.sql("SELECT count(*) FROM orders").head.getLong(0) ===
+      Tables.orders(s, d).count())
+  }
+
+  test("a session nobody references is collected with its registration") {
+    val d = fixtureCopy()
+    // no shuffle runs: a shuffle's bookkeeping keeps its session reachable
+    // for a while whatever Tables does
+    def registered(): java.lang.ref.WeakReference[SparkSession] = {
+      val s = spark.newSession()
+      Tables.region(s, d).collect()
+      Tables.registerAll(s, d)
+      Tables.partsupp(s, d).unpersist(blocking = true)
+      new java.lang.ref.WeakReference(s)
+    }
+    val ref = registered()
+    org.apache.spark.GraftTestBridge.drainListeners(spark.sparkContext)
+    var tries = 0
+    while (ref.get != null && tries < 20) {
+      System.gc()
+      Thread.sleep(100)
+      tries += 1
+    }
+    assert(ref.get == null, "the registration kept its session reachable")
   }
 }
