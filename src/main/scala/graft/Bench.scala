@@ -9,7 +9,7 @@ import graft.sources.Tables
   *
   * Methodology mirrors the reference's own setup (BASELINE.md): tables are
   * pre-loaded before the timed loop (the reference eagerly materializes at
-  * CREATE, Microbase.scala:960-983 — here `cache()` + force), two warmup
+  * CREATE, Microbase.scala:960-983 — here `cache()` + force), three warmup
   * passes absorb plan/codegen compilation and JIT stragglers, then each
   * query is timed end-to-end (5 reps INTERLEAVED round-robin across
   * queries; median AND min reported, ALL reps + GC time emitted so an
@@ -25,8 +25,8 @@ import graft.sources.Tables
   * — the one SCALE.md quotes and `tools/doc_sync_check.py` gates — is
   * `BENCH_RECORD.json`, promoted by an explicit
   * `cp BENCH_LAST.json BENCH_RECORD.json` + commit after adjudicating
-  * the capture (keep-best across spaced runs; stall_flags/stall_retries
-  * carry the noise provenance). This split exists because the r12 and
+  * the capture (keep-best across spaced runs; stall_flags carry the
+  * noise provenance). This split exists because the r12 and
   * r13 end-of-round driver runs both overwrote the then-gated
   * BENCH_LAST.json with tenancy-contaminated captures, and each
   * following round had to spend its opening re-adjudicating the docs.
@@ -102,11 +102,8 @@ object Bench {
     * reps). Sub-50 ms query mins are exempt from the ratio rule
     * (scheduler jitter alone can triple them). A run with a non-trivial
     * stall_flag_count is machine-detectably contaminated and must not
-    * become the artifact of record without adjudication.
-    *
-    * This per-rep decision rule is shared by [[stallFlags]] (which
-    * reports) and [[retryFlagged]] (which re-runs) so the two can never
-    * diverge. */
+    * become the artifact of record without adjudication. Detection only:
+    * flagged reps are reported as measured, never re-run or replaced. */
   private[graft] def repFlagged(sec: Double, gcMs: Long, minSec: Double,
       gcThresholdMs: Long, ratio: Double): Boolean =
     (minSec > 0.05 && sec > ratio * minSec) || gcMs > gcThresholdMs
@@ -126,98 +123,16 @@ object Bench {
       }
     }
 
-  /** Bounded auto-retry of stall-flagged reps (r13 verdict item 3): the
-    * sentinel DETECTS daytime-tenancy contamination; this lets a capture
-    * CONVERGE to the quiet-box band without a human re-running the job.
-    * For each query whose rep array carries a flag (the same rules as
-    * [[stallFlags]]), re-run the query — `pause` runs first, spacing the
-    * attempt so a transient host stall can clear — and replace the WORST
-    * flagged rep iff the retry beat it ("keep the best"; a retry that is
-    * itself slow is recorded but changes nothing). At most `maxRetries`
-    * re-runs per query, so a genuinely loaded host bounds the extra work
-    * instead of spinning. The caller computes the artifact's stall_flags
-    * on the POST-retry reps — a converged run reads clean — and every
-    * attempt lands in `stall_retries` provenance (original rep value and
-    * GC, retry value and GC, whether it replaced), so the
-    * contamination-and-recovery history stays readable from the JSON
-    * alone. */
-  private[graft] def retryFlagged(
-      section: String,
-      rows: Seq[(String, Seq[Double], Seq[Long])],
-      rerun: String => (Double, Long),
-      maxRetries: Int = 2,
-      pause: () => Unit = () => Thread.sleep(3000),
-      gcThresholdMs: Long = 150L, ratio: Double = 2.5)
-      : (Seq[(String, Seq[Double], Seq[Long])], Seq[String]) = {
-    val prov = Seq.newBuilder[String]
-    val out = rows.map { case (q, reps0, gcs0) =>
-      var reps = reps0.toVector
-      var gcs = gcs0.toVector
-      var budget = math.max(0, maxRetries)
-      // worst flagged rep index under the current array, if any
-      def worstFlagged: Option[Int] = {
-        val mn = if (reps.nonEmpty) reps.min else 0.0
-        val idxs = reps.indices.filter { i =>
-          val gc = if (i < gcs.size) gcs(i) else 0L
-          repFlagged(reps(i), gc, mn, gcThresholdMs, ratio)
-        }
-        if (idxs.isEmpty) None else Some(idxs.maxBy(reps))
-      }
-      var worst = worstFlagged
-      while (worst.isDefined && budget > 0) {
-        pause()
-        val i = worst.get
-        val origGc = if (i < gcs.size) gcs(i) else 0L
-        // a retry failure must not discard the section's already-measured
-        // rows (the headline/tpch22/llm reps are complete by now): record
-        // the error in provenance, stop retrying this query, keep the
-        // original rep and its flag
-        scala.util.Try(rerun(q)) match {
-          case scala.util.Success((sec, gc)) =>
-            budget -= 1
-            // Accept a retry that strictly beats the flagged rep — or, when
-            // the rep was flagged ONLY by the GC rule (the min-rep shape:
-            // ratio can't flag the min), a clean-GC retry that is itself
-            // ratio-clean AND within 5% of the rep it replaces. Without
-            // the acceptance, a retry that PROVED the stall transient is
-            // discarded and the budget burns re-retrying the same rep;
-            // without the 5% bound (round-15 review), the window was
-            // ratio×min — wide enough for a clean-GC retry up to 2.5× the
-            // min (unbounded when min ≤ 50 ms) to REPLACE a faster
-            // measurement, inflating the reported min/median.
-            val mn = reps.min
-            val gcOnlyFlag = !(mn > 0.05 && reps(i) > ratio * mn)
-            val retryClean = gc <= gcThresholdMs && sec <= reps(i) * 1.05 &&
-              !(mn > 0.05 && sec > ratio * mn)
-            val replaced = sec < reps(i) || (gcOnlyFlag && retryClean)
-            prov += (s"""{"section":"$section","query":"$q","rep":${i + 1},""" +
-              f""""orig_sec":${reps(i)}%.4f,"orig_gc_ms":$origGc,""" +
-              f""""retry_sec":$sec%.4f,"retry_gc_ms":$gc,"replaced":$replaced}""")
-            if (replaced) {
-              reps = reps.updated(i, sec)
-              if (i < gcs.size) gcs = gcs.updated(i, gc)
-            }
-            worst = worstFlagged
-          case scala.util.Failure(e) =>
-            budget = 0
-            val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-              .replaceAll("""[\\"\n\r\t]""", " ").take(160)
-            prov += (s"""{"section":"$section","query":"$q","rep":${i + 1},""" +
-              f""""orig_sec":${reps(i)}%.4f,"orig_gc_ms":$origGc,""" +
-              s""""retry_error":"$msg","replaced":false}""")
-            worst = None
-        }
-      }
-      (q, reps: Seq[Double], gcs: Seq[Long])
-    }
-    (out, prov.result())
-  }
-
-  /** The session every Bench-family main (Bench, ScaleCurve, PlanDump)
-    * runs under, so their timings and plans are the bench's. */
+  /** The session every main (Bench, ScaleCurve, PlanDump, Verify,
+    * StrictStrata, Repl) runs under, so their timings, plans and answers
+    * are the bench's. */
   def session(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(Runtime.getRuntime.availableProcessors(), 32).toString)
+    // a fresh warehouse per session, removed at exit unless a table was
+    // saved into it
+    val warehouse = java.nio.file.Files.createTempDirectory(s"$appName-wh-").toFile
+    warehouse.deleteOnExit()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
@@ -241,8 +156,7 @@ object Bench {
       .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory(s"$appName-wh-").toString)
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
@@ -267,8 +181,7 @@ object Bench {
   }
 
   /** One timed end-to-end execution of `plan(q)` — the same measurement
-    * for every rep and for the stall-retry path, so a retried rep is
-    * measured identically to the rep it may replace. Graft-pinned frames
+    * for every warmup and rep of every section. Graft-pinned frames
     * are released AFTER the timed window (round-18 honesty fix: q15
     * persists+pins its per-supplier aggregate at construction, and
     * Spark's cache manager matches plan-identical frames — without the
@@ -295,25 +208,21 @@ object Bench {
     * delta go to the artifact, so an outlier is diagnosable from the
     * JSON alone: a noisy environment shows one blown rep among steady
     * ones (usually with a fat gc_ms), a real regression shows
-    * consistently slow reps. Stall-flagged reps are then re-run within
-    * `retryBudget` ([[retryFlagged]]; 0 passes the rows through).
-    * `settleGc` forces a full collection and gives concurrent phases a
-    * beat to finish before the timed reps, so they start from a
-    * compacted heap instead of paying the warmups' garbage.
+    * consistently slow reps. `settleGc` forces a full collection and
+    * gives concurrent phases a beat to finish before the timed reps, so
+    * they start from a compacted heap instead of paying the warmups'
+    * garbage.
     *
-    * Returns the (query, reps, gc per rep) rows in `names` order and the
-    * retry provenance (stall_retries entries). */
-  def timedSuite(section: String, names: Seq[String], warmups: Int,
-      reps: Int, retryBudget: Int, settleGc: Boolean = false)(
-      run: String => (Double, Long))
-      : (Seq[(String, Seq[Double], Seq[Long])], Seq[String]) = {
+    * Returns the (query, reps, gc per rep) rows in `names` order, exactly
+    * as measured: a stall-flagged rep stays in its row. */
+  def timedSuite(names: Seq[String], warmups: Int, reps: Int,
+      settleGc: Boolean = false)(run: String => (Double, Long))
+      : Seq[(String, Seq[Double], Seq[Long])] = {
     (1 to warmups).foreach(_ => names.foreach(run))
     if (settleGc) { System.gc(); Thread.sleep(1000) }
     val acc = collection.mutable.Map(names.map(_ -> Vector.empty[(Double, Long)]): _*)
     (1 to reps).foreach(_ => names.foreach(q => acc(q) :+= run(q)))
-    retryFlagged(section,
-      names.map(q => (q, acc(q).map(_._1): Seq[Double], acc(q).map(_._2): Seq[Long])),
-      run, retryBudget)
+    names.map(q => (q, acc(q).map(_._1), acc(q).map(_._2)))
   }
 
   def main(args: Array[String]): Unit = {
@@ -326,21 +235,6 @@ object Bench {
     Tables.tpch.foreach { t => Tables.load(spark, sfDir, t).cache().count() }
 
     val catalog: String => DataFrame = q => SparkEntry.queries(q)(spark, sfDir)
-    // Stall-retry budget (see retryFlagged): per-query bound on re-runs
-    // of flagged reps. SPARK_GRAFT_BENCH_RETRIES=0 disables (a pure
-    // "record the contamination" capture); default 2.
-    val retryBudget =
-      sys.env.get("SPARK_GRAFT_BENCH_RETRIES").map(_.toInt).getOrElse(2)
-    // every section's retry provenance lands in one stall_retries list
-    val retryProv = Seq.newBuilder[String]
-    def section(name: String, names: Seq[String], warmups: Int, reps: Int,
-        settleGc: Boolean = false)(run: String => (Double, Long))
-        : Seq[(String, Seq[Double], Seq[Long])] = {
-      val (rows, prov) = timedSuite(name, names, warmups, reps, retryBudget,
-        settleGc)(run)
-      retryProv ++= prov
-      rows
-    }
 
     // Headline: THREE warmup passes — the first absorbs plan +
     // whole-stage-codegen compilation, the second catches the stragglers
@@ -355,7 +249,7 @@ object Bench {
     // execute + materialize), same warmed-cache methodology as the
     // reference's pre-loaded tables.
     val repCount = 5
-    val timed = section("headline", headline, warmups = 3, reps = repCount,
+    val timed = timedSuite(headline, warmups = 3, reps = repCount,
       settleGc = true)(timedRun(catalog))
     val results = timed.map { case (q, reps, _) =>
       q -> reps.sorted.apply(repCount / 2)
@@ -382,15 +276,11 @@ object Bench {
     // round-over-round instead of timed nowhere. One warmup pass, then 3
     // reps with the per-query MIN reported (r10 committed a single-rep
     // sweep whose heavy rows contradicted the same JVM's rep'd sections
-    // and was un-adjudicable from the JSON alone). Disable with
-    // SPARK_GRAFT_BENCH_TPCH22=0.
+    // and was un-adjudicable from the JSON alone).
     val tpch22Raw: Seq[(String, Seq[Double], Seq[Long])] = informational("tpch22") {
-      if (sys.env.get("SPARK_GRAFT_BENCH_TPCH22").contains("0")) Nil
-      else {
-        val qs = graft.queries.TpchQueries.queries.keys.toSeq
-          .sortBy(n => n.drop(1).takeWhile(_.isDigit).toInt)
-        section("tpch22", qs, warmups = 1, reps = 3)(timedRun(catalog))
-      }
+      val qs = graft.queries.TpchQueries.queries.keys.toSeq
+        .sortBy(n => n.drop(1).takeWhile(_.isDigit).toInt)
+      timedSuite(qs, warmups = 1, reps = 3)(timedRun(catalog))
     }
     // per-query min = steady-state cost; the total is a sum of mins
     val tpch22: Seq[(String, Double)] =
@@ -404,7 +294,7 @@ object Bench {
     // single-rep sweep "showed" dd16 4.7→26 s and ta14 0.13→1.7 s while
     // pl21 — which composes ta14 — improved 5×; a single rep in a
     // 24-query sweep attributes environment stalls and cache evictions to
-    // whichever query they land on). Disable with SPARK_GRAFT_BENCH_LLM=0.
+    // whichever query they land on).
     // dd3 (MinHash-LSH) is the timed similarity join — the scale path.
     // The exactness baselines are deliberately NOT here: dd7's global
     // PPJoin admits huge candidate sets on the shared-token word-salad
@@ -493,29 +383,23 @@ object Bench {
     }
 
     val llmRepsFull: Seq[(String, Seq[Double], Seq[Long])] = informational("llm") {
-      if (sys.env.get("SPARK_GRAFT_BENCH_LLM").contains("0")) Nil
-      else {
-        // ss20_serve resolves through the shared model (its warmup also
-        // trains+pins the model it serves against); every other row is
-        // its unmodified SparkEntry catalog entry
-        def llmPlan(q: String): DataFrame =
-          if (q == "ss20_serve") ss20ServePlan() else catalog(q)
-        section("llm", llm, warmups = 1, reps = 3)(timedRun(llmPlan))
-      }
+      // ss20_serve resolves through the shared model (its warmup also
+      // trains+pins the model it serves against); every other row is
+      // its unmodified SparkEntry catalog entry
+      def llmPlan(q: String): DataFrame =
+        if (q == "ss20_serve") ss20ServePlan() else catalog(q)
+      timedSuite(llm, warmups = 1, reps = 3)(timedRun(llmPlan))
     }
-    // The serve model's pins are no longer needed once the llm sweep
-    // (including its retries) has run — and they MUST be gone before
-    // the training rows below (see ss20TrainTimed).
+    // The serve model's pins are no longer needed once the llm sweep has
+    // run — and they MUST be gone before the training rows below (see
+    // ss20TrainTimed).
     ss20Scope.release()
-    // Gated training rows: same reps+min+gc+retry discipline as every
-    // timed section. Runs AFTER the llm sweep so its throwaway training
-    // scopes never interleave with serve reps; shares the llm kill
-    // switch (train and serve are the two halves of one split row).
+    // Gated training rows: same reps+min+gc discipline as every timed
+    // section. Runs AFTER the llm sweep so its throwaway training scopes
+    // never interleave with serve reps.
     val ss20TrainRaw: Seq[(String, Seq[Double], Seq[Long])] =
       informational("ss20_train") {
-        if (sys.env.get("SPARK_GRAFT_BENCH_LLM").contains("0")) Nil
-        else section("ss20_train", Seq("ss20_train"), warmups = 1,
-          reps = 3)(_ => ss20TrainTimed())
+        timedSuite(Seq("ss20_train"), warmups = 1, reps = 3)(_ => ss20TrainTimed())
       }
     // Per-query MIN is the reported number (steady-state cost; immune to
     // the one-sided stalls a 24-query sweep accumulates).
@@ -557,22 +441,17 @@ object Bench {
           s""","ss20_train_reps":${reps.map(r => f"$r%.4f").mkString("[", ",", "]")}""" +
           s""","ss20_train_gc_ms":${gcs.mkString("[", ",", "]")}"""
       }
-    // Stall sentinel over every rep'd section (thresholds + rationale on
-    // the stallFlags method, which BenchSentinelSpec pins). Flags are
-    // computed on the POST-retry reps — a capture that converged via
-    // retryFlagged reads clean here, and the contamination-and-recovery
-    // history lives in stall_retries.
+    // Stall sentinel over every rep'd section, on the reps as measured
+    // (thresholds + rationale on the stallFlags method, which
+    // BenchSentinelSpec pins).
     val allFlags =
       stallFlags("headline", timed) ++
       stallFlags("tpch22", tpch22Raw) ++
       stallFlags("llm", llmRepsFull) ++
       stallFlags("ss20_train", ss20TrainRaw)
-    val retries = retryProv.result()
     val stallField =
       s""","stall_flag_count":${allFlags.size}""" +
-        s""","stall_flags":${allFlags.mkString("[", ",", "]")}""" +
-        s""","stall_retry_count":${retries.size}""" +
-        s""","stall_retries":${retries.mkString("[", ",", "]")}"""
+        s""","stall_flags":${allFlags.mkString("[", ",", "]")}"""
     // sf is the NUMERIC scale factor (matching the driver's BENCH_r{N}
     // encoding — the r12 advice flagged the path-vs-number mismatch);
     // the directory travels separately as sf_dir.

@@ -143,15 +143,7 @@ object Repl {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-repl")
-      .getOrCreate()
+    val spark = Bench.session("graft-repl")
     spark.sparkContext.setLogLevel("ERROR")
     loop(spark, () => scala.io.StdIn.readLine(), println)
     spark.stop()

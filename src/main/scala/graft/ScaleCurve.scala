@@ -106,7 +106,7 @@ object ScaleCurve {
     // ---- timed passes ------------------------------------------------
     // (factor, query) -> (reps, gcPerRep); Bench's timed loop per scale
     // point: cache tpch tables, one warmup pass, GC settle, interleaved
-    // reps, no stall retries (the curve reports every rep and its min).
+    // reps (the curve reports every rep as measured, and its min).
     val suite = sys.env.get("SPARK_GRAFT_SCALE_QUERIES") match {
       case Some(qs) =>
         // (the SPARK_GRAFT_SCALE_OUT requirement for subset runs is
@@ -130,9 +130,8 @@ object ScaleCurve {
       // Tables.events normalizes them — a bare Tables.load here threw on
       // such fixtures even with replicas already generated).
       tableRows((f, "events")) = Tables.events(spark, dir).count()
-      val (timed, _) = Bench.timedSuite(s"x$f", suite, warmups = 1, reps = reps,
-        retryBudget = 0, settleGc = true)(
-        Bench.timedRun(q => SparkEntry.queries(q)(spark, dir)))
+      val timed = Bench.timedSuite(suite, warmups = 1, reps = reps,
+        settleGc = true)(Bench.timedRun(q => SparkEntry.queries(q)(spark, dir)))
       timed.foreach { case (q, secs, gcs) => rows((f, q)) = (secs, gcs) }
       spark.catalog.clearCache()
     }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -37,16 +36,7 @@ object StrictStrata {
     val sampleDir = if (args.length > 1) args(1)
       else "/tmp/graft_scale/x30strata"
     val outDir = if (args.length > 2) args(2) else "/tmp/strict_x30strata"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors(), 32).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-strict-strata")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session("graft-strict-strata")
 
     val docs = spark.read.parquet(s"$x30/documents.parquet")
     val firstChar = substring(

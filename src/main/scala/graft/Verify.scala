@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -20,14 +19,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (Array(sfDir, outDir), onlyNames) = args.splitAt(2)
     val only = onlyNames.toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     // stale sentinels from a previous run into the same outDir must not
     // read as THIS run's failures

@@ -268,12 +268,33 @@ object Pipeline {
   def mixtureSample(
       df: DataFrame, sourceCol: String,
       targetShares: Map[String, Double], seed: Long): DataFrame = {
+    val (wanted, fractions) = mixtureFractions(df, sourceCol, targetShares)
+    stratifiedSample(wanted, sourceCol, fractions, seed)
+  }
+
+  /** [[mixtureSample]] with the portable hash-Bernoulli core
+    * ([[stratifiedSamplePortable]]): same binding-source-kept-whole
+    * fraction math, but the per-row selection is a pure function of
+    * (salt, key) — layout-independent and engine-recomputable. */
+  def mixtureSamplePortable(
+      df: DataFrame, sourceCol: String,
+      targetShares: Map[String, Double], salt: String,
+      keyCol: Column): DataFrame = {
+    val (wanted, fractions) = mixtureFractions(df, sourceCol, targetShares)
+    stratifiedSamplePortable(wanted, sourceCol, fractions, salt, keyCol)
+  }
+
+  /** The rows of the requested sources and each source's keep fraction
+    * for [[mixtureSample]] and [[mixtureSamplePortable]]. */
+  private def mixtureFractions(
+      df: DataFrame, sourceCol: String, targetShares: Map[String, Double])
+      : (DataFrame, Map[String, Double]) = {
     require(targetShares.nonEmpty && targetShares.values.forall(_ > 0),
       "target shares must be positive")
     val total = targetShares.values.sum
     val want = targetShares.map { case (k, v) => k -> v / total }
-    val have: Map[String, Long] = df
-      .filter(col(sourceCol).isin(want.keys.toSeq: _*))
+    val wanted = df.filter(col(sourceCol).isin(want.keys.toSeq: _*))
+    val have: Map[String, Long] = wanted
       .groupBy(sourceCol).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val missing = want.keySet.diff(have.keySet)
@@ -290,38 +311,7 @@ object Pipeline {
       k -> (if (k == bindingKey) 1.0
             else math.min(1.0, outTotal * w / have(k)))
     }
-    stratifiedSample(
-      df.filter(col(sourceCol).isin(want.keys.toSeq: _*)),
-      sourceCol, fractions, seed)
-  }
-
-  /** [[mixtureSample]] with the portable hash-Bernoulli core
-    * ([[stratifiedSamplePortable]]): same binding-source-kept-whole
-    * fraction math, but the per-row selection is a pure function of
-    * (salt, key) — layout-independent and engine-recomputable. */
-  def mixtureSamplePortable(
-      df: DataFrame, sourceCol: String,
-      targetShares: Map[String, Double], salt: String,
-      keyCol: Column): DataFrame = {
-    require(targetShares.nonEmpty && targetShares.values.forall(_ > 0),
-      "target shares must be positive")
-    val total = targetShares.values.sum
-    val want = targetShares.map { case (k, v) => k -> v / total }
-    val have: Map[String, Long] = df
-      .filter(col(sourceCol).isin(want.keys.toSeq: _*))
-      .groupBy(sourceCol).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val missing = want.keySet.diff(have.keySet)
-    require(missing.isEmpty, s"no rows for requested sources: $missing")
-    val bindingKey = have.minBy { case (k, n) => n / want(k) }._1
-    val outTotal = have(bindingKey) / want(bindingKey)
-    val fractions = want.map { case (k, w) =>
-      k -> (if (k == bindingKey) 1.0
-            else math.min(1.0, outTotal * w / have(k)))
-    }
-    stratifiedSamplePortable(
-      df.filter(col(sourceCol).isin(want.keys.toSeq: _*)),
-      sourceCol, fractions, salt, keyCol)
+    (wanted, fractions)
   }
 
   /** Deterministic dataset split (train/val/test …): each row's split is
@@ -335,27 +325,29 @@ object Pipeline {
   def assignSplit(
       df: DataFrame, keyCol: Column, seed: Long,
       splits: Seq[(String, Double)]): DataFrame = {
-    require(splits.nonEmpty && splits.forall(_._2 > 0),
-      "splits need positive weights")
-    val total = splits.map(_._2).sum
-    // cumulative upper bounds in [0, 1); bucket = first bound above u
-    val bounds = splits.scanLeft(0.0) { case (acc, (_, w)) => acc + w / total }
-      .tail.zip(splits.map(_._1))
+    val bounds = cumulativeBounds(splits)
     // u in [0, 1): hash to non-negative via unsigned shift, scale by 2^63
     val u = shiftrightunsigned(xxhash64(lit(seed), keyCol), 1)
       .cast("double") / 9.223372036854776e18
-    val expr = bounds.init.foldRight(lit(bounds.last._2)) {
-      case ((bound, name), elseExpr) =>
+    // bucket = first bound above u
+    val expr = bounds.init.foldRight(lit(bounds.last._1)) {
+      case ((name, bound), elseExpr) =>
         when(u < bound, lit(name)).otherwise(elseExpr)
     }
     df.withColumn("split", expr)
   }
 
-  /** Cumulative md5-range boundaries for [[assignSplitPortable]]: for all
-    * but the last split, the EXCLUSIVE upper bound of its share of the
-    * 128-bit md5 space as a 32-digit lowercase hex string (the last split
-    * takes the remainder). Public so a query and its oracle SQL embed the
-    * SAME constants — the two sides cannot drift. */
+  /** Each split's name and the cumulative upper bound of its normalized
+    * weight in (0, 1] — the last bound is 1 up to rounding. */
+  private def cumulativeBounds(
+      splits: Seq[(String, Double)]): Seq[(String, Double)] = {
+    require(splits.nonEmpty && splits.forall(_._2 > 0),
+      "splits need positive weights")
+    val total = splits.map(_._2).sum
+    splits.map(_._1).zip(
+      splits.scanLeft(0.0) { case (acc, (_, w)) => acc + w / total }.tail)
+  }
+
   /** `frac` of the 128-bit md5 space as a 32-digit lowercase hex string —
     * comparing an md5 hex digest `< md5Bound(frac)` keeps a `frac`
     * Bernoulli share, identically in every engine (equal-length lowercase
@@ -365,16 +357,15 @@ object Pipeline {
     String.format("%032x", v.bigInteger)
   }
 
-  def md5SplitBounds(splits: Seq[(String, Double)]): Seq[(String, String)] = {
-    require(splits.nonEmpty && splits.forall(_._2 > 0),
-      "splits need positive weights")
-    val total = splits.map(_._2).sum
-    val cum = splits.scanLeft(0.0) { case (acc, (_, w)) => acc + w / total }
-      .tail
-    splits.init.zip(cum.init).map { case ((name, _), frac) =>
+  /** Cumulative md5-range boundaries for [[assignSplitPortable]]: for all
+    * but the last split, the EXCLUSIVE upper bound of its share of the
+    * 128-bit md5 space as a 32-digit lowercase hex string (the last split
+    * takes the remainder). Public so a query and its oracle SQL embed the
+    * SAME constants — the two sides cannot drift. */
+  def md5SplitBounds(splits: Seq[(String, Double)]): Seq[(String, String)] =
+    cumulativeBounds(splits).init.map { case (name, frac) =>
       name -> md5Bound(frac)
     }
-  }
 
   /** Portable per-stratum Bernoulli sample: a row is kept iff the md5 of
     * (salt ++ key) lands under its stratum's fraction of the hash space.

@@ -32,6 +32,9 @@ Checks
      (a deleted suite's old report is skipped); otherwise the spec
      count is reported but not enforced (stale target/ would
      false-alarm).
+  6. README's run-time switch table: the `SPARK_GRAFT_*` names in its
+     rows must equal the names src/main and build.sbt read as string
+     literals, so a new or retired knob shows up in review.
 
 Usage: python3 tools/doc_sync_check.py   (from the repo root)
 Exit 0 = in sync; 1 = drift (each mismatch printed).
@@ -524,6 +527,18 @@ for doc_name, text in [("SCALE.md", scale), ("COVERAGE.md", coverage)]:
              f" sums to {spec_total}")
     else:
         ok(f"{doc_name} specs {quoted} == test-reports sum")
+
+# ---- 6. README switch table vs the knobs the code reads ----------------
+code_knobs = set()
+for path in (glob.glob(os.path.join(ROOT, "src/main/**/*.scala"), recursive=True)
+             + [os.path.join(ROOT, "build.sbt")]):
+    code_knobs.update(re.findall(r'"(SPARK_GRAFT_[A-Z0-9_]+)"', open(path).read()))
+doc_knobs = set(re.findall(r"^\| `(SPARK_GRAFT_[A-Z0-9_]+)`", read("README.md"), re.M))
+if doc_knobs != code_knobs:
+    fail(f"README switch table lists {sorted(doc_knobs - code_knobs)} that no"
+         f" code reads and misses {sorted(code_knobs - doc_knobs)}")
+else:
+    ok(f"README switch table == the {len(code_knobs)} SPARK_GRAFT_* names the code reads")
 
 print(f"\n{'DRIFT: ' + str(len(fails)) + ' mismatch(es)' if fails else 'in sync'}")
 sys.exit(1 if fails else 0)
