@@ -14,7 +14,8 @@ import graft.sources.Tables
   * query is timed end-to-end (5 reps INTERLEAVED round-robin across
   * queries; median AND min reported, ALL reps + GC time emitted so an
   * outlier rep is diagnosable from the artifact alone). An informational
-  * `tpch22_total` times every TPC-H shape in the catalog once.
+  * `tpch22_total` sums every TPC-H shape's min of 3 reps, taken after
+  * two warmup passes.
   *
   * The JSON line is printed to stdout and also written to
   * `BENCH_LAST.json` (launchers like sbt prefix stdout, which defeats a
@@ -273,14 +274,15 @@ object Bench {
     // Informational full-suite sweep: every TPC-H shape in the catalog —
     // not part of the headline metric (BASELINE.md defines the 8-query
     // suite) but a regression in e.g. q9/q18/q21 becomes visible
-    // round-over-round instead of timed nowhere. One warmup pass, then 3
-    // reps with the per-query MIN reported (r10 committed a single-rep
-    // sweep whose heavy rows contradicted the same JVM's rep'd sections
-    // and was un-adjudicable from the JSON alone).
+    // round-over-round instead of timed nowhere. Two warmup passes (with
+    // one, rep 1 was still on the warm-up curve and tripped the stall
+    // sentinel), then 3 reps with the per-query MIN reported (r10
+    // committed a single-rep sweep whose heavy rows contradicted the same
+    // JVM's rep'd sections and was un-adjudicable from the JSON alone).
     val tpch22Raw: Seq[(String, Seq[Double], Seq[Long])] = informational("tpch22") {
       val qs = graft.queries.TpchQueries.queries.keys.toSeq
         .sortBy(n => n.drop(1).takeWhile(_.isDigit).toInt)
-      timedSuite(qs, warmups = 1, reps = 3)(timedRun(catalog))
+      timedSuite(qs, warmups = 2, reps = 3)(timedRun(catalog))
     }
     // per-query min = steady-state cost; the total is a sum of mins
     val tpch22: Seq[(String, Double)] =
@@ -289,8 +291,8 @@ object Bench {
     // Informational LLM-pipeline sweep: representative beyond-reference
     // operators (dedup, similarity join, text filters, packing,
     // behavioral) — the throughput evidence for the non-TPC-H half of the
-    // catalog, which the headline metric never touches. One warmup pass,
-    // then 3 reps per query with the per-query MIN reported (r9's
+    // catalog, which the headline metric never touches. Two warmup passes
+    // (as tpch22), then 3 reps per query with the per-query MIN reported (r9's
     // single-rep sweep "showed" dd16 4.7→26 s and ta14 0.13→1.7 s while
     // pl21 — which composes ta14 — improved 5×; a single rep in a
     // 24-query sweep attributes environment stalls and cache evictions to
@@ -388,7 +390,7 @@ object Bench {
       // its unmodified SparkEntry catalog entry
       def llmPlan(q: String): DataFrame =
         if (q == "ss20_serve") ss20ServePlan() else catalog(q)
-      timedSuite(llm, warmups = 1, reps = 3)(timedRun(llmPlan))
+      timedSuite(llm, warmups = 2, reps = 3)(timedRun(llmPlan))
     }
     // The serve model's pins are no longer needed once the llm sweep has
     // run — and they MUST be gone before the training rows below (see

@@ -1095,29 +1095,36 @@ object Dedup {
     * against exactly this table before committing to one signal at scale.
     *
     * Scale shape: inputs are candidate-bounded pair sets (never the
-    * corpus); the overlap self-join shuffles on (id_a, id_b) — pair-set-
-    * sized; the signal-name cross join is |signals|² rows, so
-    * zero-overlap signal pairs are preserved (the dd18 sizes trick).
-    * Signals with EMPTY pair sets stay present with n = 0 and a null
-    * Jaccard when both sides are empty. */
+    * corpus); their tagged union shuffles once on (id_a, id_b) — pair-
+    * set-sized — into each pair's sorted set of signals. Exploding the
+    * set counts each signal's size, and its ordered signal pairs count
+    * the overlaps, so no self-join re-reads the union. The signal-name
+    * cross join is |signals|² rows, so zero-overlap signal pairs are
+    * preserved (the dd18 sizes trick). Signals with EMPTY pair sets stay
+    * present with n = 0 and a null Jaccard when both sides are empty. */
   def signalAgreement(signals: Seq[(String, DataFrame)]): DataFrame = {
     val spark = signals.head._2.sparkSession
     import spark.implicits._
-    // the tagged union feeds the sizes aggregate AND both sides of the
-    // overlap self-join; each leaf's distinct ends in an exchange, so the
-    // expensive pair generators under it run once and the other readers
-    // are ReusedExchanges
-    val tagged = signals.map { case (name, df) =>
-      df.select(lit(name).as("sig"), col("id_a"), col("id_b")).distinct()
+    // one read of the tagged union: each (id_a, id_b) collects the
+    // sorted set of signals that report it (a duplicate input row joins
+    // the set once); the sizes and overlap counts both read that grouped
+    // frame, whose exchange is reused, so the pair generators run once
+    val sets = signals.map { case (name, df) =>
+      df.select(col("id_a"), col("id_b"), lit(name).as("sig"))
     }.reduce(_.unionByName(_))
-    val sizes = tagged.groupBy("sig").agg(count(lit(1)).as("n"))
-    val names = signals.map(_._1).toDF("sig")
-    val common = tagged.alias("x")
-      .join(tagged.alias("y"),
-        col("x.id_a") === col("y.id_a") && col("x.id_b") === col("y.id_b") &&
-          col("x.sig") < col("y.sig"))
-      .groupBy(col("x.sig").as("sig_a"), col("y.sig").as("sig_b"))
+      .groupBy("id_a", "id_b")
+      .agg(array_sort(collect_set(col("sig"))).as("sigs"))
+    val sizes = sets.select(explode(col("sigs")).as("sig"))
+      .groupBy("sig").agg(count(lit(1)).as("n"))
+    // every ordered signal pair (a < b) of a set, by position in the
+    // sorted set
+    val ordered = flatten(transform(col("sigs"), (a, i) =>
+      transform(slice(col("sigs"), i + 2, size(col("sigs"))),
+        b => struct(a.as("sig_a"), b.as("sig_b")))))
+    val common = sets.select(explode(ordered).as("p"))
+      .groupBy(col("p.sig_a").as("sig_a"), col("p.sig_b").as("sig_b"))
       .agg(count(lit(1)).as("n_common"))
+    val names = signals.map(_._1).toDF("sig")
     names.select(col("sig").as("sig_a"))
       .crossJoin(names.select(col("sig").as("sig_b")))
       .filter(col("sig_a") < col("sig_b"))

@@ -738,20 +738,6 @@ object EventAnalytics {
           col("_sum_sq").cast("double")).as("effective_transitions"))
   }
 
-  /** Day-of-week seasonality per event type: peak weekday plus a
-    * chi-square uniformity statistic — the "is this traffic humanlike or
-    * a cron job?" detector (organic traffic dips on weekends; a
-    * scheduled scraper is flat, chi2 ≈ 0; a weekly batch job is a spike,
-    * chi2 huge).
-    *
-    * The statistic is computed from the algebraic identity
-    * χ² = Σ_d (n_d − T/7)² / (T/7) = (7·Σ n_d² − T²) / T, which needs
-    * only integer count aggregates — absent weekdays (n_d = 0) contribute
-    * correctly without generating zero rows, every sum is exact, and the
-    * single closing division is bit-identical across engines. Weekday is
-    * ISO (1 = Monday … 7 = Sunday: Spark `weekday()+1` ≡ DuckDB
-    * `isodow()`). Peak ties break to the earliest weekday. Two keyed
-    * aggregations on (type, dow) then type — scan-shaped at any scale. */
   /** Batch sessionization: split each user's event stream into sessions
     * at inactivity gaps > `gapUs` and emit per-session stats — the batch
     * twin of the streaming session window (`st3`/`st8`), run over the
@@ -822,6 +808,20 @@ object EventAnalytics {
         countDistinct(col("_day")).as("n_days"))
   }
 
+  /** Day-of-week seasonality per event type: peak weekday plus a
+    * chi-square uniformity statistic — the "is this traffic humanlike or
+    * a cron job?" detector (organic traffic dips on weekends; a
+    * scheduled scraper is flat, chi2 ≈ 0; a weekly batch job is a spike,
+    * chi2 huge).
+    *
+    * The statistic is computed from the algebraic identity
+    * χ² = Σ_d (n_d − T/7)² / (T/7) = (7·Σ n_d² − T²) / T, which needs
+    * only integer count aggregates — absent weekdays (n_d = 0) contribute
+    * correctly without generating zero rows, every sum is exact, and the
+    * single closing division is bit-identical across engines. Weekday is
+    * ISO (1 = Monday … 7 = Sunday: Spark `weekday()+1` ≡ DuckDB
+    * `isodow()`). Peak ties break to the earliest weekday. Two keyed
+    * aggregations on (type, dow) then type — scan-shaped at any scale. */
   def dowSeasonality(
       events: DataFrame, typeCol: String, tsCol: String): DataFrame = {
     val counts = events

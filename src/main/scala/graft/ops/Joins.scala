@@ -69,29 +69,6 @@ object Joins {
     * bin(point) ∈ [bin(start), bin(end)] for any positive binSize, so no
     * qualifying pair is missed. Columns are numeric (cast timestamps with
     * `unix_micros`); left/right column names must not collide. */
-  /** Enable the automatic range-join rewrite on `spark`: any inner join
-    * whose only cross-side predicates are `point >= start AND point <=
-    * end` re-plans through the same binned equi-join shape as
-    * [[rangeJoin]] — the query text stays a plain theta join
-    * (`p.between(s, e)`). Bin size is a data property (≈ typical interval
-    * length, in the point column's units) the optimizer can't infer, so
-    * the rewrite is gated on it — the same contract as a range-join
-    * hint. Also registered by `GraftExtensions` for
-    * `spark.sql.extensions` deployments. */
-  def enableRangeJoinRewrite(spark: org.apache.spark.sql.SparkSession,
-      binSize: Long): Unit = {
-    spark.conf.set(graft.plans.RangeJoinRewrite.BinSizeKey, binSize.toString)
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.contains(graft.plans.RangeJoinRewrite))
-      spark.experimental.extraOptimizations =
-        existing :+ graft.plans.RangeJoinRewrite
-  }
-
-  /** Disable the automatic rewrite (the rule stays registered but
-    * no-ops without a declared bin size). */
-  def disableRangeJoinRewrite(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.conf.unset(graft.plans.RangeJoinRewrite.BinSizeKey)
-
   def rangeJoin(
       left: DataFrame, right: DataFrame,
       point: Column, start: Column, end: Column, binSize: Long): DataFrame = {
@@ -126,7 +103,7 @@ object Joins {
     * per key. Results are identical (spec-asserted).
     *
     * The strategy is registered idempotently on the call's session, so
-    * this works without `withExtensions(new GraftExtensions)`. */
+    * this works on any session, however it was built. */
   def asOf(
       left: DataFrame, right: DataFrame,
       keys: Seq[(String, String)],

@@ -459,17 +459,6 @@ object Multimodal {
     } catch { case _: Exception => None }
   }
 
-  /** Scene-cut detection: per-frame aHash, Hamming distance between
-    * consecutive frames, a cut where the distance clears `cutThreshold`
-    * of 64 bits — the shot-boundary segmentation that decides where a
-    * video corpus gets chunked for captioning/embedding (a training
-    * pipeline samples per SCENE, not per fixed stride, or it drowns in
-    * near-identical frames). Composes [[sampleFrames]] (real GFV0 frames
-    * or the deterministic stub) with the [[perceptualHash]] aHash spec
-    * per frame; the only shuffle is the per-video lag window — keyed on
-    * media_id, state one video's sampled frames, never corpus-global.
-    * Output: one row per frame BOUNDARY (the later frame's index):
-    * (media_id, frame_idx, hamming, is_cut). */
   /** Per-frame aHash over [[sampleFrames]] output — the shared decode+
     * hash pass behind [[sceneCuts]] and [[keyframeNearDups]]:
     * (media_id, frame_idx, ahash), video media only, scan-local. */
@@ -506,6 +495,17 @@ object Multimodal {
     }(encoder)
   }
 
+  /** Scene-cut detection: per-frame aHash, Hamming distance between
+    * consecutive frames, a cut where the distance clears `cutThreshold`
+    * of 64 bits — the shot-boundary segmentation that decides where a
+    * video corpus gets chunked for captioning/embedding (a training
+    * pipeline samples per SCENE, not per fixed stride, or it drowns in
+    * near-identical frames). Composes [[sampleFrames]] (real GFV0 frames
+    * or the deterministic stub) with the [[perceptualHash]] aHash spec
+    * per frame; the only shuffle is the per-video lag window — keyed on
+    * media_id, state one video's sampled frames, never corpus-global.
+    * Output: one row per frame BOUNDARY (the later frame's index):
+    * (media_id, frame_idx, hamming, is_cut). */
   def sceneCuts(
       media: DataFrame, maxFrames: Int = 8,
       cutThreshold: Int = 10): DataFrame = {

@@ -109,24 +109,16 @@ object Pipeline {
     * points. */
   def releaseCaches(): Unit = defaultScope.release()
 
-  /** Stratified sample: per-stratum Bernoulli fractions, seeded. The
-    * standard class-balancing primitive (e.g., downsample over-represented
-    * languages). Scan-local: no shuffle. */
-  def stratifiedSample(
-      df: DataFrame, strataCol: String,
-      fractions: Map[String, Double], seed: Long): DataFrame =
-    df.stat.sampleBy(strataCol, fractions, seed)
-
   /** Exact-k deterministic per-stratum sample: within each stratum, rank
     * rows by a seeded md5 of their key and keep the k smallest. Unlike
-    * the Bernoulli [[stratifiedSample]] (output SIZE is random), this
-    * returns EXACTLY min(k, |stratum|) rows per stratum — the shape
+    * the Bernoulli [[stratifiedSamplePortable]] (output SIZE is random),
+    * this returns EXACTLY min(k, |stratum|) rows per stratum — the shape
     * needed when downstream capacity is fixed (eval subsets, per-domain
     * quotas). Deterministic on any partitioning/cluster layout (pure
-    * function of seed + key, like [[assignSplit]]), and engine-portable:
-    * md5 is identically defined everywhere, so the selection itself is
-    * oracle-checkable — ties in the hash (only possible for duplicate
-    * keys) break on the key itself.
+    * function of seed + key, like [[assignSplitPortable]]), and
+    * engine-portable: md5 is identically defined everywhere, so the
+    * selection itself is oracle-checkable — ties in the hash (only
+    * possible for duplicate keys) break on the key itself.
     *
     * Scale shape: one shuffle on the stratum key; the per-stratum window
     * is partitioned, never global. A stratum so hot it swamps one task
@@ -146,10 +138,11 @@ object Pipeline {
     * probability ∝ weight — Efraimidis–Spirakis A-ES: each row gets the
     * key u^(1/w) with u uniform in [0,1), and the k largest keys win.
     * u derives from a seeded xxhash64 of the row key (the same
-    * pure-function-of-(seed,key) construction as [[assignSplit]]), so
-    * the sample is deterministic on any partitioning and replays
-    * bit-identically — no RNG state, no `rand()`. The quality-weighted
-    * subset-selection primitive ("sample 1M docs ∝ quality score").
+    * pure-function-of-(seed,key) construction as
+    * [[assignSplitPortable]]), so the sample is deterministic on any
+    * partitioning and replays bit-identically — no RNG state, no
+    * `rand()`. The quality-weighted subset-selection primitive ("sample
+    * 1M docs ∝ quality score").
     *
     * Scale shape: the key is scan-local; the global top-k plans
     * TakeOrderedAndProject (per-partition top-k, then a k-row merge on
@@ -172,13 +165,6 @@ object Pipeline {
       .limit(k)
       .drop("_aes")
   }
-
-  /** Reproducible global shuffle: orders by a salted content hash. The
-    * same (data, seed) yields the same permutation on any cluster layout —
-    * unlike rand()-based shuffles. Used to decorrelate training batches.
-    * One range-partitioned sort — the unavoidable cost of a total order. */
-  def deterministicShuffle(df: DataFrame, seed: Long, keyCols: Column*): DataFrame =
-    df.orderBy(xxhash64(lit(seed) +: keyCols: _*), keyCols.head)
 
   /** Appends `name`, the `fold` of `value` under the total order
     * `orderCols` (plain or `asc`/`desc` columns), as one
@@ -259,36 +245,18 @@ object Pipeline {
     * The binding source is kept whole (its share is the budget); every
     * other source downsamples to match. Per-source fractions derive from
     * one small count aggregate (rows = #sources on the driver — O(1)
-    * per source, not per row); the sampling itself is the seeded
-    * per-stratum Bernoulli of [[stratifiedSample]], so the whole thing
-    * is scan + one tiny agg, no shuffle of the data.
+    * per source, not per row); the sampling itself is the portable
+    * per-stratum hash-Bernoulli of [[stratifiedSamplePortable]], a pure
+    * function of (salt, key) — layout-independent and
+    * engine-recomputable — so the whole thing is scan + one tiny agg, no
+    * shuffle of the data.
     *
     * Sources present in the data but absent from `targetShares` are
     * dropped (share 0). Shares are normalized. */
-  def mixtureSample(
-      df: DataFrame, sourceCol: String,
-      targetShares: Map[String, Double], seed: Long): DataFrame = {
-    val (wanted, fractions) = mixtureFractions(df, sourceCol, targetShares)
-    stratifiedSample(wanted, sourceCol, fractions, seed)
-  }
-
-  /** [[mixtureSample]] with the portable hash-Bernoulli core
-    * ([[stratifiedSamplePortable]]): same binding-source-kept-whole
-    * fraction math, but the per-row selection is a pure function of
-    * (salt, key) — layout-independent and engine-recomputable. */
   def mixtureSamplePortable(
       df: DataFrame, sourceCol: String,
       targetShares: Map[String, Double], salt: String,
       keyCol: Column): DataFrame = {
-    val (wanted, fractions) = mixtureFractions(df, sourceCol, targetShares)
-    stratifiedSamplePortable(wanted, sourceCol, fractions, salt, keyCol)
-  }
-
-  /** The rows of the requested sources and each source's keep fraction
-    * for [[mixtureSample]] and [[mixtureSamplePortable]]. */
-  private def mixtureFractions(
-      df: DataFrame, sourceCol: String, targetShares: Map[String, Double])
-      : (DataFrame, Map[String, Double]) = {
     require(targetShares.nonEmpty && targetShares.values.forall(_ > 0),
       "target shares must be positive")
     val total = targetShares.values.sum
@@ -311,41 +279,7 @@ object Pipeline {
       k -> (if (k == bindingKey) 1.0
             else math.min(1.0, outTotal * w / have(k)))
     }
-    (wanted, fractions)
-  }
-
-  /** Deterministic dataset split (train/val/test …): each row's split is
-    * a pure function of (seed, key) — the same row lands in the same
-    * split on any cluster, any partitioning, any run, and rows are never
-    * duplicated or dropped across splits (disjoint + exhaustive by
-    * construction: one hash, one bucket). Weights are normalized
-    * proportions. Scan-local — no shuffle, no RNG state. The standard
-    * leakage-safe alternative to `randomSplit`, whose per-partition RNG
-    * reassigns rows when the input partitioning changes. */
-  def assignSplit(
-      df: DataFrame, keyCol: Column, seed: Long,
-      splits: Seq[(String, Double)]): DataFrame = {
-    val bounds = cumulativeBounds(splits)
-    // u in [0, 1): hash to non-negative via unsigned shift, scale by 2^63
-    val u = shiftrightunsigned(xxhash64(lit(seed), keyCol), 1)
-      .cast("double") / 9.223372036854776e18
-    // bucket = first bound above u
-    val expr = bounds.init.foldRight(lit(bounds.last._1)) {
-      case ((name, bound), elseExpr) =>
-        when(u < bound, lit(name)).otherwise(elseExpr)
-    }
-    df.withColumn("split", expr)
-  }
-
-  /** Each split's name and the cumulative upper bound of its normalized
-    * weight in (0, 1] — the last bound is 1 up to rounding. */
-  private def cumulativeBounds(
-      splits: Seq[(String, Double)]): Seq[(String, Double)] = {
-    require(splits.nonEmpty && splits.forall(_._2 > 0),
-      "splits need positive weights")
-    val total = splits.map(_._2).sum
-    splits.map(_._1).zip(
-      splits.scanLeft(0.0) { case (acc, (_, w)) => acc + w / total }.tail)
+    stratifiedSamplePortable(wanted, sourceCol, fractions, salt, keyCol)
   }
 
   /** `frac` of the 128-bit md5 space as a 32-digit lowercase hex string —
@@ -362,14 +296,20 @@ object Pipeline {
     * 128-bit md5 space as a 32-digit lowercase hex string (the last split
     * takes the remainder). Public so a query and its oracle SQL embed the
     * SAME constants — the two sides cannot drift. */
-  def md5SplitBounds(splits: Seq[(String, Double)]): Seq[(String, String)] =
-    cumulativeBounds(splits).init.map { case (name, frac) =>
-      name -> md5Bound(frac)
-    }
+  def md5SplitBounds(splits: Seq[(String, Double)]): Seq[(String, String)] = {
+    require(splits.nonEmpty && splits.forall(_._2 > 0),
+      "splits need positive weights")
+    val total = splits.map(_._2).sum
+    // each split's cumulative upper bound in (0, 1], the last one 1 up to
+    // rounding
+    splits.map(_._1).zip(
+      splits.scanLeft(0.0) { case (acc, (_, w)) => acc + w / total }.tail)
+      .init.map { case (name, frac) => name -> md5Bound(frac) }
+  }
 
   /** Portable per-stratum Bernoulli sample: a row is kept iff the md5 of
     * (salt ++ key) lands under its stratum's fraction of the hash space.
-    * Unlike the RNG [[stratifiedSample]], the selection is a pure
+    * Unlike an RNG sample (`sampleBy`), the selection is a pure
     * function of (salt, key) — the same rows are kept on any cluster,
     * any partitioning, any engine (a resumed job with a different
     * layout keeps the SAME sample, and DuckDB can recompute the
@@ -388,15 +328,23 @@ object Pipeline {
     df.filter(keep)
   }
 
-  /** Portable variant of [[assignSplit]]: the unit-interval draw is the
-    * md5 hex digest of (salt ++ key) compared against the precomputed
-    * [[md5SplitBounds]] range boundaries. md5 is the SAME function in
-    * every engine (unlike xxhash64, which is Spark-internal), so the
-    * assignment reproduces bit-identically in DuckDB / Trino / Python —
-    * the split of a 100 TB corpus survives an engine migration, and the
-    * query becomes oracle-checkable. Equal-length lowercase hex compares
-    * lexicographically exactly as the 128-bit value it encodes. Same
-    * scale shape as assignSplit: a pure per-row expression, no shuffle. */
+  /** Deterministic dataset split (train/val/test …): each row's split is
+    * a pure function of (salt, key) — the same row lands in the same
+    * split on any cluster, any partitioning, any run, and rows are never
+    * duplicated or dropped across splits (disjoint + exhaustive by
+    * construction: one hash, one bucket). Weights are normalized
+    * proportions. Scan-local — no shuffle, no RNG state. The standard
+    * leakage-safe alternative to `randomSplit`, whose per-partition RNG
+    * reassigns rows when the input partitioning changes.
+    *
+    * The unit-interval draw is the md5 hex digest of (salt ++ key)
+    * compared against the precomputed [[md5SplitBounds]] range
+    * boundaries. md5 is the SAME function in every engine (unlike
+    * xxhash64, which is Spark-internal), so the assignment reproduces
+    * bit-identically in DuckDB / Trino / Python — the split of a 100 TB
+    * corpus survives an engine migration, and the query becomes
+    * oracle-checkable. Equal-length lowercase hex compares
+    * lexicographically exactly as the 128-bit value it encodes. */
   def assignSplitPortable(
       df: DataFrame, keyCol: Column, salt: String,
       splits: Seq[(String, Double)]): DataFrame = {
@@ -434,13 +382,6 @@ object Pipeline {
     row.schema.fieldNames.zip(row.toSeq).toMap
   }
 
-  /** Size-targeted compaction: rewrite a directory of (typically many
-    * small) parquet files into ~`targetBytes` files — the small-files
-    * fix every long-running ingestion needs (file-count explosions turn
-    * scan planning and commit protocols into the bottleneck long before
-    * data size does). Partition count derives from the actual input
-    * bytes; `repartition` (round-robin) balances rows regardless of the
-    * input layout. Returns the partition count chosen. */
   /** Total bytes under a path via the Hadoop FileSystem API — works on
     * any supported filesystem (local, HDFS, object stores) and recurses
     * into partitioned layouts, unlike java.io.File which silently reports
@@ -452,6 +393,13 @@ object Pipeline {
     fs.getContentSummary(path).getLength
   }
 
+  /** Size-targeted compaction: rewrite a directory of (typically many
+    * small) parquet files into ~`targetBytes` files — the small-files
+    * fix every long-running ingestion needs (file-count explosions turn
+    * scan planning and commit protocols into the bottleneck long before
+    * data size does). Partition count derives from the actual input
+    * bytes; `repartition` (round-robin) balances rows regardless of the
+    * input layout. Returns the partition count chosen. */
   def compact(
       spark: org.apache.spark.sql.SparkSession,
       inDir: String, outDir: String, targetBytes: Long): Int = {
@@ -723,8 +671,8 @@ object Pipeline {
     * data, where the majority class otherwise swamps the loss. The
     * deterministic order makes the keep-set auditable and reproducible
     * (pass a quality ranking to keep the BEST of each class, or an id
-    * order for an unbiased-as-the-ids slice; seeded-random balancing is
-    * [[mixtureSample]]'s territory).
+    * order for an unbiased-as-the-ids slice; salted-hash balancing is
+    * [[mixtureSamplePortable]]'s territory).
     *
     * Scale shape: one keyed count to find the minimum (broadcast back as
     * a 1-row frame), one rank window partitioned BY STRATUM — state is
@@ -946,30 +894,6 @@ object Pipeline {
         col("w_nano_sum").cast("double") / lit(1e9))
   }
 
-  /** Temperature-scaled source mixture — the multilingual / data-mixing
-    * lever of mT5 (Xue et al. 2021) and XLM-R (Conneau et al. 2020):
-    * sample source s with probability ∝ n_s^α, α < 1 upweighting small
-    * sources. Each source is deterministically downsampled to
-    * t_s = ⌊budget · n_s^α / Σ_t n_t^α⌋ rows via the portable
-    * md5-Bernoulli rule ([[stratifiedSamplePortable]]'s mechanics).
-    *
-    * α is FIXED at ½ because sqrt is an IEEE correctly-rounded operation
-    * (pow/exp/ln are not): every derived quantity — per-source share,
-    * target count, keep fraction, 60-bit hash threshold — reproduces
-    * bit-identically on any engine, so the sample survives an engine
-    * migration and is oracle-checkable outright. The per-source sqrt
-    * terms are quantized to micro-units and summed as exact integers
-    * (order-independence; same mechanics as [[dsirWeights]]).
-    *
-    * The keep test compares the first 15 hex digits of md5(salt‖key) —
-    * a uniform 60-bit draw — against ⌊f_s·2^60⌋ rendered as a 15-digit
-    * zero-padded hex literal: equal-length lowercase hex compares
-    * lexicographically exactly as the integers it encodes. Sources whose
-    * target meets or exceeds their count are kept whole.
-    *
-    * Scale shape: the per-source share table is #sources rows —
-    * broadcast; the keep test is a pure scan-local expression on the
-    * fact side. No fact shuffle at all. */
   /** Data-constrained epoch schedule (Muennighoff et al. 2023, "Scaling
     * Data-Constrained Language Models": repeating data up to ~4 epochs
     * costs little vs fresh tokens; beyond that returns decay fast): given
@@ -1014,6 +938,30 @@ object Pipeline {
         "deficit_tokens", "epochs")
   }
 
+  /** Temperature-scaled source mixture — the multilingual / data-mixing
+    * lever of mT5 (Xue et al. 2021) and XLM-R (Conneau et al. 2020):
+    * sample source s with probability ∝ n_s^α, α < 1 upweighting small
+    * sources. Each source is deterministically downsampled to
+    * t_s = ⌊budget · n_s^α / Σ_t n_t^α⌋ rows via the portable
+    * md5-Bernoulli rule ([[stratifiedSamplePortable]]'s mechanics).
+    *
+    * α is FIXED at ½ because sqrt is an IEEE correctly-rounded operation
+    * (pow/exp/ln are not): every derived quantity — per-source share,
+    * target count, keep fraction, 60-bit hash threshold — reproduces
+    * bit-identically on any engine, so the sample survives an engine
+    * migration and is oracle-checkable outright. The per-source sqrt
+    * terms are quantized to micro-units and summed as exact integers
+    * (order-independence; same mechanics as [[dsirWeights]]).
+    *
+    * The keep test compares the first 15 hex digits of md5(salt‖key) —
+    * a uniform 60-bit draw — against ⌊f_s·2^60⌋ rendered as a 15-digit
+    * zero-padded hex literal: equal-length lowercase hex compares
+    * lexicographically exactly as the integers it encodes. Sources whose
+    * target meets or exceeds their count are kept whole.
+    *
+    * Scale shape: the per-source share table is #sources rows —
+    * broadcast; the keep test is a pure scan-local expression on the
+    * fact side. No fact shuffle at all. */
   def temperatureMixture(
       df: DataFrame, sourceCol: String, keyCol: Column, salt: String,
       budgetFrac: Double = 0.5): DataFrame = {

@@ -403,8 +403,7 @@ object Similarity {
     * vectors are NOT unit-normalized (recommender/user–item scores, where
     * magnitude encodes popularity): cosine ranks direction only, MIPS
     * rewards magnitude too. BRUTE-FORCE BASELINE, same contract as
-    * [[bruteForceTopK]]; the scale path is [[mipsViaCosine]], which
-    * reduces MIPS to the cosine problem every ANN index here serves.
+    * [[bruteForceTopK]]: every query is scored against the whole corpus.
     * Dot is the ordered left fold → oracle hash-exact. */
   def mipsTopK(
       queriesDf: DataFrame, corpus: DataFrame,
@@ -421,47 +420,6 @@ object Similarity {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= topK)
       .select("qid", "rank", "vec_id", "ip")
-  }
-
-  /** Shrivastava & Li (NeurIPS 2014) asymmetric MIPS→cosine reduction:
-    * append `sqrt(M² − ‖x‖²)` to every corpus vector (M = the max corpus
-    * norm — a 1-row broadcast) and `0` to the query. Every augmented
-    * corpus vector then has norm exactly M, so cosine order against the
-    * augmented query equals inner-product order — and any cosine-ANN
-    * structure in this file (SRP-LSH `ss2`, IVF `ss4`, PQ `ss10`) can
-    * serve MIPS with zero new index machinery. The augmentation is one
-    * scan-local map per side; exactness of the RANKING is spec-asserted
-    * against [[mipsTopK]]. */
-  /** The Shrivastava–Li augmentation alone: corpus vectors get
-    * `sqrt(M² − ‖x‖²)` appended (M = max corpus norm, a 1-row
-    * broadcast), queries get `0` — returns `(augmented queries,
-    * augmented corpus)`, both as `(id, vec)` with dim+1 components.
-    * Factored out (r18 review) so any cosine search backend composes
-    * the SAME transform as [[mipsViaCosine]] — a fix here reaches all
-    * of them. */
-  def mipsAugment(
-      queriesDf: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions.broadcast
-    val c0 = corpus.select(col(idCol).as("id"),
-        asDouble(col(vecCol)).as("vec"))
-      .withColumn("_n2", dot(col("vec"), col("vec")))
-    val m2 = c0.agg(max(col("_n2")).as("_m2"))
-    // max-norm row: _m2 − _n2 is exactly 0.0 (same double subtracted), so
-    // sqrt never sees a negative
-    val cAug = c0.crossJoin(broadcast(m2))
-      .select(col("id"),
-        concat(col("vec"), array(sqrt(col("_m2") - col("_n2")))).as("vec"))
-    val qAug = queriesDf.select(col(idCol).as("id"),
-        concat(asDouble(col(vecCol)), array(lit(0.0))).as("vec"))
-    (qAug, cAug)
-  }
-
-  def mipsViaCosine(
-      queriesDf: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, topK: Int): DataFrame = {
-    val (qAug, cAug) = mipsAugment(queriesDf, corpus, idCol, vecCol)
-    bruteForceTopK(qAug, cAug, "id", "vec", topK)
   }
 
   /** All pairs above a cosine threshold — BRUTE-FORCE BASELINE (bounded
@@ -875,33 +833,6 @@ object Similarity {
       .select(col("qid"), col("rank"), col("vec_id"), col("approx_d2"))
   }
 
-  /** IVF-PQ / IVFADC (Jégou, Douze & Schmid 2011 §IV — the composition
-    * billion-scale ANN actually deploys): IVF coarse quantization prunes
-    * WHICH lists a query reads, PQ on the RESIDUAL (vec − coarse
-    * centroid) compresses WHAT each list stores, and asymmetric distance
-    * (ADC) scores codes against an exact per-(query, probed-cell) lookup
-    * table. [[ivfTopK]] alone still reads full vectors; [[pqTopK]] alone
-    * still scans every code; composed, a query touches nprobe/numCoarse
-    * of the corpus at m bytes per vector.
-    *
-    * Determinism mirrors the ss10 contract exactly: coarse centroids are
-    * the numCoarse lowest-id corpus vectors (no Lloyd — fixed seeds);
-    * corpus assignment by (squared-L2 asc, cid asc); one shared residual
-    * codebook per subspace seeded from the cbSize lowest-id residuals
-    * and refined by `updates` Lloyd rounds with exact-DECIMAL(18,9)
-    * per-dim means; first-minimum argmin encoding; left-fold ADC; total
-    * (approx_d2 asc, vec_id asc) rank, self excluded. Value-checked
-    * against SignatureTruth's scalar replication (ss20.parquet).
-    *
-    * Scale shape: coarse centroids and codebooks are bounded driver
-    * state (numCoarse×D + m×cbSize×D/m doubles) compiled into scan-local
-    * codegen expressions; encoding never shuffles; the probe side
-    * (queries × nprobe rows, with LUTs of m×cbSize doubles each)
-    * BROADCASTS into an equi join on cid — the corpus is never
-    * replicated, never cross-joined, and at rest the cid key is exactly
-    * [[writeIvfIndex]]'s partition column, so the scan prunes to the
-    * probed cells before a byte is read. Only the per-query top-k window
-    * shuffles. */
   /** Train all `m` per-subspace PQ codebooks over `frame`'s `vecCol`
     * (a full-dim double array; subspace `j` is its slice
     * `[j·sub, (j+1)·sub)`) with ONE bounded seed collect and ONE pass
@@ -1122,7 +1053,35 @@ object Similarity {
       .select(col("qid"), col("rank"), col("vec_id"))
   }
 
-  /** The composed one-call form (train + serve in one plan) — the
+  /** IVF-PQ / IVFADC (Jégou, Douze & Schmid 2011 §IV — the composition
+    * billion-scale ANN actually deploys): IVF coarse quantization prunes
+    * WHICH lists a query reads, PQ on the RESIDUAL (vec − coarse
+    * centroid) compresses WHAT each list stores, and asymmetric distance
+    * (ADC) scores codes against an exact per-(query, probed-cell) lookup
+    * table. [[ivfTopK]] alone still reads full vectors; [[pqTopK]] alone
+    * still scans every code; composed, a query touches nprobe/numCoarse
+    * of the corpus at m bytes per vector.
+    *
+    * Determinism mirrors the ss10 contract exactly: coarse centroids are
+    * the numCoarse lowest-id corpus vectors (no Lloyd — fixed seeds);
+    * corpus assignment by (squared-L2 asc, cid asc); one shared residual
+    * codebook per subspace seeded from the cbSize lowest-id residuals
+    * and refined by `updates` Lloyd rounds with exact-DECIMAL(18,9)
+    * per-dim means; first-minimum argmin encoding; left-fold ADC; total
+    * (approx_d2 asc, vec_id asc) rank, self excluded. Value-checked
+    * against SignatureTruth's scalar replication (ss20.parquet).
+    *
+    * Scale shape: coarse centroids and codebooks are bounded driver
+    * state (numCoarse×D + m×cbSize×D/m doubles) compiled into scan-local
+    * codegen expressions; encoding never shuffles; the probe side
+    * (queries × nprobe rows, with LUTs of m×cbSize doubles each)
+    * BROADCASTS into an equi join on cid — the corpus is never
+    * replicated, never cross-joined, and at rest the cid key is exactly
+    * [[writeIvfIndex]]'s partition column, so the scan prunes to the
+    * probed cells before a byte is read. Only the per-query top-k window
+    * shuffles.
+    *
+    * The composed one-call form (train + serve in one plan) — the
     * oracle-checked catalog entry. Identical math to the split form by
     * construction: it IS `ivfPqServe(ivfPqTrain(...))`. */
   def ivfPqTopK(

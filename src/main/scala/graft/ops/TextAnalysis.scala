@@ -141,12 +141,6 @@ object TextAnalysis {
       greatest(size(gs), lit(1)).cast("double")
   }
 
-  /** Share of tokens taken by the single most frequent token (the other
-    * standard repetition signal). Implemented as a scan-local expression:
-    * per distinct token, count its occurrences with a nested array
-    * filter — O(distinct × len) per document, bounded by document length,
-    * and shuffle-free, which beats an explode + two-level aggregation at
-    * scan time for bounded docs. */
   /** BM25 ranked retrieval over the corpus for a fixed term set — the
     * classic sparse-retrieval scorer (Robertson–Spärck Jones/Okapi),
     * built from the same statistics as the inverted index (ta8):
@@ -276,6 +270,12 @@ object TextAnalysis {
       .orderBy(col("lift").desc, col("a"), col("b"))
   }
 
+  /** Share of tokens taken by the single most frequent token (the other
+    * standard repetition signal). Implemented as a scan-local expression:
+    * per distinct token, count its occurrences with a nested array
+    * filter — O(distinct × len) per document, bounded by document length,
+    * and shuffle-free, which beats an explode + two-level aggregation at
+    * scan time for bounded docs. */
   def topTokenFrac(toks: Column): Column = {
     val counts = transform(array_distinct(toks),
       t => size(filter(toks, x => x === t)))
@@ -847,31 +847,6 @@ object TextAnalysis {
     lit(1.0) / (lit(1.0) + exp(-norm * lit(4.0)))
   }
 
-  /** Corpus-LM token-rarity scoring — the perplexity-proxy quality
-    * filter (Wenzek et al. 2020 "CCNet" keep/drop documents by LM
-    * perplexity; at corpus scale the unigram LM is its shuffle-cheap
-    * first approximation). Per document: the arithmetic mean and max of
-    * each token's INVERSE unigram probability N/c(tok) — the log-free
-    * cousin of perplexity, which is the GEOMETRIC mean of the same
-    * per-token inverse probabilities. The arithmetic form keeps every
-    * per-token value an exact integer ratio (one correctly-rounded IEEE
-    * division → bit-identical on any engine), where ln/exp are not
-    * correctly-rounded-mandated and drift in the last ulp across libm
-    * implementations (same reasoning as bm25Search's rational idf).
-    *
-    * Cross-engine-exact mean: per-token values are quantized scan-side
-    * to integer micro-units — floor(x·1e6), multiply and floor both
-    * deterministic IEEE ops on identical inputs — and summed as BIGINT:
-    * an exact, order-independent sum. (Double summation is
-    * partition-order-dependent, and decimal casts of arbitrary doubles
-    * round DIFFERENTLY across engines: Spark half-up on the shortest
-    * repr, DuckDB truncation of x·10^scale — the OracleSafe decimal
-    * trick is only safe for decimal-origin money values.)
-    *
-    * Scale shape: one token-keyed shuffle builds the count table
-    * (vocab-sized, a reusable per-corpus-snapshot artifact at 100 TB),
-    * the corpus total broadcasts as one row, the token→count join is
-    * the only fan-in, and the final agg is keyed on doc_id. */
   /** CCNet's head/middle/tail corpus split (Wenzek et al. 2020 §4.3:
     * terciles of LM score; head = most target-like, tail = candidates
     * for dropping): bucket each doc by its [[unigramRarity]] score
@@ -903,6 +878,31 @@ object TextAnalysis {
           .otherwise(lit("tail")).as("ccnet_bucket"))
   }
 
+  /** Corpus-LM token-rarity scoring — the perplexity-proxy quality
+    * filter (Wenzek et al. 2020 "CCNet" keep/drop documents by LM
+    * perplexity; at corpus scale the unigram LM is its shuffle-cheap
+    * first approximation). Per document: the arithmetic mean and max of
+    * each token's INVERSE unigram probability N/c(tok) — the log-free
+    * cousin of perplexity, which is the GEOMETRIC mean of the same
+    * per-token inverse probabilities. The arithmetic form keeps every
+    * per-token value an exact integer ratio (one correctly-rounded IEEE
+    * division → bit-identical on any engine), where ln/exp are not
+    * correctly-rounded-mandated and drift in the last ulp across libm
+    * implementations (same reasoning as bm25Search's rational idf).
+    *
+    * Cross-engine-exact mean: per-token values are quantized scan-side
+    * to integer micro-units — floor(x·1e6), multiply and floor both
+    * deterministic IEEE ops on identical inputs — and summed as BIGINT:
+    * an exact, order-independent sum. (Double summation is
+    * partition-order-dependent, and decimal casts of arbitrary doubles
+    * round DIFFERENTLY across engines: Spark half-up on the shortest
+    * repr, DuckDB truncation of x·10^scale — the OracleSafe decimal
+    * trick is only safe for decimal-origin money values.)
+    *
+    * Scale shape: one token-keyed shuffle builds the count table
+    * (vocab-sized, a reusable per-corpus-snapshot artifact at 100 TB),
+    * the corpus total broadcasts as one row, the token→count join is
+    * the only fan-in, and the final agg is keyed on doc_id. */
   def unigramRarity(
       docs: org.apache.spark.sql.DataFrame,
       idCol: String, textCol: String): org.apache.spark.sql.DataFrame = {

@@ -2,6 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
 /** Logical as-of join (backward, inclusive): for every left row, attach
   * the single right row with equal keys and the greatest `rightTime` ≤
@@ -14,8 +15,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
   * rank-filtering, a per-key quadratic intermediate). The native operator
   * is the classic Spark extension shape: logical node here, planning rule
   * in [[AsOfJoinStrategy]], sort-merge physical operator in
-  * [[AsOfJoinExec]], registered through `SparkSessionExtensions`
-  * ([[GraftExtensions]]) or `spark.experimental.extraStrategies`.
+  * [[AsOfJoinExec]], registered on the caller's session through
+  * `spark.experimental.extraStrategies`.
   *
   * Expressions are resolved against the children by the caller
   * (`graft.ops.Joins.asOf`), so the node arrives at the analyzer already
@@ -38,4 +39,14 @@ case class AsOfJoin(
   override protected def withNewChildrenInternal(
       newLeft: LogicalPlan, newRight: LogicalPlan): AsOfJoin =
     copy(left = newLeft, right = newRight)
+}
+
+/** Plans [[AsOfJoin]] as [[AsOfJoinExec]]; everything else falls through
+  * to the built-in strategies. */
+object AsOfJoinStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case AsOfJoin(l, r, lk, rk, lt, rt, tb) =>
+      AsOfJoinExec(lk, rk, lt, rt, tb, planLater(l), planLater(r)) :: Nil
+    case _ => Nil
+  }
 }

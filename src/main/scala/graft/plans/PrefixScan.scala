@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, Expression, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** How [[PrefixScan]] folds its value over the total order. A fold is an
@@ -74,4 +75,13 @@ case class PrefixScan(
 
   override protected def withNewChildInternal(newChild: LogicalPlan): PrefixScan =
     copy(child = newChild)
+}
+
+/** Plans [[PrefixScan]] as [[PrefixScanExec]]. */
+object PrefixScanStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case PrefixScan(value, order, fold, out, child) =>
+      PrefixScanExec(value, order, fold, out, planLater(child)) :: Nil
+    case _ => Nil
+  }
 }

@@ -4,9 +4,10 @@ import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Pipeline, TextAnalysis}
 import graft.sources.Tables
 
-/** Training-data pipeline queries: sampling (rows-only, seeded RNG is
-  * engine-specific), reproducible shuffle (rows-only, xxhash order), and
-  * context-window packing (oracle-exact window arithmetic). */
+/** Training-data pipeline queries: sampling, splits and a reproducible
+  * shuffle (hash draws that are pure functions of salt and key, so the
+  * selection does not depend on the layout), and context-window packing
+  * (oracle-exact window arithmetic). */
 object PipelineQueries extends QueryPack {
 
   // pl6's split spec and its md5-range boundaries — shared between the

@@ -221,9 +221,6 @@ object TpchQueries extends QueryPack {
        GROUP BY s_name
        ORDER BY numwait DESC, s_name LIMIT 100"""
 
-  /** Q3 body over supplied base relations — `Bench`'s bucketed mode reuses
-    * it with pre-bucketed lineitem/orders so the fact-to-fact join runs
-    * with zero exchanges. */
   /** The headline revenue expression. */
   private val revExpr =
     col("l_extendedprice") * (lit(1.0) - col("l_discount"))
@@ -253,6 +250,8 @@ object TpchQueries extends QueryPack {
         quantGuarded(col("revenue"), col("_mu"), col("_n"), "double", query))
       .drop("_mu", "_n")
 
+  /** Q3 body over supplied base relations, so a caller can hand it its
+    * own lineitem/orders/customer frames (TpchRewriteSpec does). */
   def q3Body(li0: DataFrame, ord0: DataFrame, cust0: DataFrame): DataFrame = {
     val cust = cust0.filter(col("c_mktsegment") === "BUILDING")
     val ord = ord0.filter(col("o_orderdate") < lit("1999-06-01").cast("timestamp"))

@@ -17,9 +17,9 @@ object GraftBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Idempotently add a planner strategy to a live session — lets custom
-    * operators work on sessions that were not built with
-    * `withExtensions(new GraftExtensions)`. */
+  /** Idempotently add a planner strategy to a live session — the one way
+    * the custom operators' strategies are registered, so they work on any
+    * session, however it was built. */
   def registerStrategy(
       spark: SparkSession,
       strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {

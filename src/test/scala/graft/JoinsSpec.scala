@@ -29,40 +29,6 @@ class JoinsSpec extends GraftSuite {
            !plan.contains("BroadcastNestedLoopJoin"), plan)
   }
 
-  test("range-join rewrite rule re-plans a naive BETWEEN join as an equi join") {
-    import spark.implicits._
-    val points = (0L until 1000L).map(p => (p, p * 10L)).toDF("pid", "p")
-    val intervals = (0L until 200L)
-      .map(i => (i, i * 37L, i * 37L + (i % 5) * 40L))
-      .toDF("iid", "s", "e")
-    // Plain theta-join query text — no operator call, no manual bins.
-    def naiveJoin = points.join(intervals,
-      col("p").between(col("s"), col("e")))
-    val expected = naiveJoin.collect().toSet
-    val before = naiveJoin.queryExecution.executedPlan.toString
-    assert(before.contains("CartesianProduct") ||
-           before.contains("BroadcastNestedLoopJoin"),
-      s"baseline should be a pairwise scan:\n$before")
-    Joins.enableRangeJoinRewrite(spark, binSize = 64L)
-    try {
-      val rewritten = naiveJoin
-      val plan = rewritten.queryExecution.executedPlan.toString
-      assert(!plan.contains("CartesianProduct") &&
-             !plan.contains("BroadcastNestedLoopJoin"), plan)
-      assert(rewritten.collect().toSet === expected)
-      // the rewrite must also fire through pure SQL text
-      points.createOrReplaceTempView("rj_points")
-      intervals.createOrReplaceTempView("rj_intervals")
-      val sqlDf = spark.sql(
-        """SELECT pid, iid FROM rj_points JOIN rj_intervals
-           ON p >= s AND p <= e""")
-      val sqlPlan = sqlDf.queryExecution.executedPlan.toString
-      assert(!sqlPlan.contains("CartesianProduct") &&
-             !sqlPlan.contains("BroadcastNestedLoopJoin"), sqlPlan)
-      assert(sqlDf.count() === expected.size)
-    } finally Joins.disableRangeJoinRewrite(spark)
-  }
-
   test("salted join returns exactly the plain join's rows") {
     val ord = Tables.orders(spark, sf).select("o_orderkey", "o_custkey")
     val cust = Tables.customer(spark, sf).select("c_custkey", "c_mktsegment")

@@ -11,7 +11,8 @@ class PipelineSpec extends GraftSuite {
 
   test("mixture sampling keeps the binding source whole and is reproducible") {
     val target = Map("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2)
-    val mixed = Pipeline.mixtureSample(docs, "source", target, seed = 11L)
+    val mixed = Pipeline.mixtureSamplePortable(
+      docs, "source", target, salt = "11:", col("doc_id"))
     val got = mixed.groupBy("source").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     // only requested sources survive
@@ -23,15 +24,17 @@ class PipelineSpec extends GraftSuite {
     assert(got("src0") === have("src0"))
     // downsampled sources never exceed availability or the binding source
     got.foreach { case (s, n) => assert(n <= have(s)) }
-    // seeded: bit-for-bit reproducible
-    val again = Pipeline.mixtureSample(docs, "source", target, seed = 11L)
+    // salted: bit-for-bit reproducible
+    val again = Pipeline.mixtureSamplePortable(
+      docs, "source", target, salt = "11:", col("doc_id"))
     assert(mixed.exceptAll(again).count() === 0)
     assert(again.exceptAll(mixed).count() === 0)
   }
 
   test("split assignment is deterministic, exhaustive, and proportional") {
     val splits = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
-    val assigned = Pipeline.assignSplit(docs, col("doc_id"), seed = 7L, splits)
+    val assigned = Pipeline.assignSplitPortable(
+      docs, col("doc_id"), salt = "7:", splits)
     // exhaustive: every row gets exactly one valid split label
     val bymSplit = assigned.groupBy("split").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -40,15 +43,16 @@ class PipelineSpec extends GraftSuite {
     // proportional within a loose tolerance at fixture size
     val n = docs.count().toDouble
     assert(math.abs(bymSplit("train") / n - 0.8) < 0.1, bymSplit)
-    // deterministic: same seed → identical assignment; the split is a
+    // deterministic: same salt → identical assignment; the split is a
     // pure function of the KEY, so repartitioning cannot move rows
     // (unlike randomSplit)
-    val again = Pipeline.assignSplit(
-      docs.repartition(7), col("doc_id"), seed = 7L, splits)
+    val again = Pipeline.assignSplitPortable(
+      docs.repartition(7), col("doc_id"), salt = "7:", splits)
     assert(assigned.select("doc_id", "split")
       .exceptAll(again.select("doc_id", "split")).count() === 0)
-    // different seed → a different permutation
-    val other = Pipeline.assignSplit(docs, col("doc_id"), seed = 8L, splits)
+    // different salt → a different assignment
+    val other = Pipeline.assignSplitPortable(
+      docs, col("doc_id"), salt = "8:", splits)
     assert(assigned.select("doc_id", "split")
       .exceptAll(other.select("doc_id", "split")).count() > 0)
   }
@@ -122,7 +126,8 @@ class PipelineSpec extends GraftSuite {
 
   test("stratified sample hits requested per-stratum rates (±tolerance)") {
     val fr = Map("en" -> 0.8, "de" -> 0.2, "fr" -> 0.5, "es" -> 0.5, "zh" -> 0.5)
-    val sampled = Pipeline.stratifiedSample(docs, "lang", fr, seed = 42L)
+    val sampled = Pipeline.stratifiedSamplePortable(
+      docs, "lang", fr, salt = "42:", col("doc_id"))
     val rates = sampled.groupBy("lang").agg(count(lit(1)).as("n"))
       .join(docs.groupBy("lang").agg(count(lit(1)).as("total")), "lang")
       .withColumn("rate", col("n").cast("double") / col("total"))
@@ -135,23 +140,32 @@ class PipelineSpec extends GraftSuite {
 
   test("stratified sample is reproducible for a fixed seed") {
     val fr = Map("en" -> 0.5, "de" -> 0.5, "fr" -> 0.5, "es" -> 0.5, "zh" -> 0.5)
-    val a = Pipeline.stratifiedSample(docs, "lang", fr, 7L)
+    // the draw is a pure function of (salt, key): another layout of the
+    // same rows keeps the same sample
+    val a = Pipeline.stratifiedSamplePortable(
+        docs, "lang", fr, salt = "42:", col("doc_id"))
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val b = Pipeline.stratifiedSample(docs, "lang", fr, 7L)
+    val b = Pipeline.stratifiedSamplePortable(
+        docs.repartition(7), "lang", fr, salt = "42:", col("doc_id"))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(a === b)
   }
 
   test("deterministic shuffle is a stable permutation") {
     val base = docs.select("doc_id")
-    val s1 = Pipeline.deterministicShuffle(base, 13L, col("doc_id"))
+    // pl2's shuffle key: the md5 digest of (salt ++ doc_id), numbered by
+    // globalPosition
+    def shuffled(salt: String): Seq[Long] = Pipeline.globalPosition(base,
+        "shuffle_pos",
+        md5(concat(lit(salt), col("doc_id").cast("string")).cast("binary")),
+        col("doc_id"))
+      .orderBy("shuffle_pos").select("doc_id")
       .collect().map(_.getLong(0)).toSeq
-    val s2 = Pipeline.deterministicShuffle(base, 13L, col("doc_id"))
-      .collect().map(_.getLong(0)).toSeq
+    val s1 = shuffled("7:")
+    val s2 = shuffled("7:")
     assert(s1 === s2, "same seed must give the same order")
     assert(s1.sorted === base.collect().map(_.getLong(0)).toSeq.sorted)
-    val other = Pipeline.deterministicShuffle(base, 14L, col("doc_id"))
-      .collect().map(_.getLong(0)).toSeq
+    val other = shuffled("8:")
     assert(s1 !== other, "different seeds should permute differently")
   }
 

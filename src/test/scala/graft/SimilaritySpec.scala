@@ -791,16 +791,10 @@ class SimilaritySpec extends GraftSuite {
       (1, 11L, 0L, 2, false)))
   }
 
-  test("mips: norm augmentation reproduces exact inner-product ranking") {
-    val q = emb.filter(col("vec_id") < 20)
+  test("mips: a magnitude-flip corpus separates inner-product from cosine ranking") {
     def triples(df: org.apache.spark.sql.DataFrame) =
       df.select("qid", "rank", "vec_id").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val exact = triples(
-      Similarity.mipsTopK(q, emb, "vec_id", "embedding", 5))
-    val reduced = triples(
-      Similarity.mipsViaCosine(q, emb, "vec_id", "embedding", 5))
-    assert(exact === reduced)
     // (on the fixture MIPS ≡ cosine ranking — the vectors are
     // unit-normalized — so magnitude-awareness needs its own corpus)
     import spark.implicits._

@@ -35,6 +35,11 @@ Checks
   6. README's run-time switch table: the `SPARK_GRAFT_*` names in its
      rows must equal the names src/main and build.sbt read as string
      literals, so a new or retired knob shows up in review.
+  7. No orphaned scaladoc under src/main: a line ending a doc comment
+     (`*/`) must not be followed directly by one opening another (`/**`).
+     Scaladoc keeps only the last comment before a definition, so the
+     first one is silently dropped (a helper inserted between a def and
+     its doc leaves the def showing the helper's text).
 
 Usage: python3 tools/doc_sync_check.py   (from the repo root)
 Exit 0 = in sync; 1 = drift (each mismatch printed).
@@ -539,6 +544,20 @@ if doc_knobs != code_knobs:
          f" code reads and misses {sorted(code_knobs - doc_knobs)}")
 else:
     ok(f"README switch table == the {len(code_knobs)} SPARK_GRAFT_* names the code reads")
+
+# ---- 7. orphaned scaladocs -----------------------------------------------
+orphans = []
+for path in sorted(glob.glob(os.path.join(ROOT, "src/main/**/*.scala"),
+                          recursive=True)):
+    lines = open(path).read().split("\n")
+    for i, (line, nxt) in enumerate(zip(lines, lines[1:])):
+        if line.rstrip().endswith("*/") and nxt.lstrip().startswith("/**"):
+            orphans.append(f"{os.path.relpath(path, ROOT)}:{i + 1}")
+if orphans:
+    fail("doc comment orphaned by the doc comment after it: "
+         + ", ".join(orphans))
+else:
+    ok("no doc comment under src/main is followed directly by another")
 
 print(f"\n{'DRIFT: ' + str(len(fails)) + ' mismatch(es)' if fails else 'in sync'}")
 sys.exit(1 if fails else 0)
