@@ -41,9 +41,8 @@ object Bench {
     "q6_forecast_revenue", "q10_returned_items", "q12_priority_shipping",
     "q14_promo_effect", "q19_disjunctive_filter")
 
-  /** The llm suite: the LLM-data-pipeline rows timed after tpch22.
-    * `ss20_serve` is not a catalog entry: it serves a query batch against
-    * the IVF-PQ model the bench trains once. */
+  /** The llm suite: the LLM-data-pipeline catalog entries timed after
+    * tpch22. */
   val llm: Seq[String] = Seq(
     "dd1_exact_dedup", "dd3_minhash_dup_pairs", "dd12_repeated_chunks",
     "dd16_sorted_neighborhood",
@@ -72,15 +71,10 @@ object Bench {
     // cost at the r19→r20 boundary — compare per-query)
     "dd28_sorted_neighborhood_hashed",
     // round-10 additions: span-level dedup, the source-cap/
-    // contribution-cap balancers, and the IVF-PQ SERVE row —
-    // round 18 split the old ss20_ivfpq_topk bundle: codebook
-    // training (once-per-corpus at 100 TB, and the stall source in
-    // the r16+r17 gated captures) is timed separately as
-    // `ss20_train`; this row is the per-query serve cost against
-    // the pinned trained model (scoped pins keep the model alive
-    // across the per-rep releaseCaches)
+    // contribution-cap balancers, and IVF-PQ top-k (codebook training
+    // plus one served batch, as the catalog entry runs them)
     "dd26_dup_spans", "pl29_source_caps", "ev26_contribution_cap",
-    "ss20_serve",
+    "ss20_ivfpq_topk",
     // round-17 addition: the scale-path signal-agreement matrix
     // (dd23's timed dual over bucketed signals — see the dd23 note)
     "dd27_lsh_signal_agreement",
@@ -171,7 +165,7 @@ object Bench {
   }
 
   /** The one timing discipline every timed section shares (Bench's
-    * headline, tpch22, llm and ss20_train, and ScaleCurve's points — the
+    * headline, tpch22 and llm, and ScaleCurve's points — the
     * stall sentinel and drift watch compare across sections, so they
     * must never diverge): gc delta + wall clock around the body. */
   private[graft] def timedBody(body: => Unit): (Double, Long) = {
@@ -209,18 +203,18 @@ object Bench {
     * delta go to the artifact, so an outlier is diagnosable from the
     * JSON alone: a noisy environment shows one blown rep among steady
     * ones (usually with a fat gc_ms), a real regression shows
-    * consistently slow reps. `settleGc` forces a full collection and
-    * gives concurrent phases a beat to finish before the timed reps, so
-    * they start from a compacted heap instead of paying the warmups'
-    * garbage.
+    * consistently slow reps. A full collection, and a beat for its
+    * concurrent phases to finish, separates the warmups from the timed
+    * reps, so rep 1 starts from a compacted heap instead of paying the
+    * warmups' garbage.
     *
     * Returns the (query, reps, gc per rep) rows in `names` order, exactly
     * as measured: a stall-flagged rep stays in its row. */
-  def timedSuite(names: Seq[String], warmups: Int, reps: Int,
-      settleGc: Boolean = false)(run: String => (Double, Long))
-      : Seq[(String, Seq[Double], Seq[Long])] = {
+  def timedSuite(names: Seq[String], warmups: Int, reps: Int)(
+      run: String => (Double, Long)): Seq[(String, Seq[Double], Seq[Long])] = {
     (1 to warmups).foreach(_ => names.foreach(run))
-    if (settleGc) { System.gc(); Thread.sleep(1000) }
+    System.gc()
+    Thread.sleep(1000)
     val acc = collection.mutable.Map(names.map(_ -> Vector.empty[(Double, Long)]): _*)
     (1 to reps).foreach(_ => names.foreach(q => acc(q) :+= run(q)))
     names.map(q => (q, acc(q).map(_._1), acc(q).map(_._2)))
@@ -250,8 +244,8 @@ object Bench {
     // execute + materialize), same warmed-cache methodology as the
     // reference's pre-loaded tables.
     val repCount = 5
-    val timed = timedSuite(headline, warmups = 3, reps = repCount,
-      settleGc = true)(timedRun(catalog))
+    val timed = timedSuite(headline, warmups = 3, reps = repCount)(
+      timedRun(catalog))
     val results = timed.map { case (q, reps, _) =>
       q -> reps.sorted.apply(repCount / 2)
     }
@@ -314,95 +308,9 @@ object Bench {
     // agreement matrix composed over the bucketed scale-path signals
     // (exact/prefix md5 equi-joins + dd3's MinHash-LSH + dd8's SimHash
     // buckets) — the 100 TB form, every input shuffle-keyed, never n².
-    // --- ss20 train/serve split (round 18) -------------------------------
-    // The old ss20_ivfpq_topk llm row bundled PQ codebook TRAINING
-    // (k-means — once-per-corpus at 100 TB) with query SERVING, so the
-    // per-query figure misstated the serve cost and the training job was
-    // the stall source in two consecutive gated captures. Split: the
-    // model is trained ONCE into its own pin scope (which the per-rep
-    // releaseCaches cannot touch — the scoped-pinning contract), serve
-    // reps probe the pinned code frame, and training cost is its own
-    // gated section (`ss20_train`: reps + min + gc + stall sentinel,
-    // fresh scope per rep released outside the timed window).
-    // `ss20_ivfpq_topk` (the composed one-call form) stays the
-    // oracle-checked catalog entry; it is not re-timed here.
-    val ss20Scope = new graft.ops.Pipeline.PinScope
-    var ss20Model: Option[graft.ops.Similarity.IvfPqModel] = None
-    // Parameters track the catalog entry's round-19 adopted operating
-    // point (nprobe=4, m=8, cb=32 — see the ss20_ivfpq_topk keep-note):
-    // measured at 32g/sf0.1, ss20_serve moved 0.91–0.98 → ~1.48 s and
-    // ss20_train 1.7–1.9 → ~2.8 s for recall_l2@20 0.835 → 0.934, so
-    // compare the two rows across the r18→r19 boundary
-    // per-configuration, not per-row.
-    def ss20Train(): graft.ops.Similarity.IvfPqModel =
-      graft.ops.Similarity.ivfPqTrain(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding",
-        dim = 64, numCoarse = 8, m = 8, codebookSize = 32, updates = 1)
-    def ss20Trained(): graft.ops.Similarity.IvfPqModel =
-      ss20Model.getOrElse {
-        val mdl = graft.ops.Pipeline.withScope(ss20Scope)(ss20Train())
-        Force.run(mdl.encoded) // materialize the code frame train-side
-        // serving reads only the code frame; the corpus-sized residual
-        // cache would otherwise sit in memory across the whole llm
-        // sweep, competing under LRU with the cached tables the timed
-        // reps read (r18 review) — drop it once the codes exist
-        mdl.residuals.unpersist(blocking = false)
-        ss20Model = Some(mdl)
-        mdl
-      }
-    def ss20ServePlan(): DataFrame = {
-      import org.apache.spark.sql.functions.col
-      val emb = Tables.embeddings(spark, sfDir)
-      graft.ops.Similarity.ivfPqServe(
-        emb.filter(col("vec_id") < 20), ss20Trained(),
-        "vec_id", "embedding", 5, nprobe = 4)
-    }
-    // One timed end-to-end training run: coarse collect + residual
-    // materialization + Lloyd rounds + encoded-frame materialization,
-    // pinned into a throwaway scope released AFTER the timed window.
-    def ss20TrainTimed(): (Double, Long) = {
-      // MUST run only after ss20Scope is released: Spark's cache manager
-      // matches plan-identical frames, so a still-pinned serve model
-      // would turn this "training" run into a cache READ, and this
-      // scope's release would then unpersist the serve model out from
-      // under any later consumer (r18 review finding). Both halves
-      // checked: the scope queue is drained AND the model's encoded frame
-      // has actually left the cache manager (release() removes entries
-      // synchronously even with blocking=false).
-      require(ss20Scope.isEmpty && ss20Model.forall(
-          _.encoded.storageLevel == org.apache.spark.storage.StorageLevel.NONE),
-        "ss20TrainTimed must run only after ss20Scope.release(): a " +
-          "cached plan-identical serve model would make this a cache " +
-          "read, and releasing the throwaway scope would unpersist the " +
-          "serve model (r18 cache-identity finding)")
-      val scope = new graft.ops.Pipeline.PinScope
-      val r = timedBody {
-        val mdl = graft.ops.Pipeline.withScope(scope)(ss20Train())
-        Force.run(mdl.encoded)
-      }
-      scope.release()
-      r
-    }
-
     val llmRepsFull: Seq[(String, Seq[Double], Seq[Long])] = informational("llm") {
-      // ss20_serve resolves through the shared model (its warmup also
-      // trains+pins the model it serves against); every other row is
-      // its unmodified SparkEntry catalog entry
-      def llmPlan(q: String): DataFrame =
-        if (q == "ss20_serve") ss20ServePlan() else catalog(q)
-      timedSuite(llm, warmups = 2, reps = 3)(timedRun(llmPlan))
+      timedSuite(llm, warmups = 2, reps = 3)(timedRun(catalog))
     }
-    // The serve model's pins are no longer needed once the llm sweep has
-    // run — and they MUST be gone before the training rows below (see
-    // ss20TrainTimed).
-    ss20Scope.release()
-    // Gated training rows: same reps+min+gc discipline as every timed
-    // section. Runs AFTER the llm sweep so its throwaway training scopes
-    // never interleave with serve reps.
-    val ss20TrainRaw: Seq[(String, Seq[Double], Seq[Long])] =
-      informational("ss20_train") {
-        timedSuite(Seq("ss20_train"), warmups = 1, reps = 3)(_ => ss20TrainTimed())
-      }
     // Per-query MIN is the reported number (steady-state cost; immune to
     // the one-sided stalls a 24-query sweep accumulates).
     val llmMins: Seq[(String, Double)] =
@@ -435,22 +343,13 @@ object Bench {
       else s""","llm_total":${llmMins.map(_._2).sum},"llm":${jsonMap(llmMins)}""" +
         s""","llm_reps":${jsonRepMap(llmRepsFull.map { case (q, r, _) => (q, r) })}""" +
         s""","llm_gc_ms":${jsonGcMap(llmRepsFull.map { case (q, _, g) => (q, g) })}"""
-    val ss20TrainField =
-      if (ss20TrainRaw.isEmpty) ""
-      else {
-        val (_, reps, gcs) = ss20TrainRaw.head
-        s""","ss20_train_sec":${reps.min}""" +
-          s""","ss20_train_reps":${reps.map(r => f"$r%.4f").mkString("[", ",", "]")}""" +
-          s""","ss20_train_gc_ms":${gcs.mkString("[", ",", "]")}"""
-      }
     // Stall sentinel over every rep'd section, on the reps as measured
     // (thresholds + rationale on the stallFlags method, which
     // BenchSentinelSpec pins).
     val allFlags =
       stallFlags("headline", timed) ++
       stallFlags("tpch22", tpch22Raw) ++
-      stallFlags("llm", llmRepsFull) ++
-      stallFlags("ss20_train", ss20TrainRaw)
+      stallFlags("llm", llmRepsFull)
     val stallField =
       s""","stall_flag_count":${allFlags.size}""" +
         s""","stall_flags":${allFlags.mkString("[", ",", "]")}"""
@@ -469,7 +368,7 @@ object Bench {
     val slim =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":${jsonMap(results)},"sf":$sfField}"""
     val full =
-      s"""{"metric":"total","value":$total,"value_min":$totalMin,"unit":"sec","queries":${jsonMap(results)},"queries_min":$minField,"reps":$repsField,"gc_ms":$gcField$tpch22Field$llmField$ss20TrainField$stallField,"sf":$sfField,"sf_dir":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"value_min":$totalMin,"unit":"sec","queries":${jsonMap(results)},"queries_min":$minField,"reps":$repsField,"gc_ms":$gcField$tpch22Field$llmField$stallField,"sf":$sfField,"sf_dir":"$sfDir"}"""
     println(slim)
     java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LAST.json"), full + "\n")
     spark.stop()

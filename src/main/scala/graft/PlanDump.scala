@@ -8,15 +8,21 @@ import graft.sources.Tables
   * are reviewable without running Spark.
   *
   * Run: `sbt "runMain graft.PlanDump <sfDir> <outDir> [query ...]"`.
-  * With no explicit query list, dumps the three timed bench suites
-  * (headline, tpch22, llm) — the surfaces the optimization rounds audit.
-  * The session is Bench's own ([[Bench.session]]), so the dumped plans
-  * are the plans the bench times.
+  * Both directories are required, so a run never overwrites the
+  * committed dumps under `plans/` by default. With no explicit query
+  * list, dumps the three timed bench suites (headline, tpch22, llm) —
+  * the surfaces the optimization rounds audit. Each query runs before
+  * its dump, so the dump shows the FINAL adaptive plan (AQE's runtime
+  * rewrites — SMJ→SHJ conversion, coalesced/skew reads — are invisible
+  * in the initial plan an un-executed explain prints). The session is
+  * Bench's own ([[Bench.session]]), so the dumped plans are the plans
+  * the bench times.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val outDir = if (args.length > 1) args(1) else "plans/r20"
+    require(args.length >= 2, "usage: PlanDump <sfDir> <outDir> [query ...]")
+    val sfDir = args(0)
+    val outDir = args(1)
     val spark = Bench.session("graft-plandump")
     Tables.tpch.foreach { t => Tables.load(spark, sfDir, t).cache().count() }
 
@@ -24,21 +30,15 @@ object PlanDump {
       .sortBy(n => n.drop(1).takeWhile(_.isDigit).toInt)
     val targets: Seq[String] =
       if (args.length > 2) args.drop(2).toSeq
-      else (Bench.headline ++ tpch ++
-        Bench.llm.filterNot(_ == "ss20_serve")).distinct
+      else (Bench.headline ++ tpch ++ Bench.llm).distinct
 
     val dir = java.nio.file.Paths.get(outDir)
     java.nio.file.Files.createDirectories(dir)
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-    // SPARK_GRAFT_PLAN_EXECUTED=1: Force.run the query FIRST so the dump
-    // shows the FINAL adaptive plan (AQE's runtime rewrites — SMJ→SHJ
-    // conversion, coalesced/skew reads — are invisible in the initial
-    // plan an un-executed explain prints).
-    val executed = sys.env.get("SPARK_GRAFT_PLAN_EXECUTED").contains("1")
     targets.foreach { q =>
       try {
         val df = SparkEntry.queries(q)(spark, sfDir)
-        if (executed) Force.run(df)
+        Force.run(df)
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.writeString(dir.resolve(s"${q}_$suffix.txt"), txt)

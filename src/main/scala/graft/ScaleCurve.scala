@@ -92,15 +92,7 @@ object ScaleCurve {
     // ---- synthetic scale points -------------------------------------
     val dirs: Seq[(Int, String)] =
       (1 -> baseDir) +: factors.filter(_ > 1).map { f =>
-        val out = s"$workDir/x$f"
-        val marker = java.nio.file.Paths.get(out, "_GRAFT_FACTOR")
-        if (regen || !java.nio.file.Files.exists(marker)) {
-          System.err.println(s"[scale] generating ${f}x replica at $out")
-          generate(spark, baseDir, out, f)
-          java.nio.file.Files.createDirectories(marker.getParent)
-          java.nio.file.Files.writeString(marker, s"$f of $baseDir\n")
-        } else System.err.println(s"[scale] reusing $out")
-        f -> out
+        f -> replica(spark, baseDir, workDir, f, regen)
       }
 
     // ---- timed passes ------------------------------------------------
@@ -130,8 +122,8 @@ object ScaleCurve {
       // Tables.events normalizes them — a bare Tables.load here threw on
       // such fixtures even with replicas already generated).
       tableRows((f, "events")) = Tables.events(spark, dir).count()
-      val timed = Bench.timedSuite(suite, warmups = 1, reps = reps,
-        settleGc = true)(Bench.timedRun(q => SparkEntry.queries(q)(spark, dir)))
+      val timed = Bench.timedSuite(suite, warmups = 1, reps = reps)(
+        Bench.timedRun(q => SparkEntry.queries(q)(spark, dir)))
       timed.foreach { case (q, secs, gcs) => rows((f, q)) = (secs, gcs) }
       spark.catalog.clearCache()
     }
@@ -171,6 +163,27 @@ object ScaleCurve {
       System.err.println(f"$q%-28s $cells ${exponent(q)}%.2f")
     }
     spark.stop()
+  }
+
+  /** The factor-`f` replica of `baseDir` under `workDir`, returned as its
+    * directory. Its `_GRAFT_FACTOR` marker names the factor and base it
+    * was built from; the replica is reused only when the marker says
+    * exactly that (and `regen` is off), so a run on another base never
+    * mixes that base's replicas into its curve. The marker is removed
+    * before generating, so an interrupted generation is never reused. */
+  private[graft] def replica(spark: SparkSession, baseDir: String,
+      workDir: String, f: Int, regen: Boolean): String = {
+    import java.nio.file.{Files, Paths}
+    val out = s"$workDir/x$f"
+    val marker = Paths.get(out, "_GRAFT_FACTOR")
+    val stamp = s"$f of $baseDir\n"
+    if (regen || !Files.exists(marker) || Files.readString(marker) != stamp) {
+      System.err.println(s"[scale] generating ${f}x replica of $baseDir at $out")
+      Files.deleteIfExists(marker)
+      generate(spark, baseDir, out, f)
+      Files.writeString(marker, stamp)
+    } else System.err.println(s"[scale] reusing $out")
+    out
   }
 
   /** Copy-tag every 7th token of `text` for copies > 0 (the near-dup

@@ -10,85 +10,32 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
-  /** A pin scope: frames persisted mid-operator land in exactly one
-    * scope, and only that scope's [[release]] unpersists them. Scoping
-    * is what makes pinning safe under concurrent callers in one JVM:
-    * each caller wraps its operator calls in [[Pipeline.withScope]] and
-    * releases its own token — a global release point can no longer
-    * unpersist frames another thread's in-flight operator just pinned.
-    *
-    * LIMIT: isolation is of release LIFECYCLE, not of the cache entries
-    * themselves — Spark's cache manager keys entries by canonicalized
-    * PLAN, so two callers running the IDENTICAL operator over the
-    * IDENTICAL input share ONE entry even across scopes, and the first
-    * scope's release uncaches it for both (the survivor recomputes;
-    * measured on this repo's Spark 4.1.2). Every remaining pin exists
-    * for reuse only — no operator's answer depends on a pinned frame
-    * staying cached (the two-phase prefix scans compute inside
-    * execution, see [[graft.plans.PrefixScanExec]]) — so a cross-scope
-    * uncache costs a recompute and nothing else. */
-  final class PinScope {
-    private val frames =
-      new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-    private[graft] def add(df: DataFrame): Unit = frames.add(df)
-    def isEmpty: Boolean = frames.isEmpty
-    /** Snapshot of the queued frames — spec-only introspection (the
-      * plan-identity limit is pinned by test against real cache
-      * state). */
-    private[graft] def snapshot: Seq[DataFrame] = {
-      import scala.jdk.CollectionConverters._
-      frames.iterator().asScala.toSeq
-    }
-    /** Unpersist every frame pinned into THIS scope. Call AFTER the
-      * action(s) consuming their results — a further action on an
-      * already-returned frame would re-run the pinned stage. */
-    def release(): Unit = {
-      var df = frames.poll()
-      while (df != null) {
-        df.unpersist(blocking = false)
-        df = frames.poll()
-      }
-    }
-  }
-
-  /** The default scope: callers that never opt into [[withScope]] pin
-    * here and release through the classic [[releaseCaches]] — the
-    * single-harness behavior, unchanged. */
-  private[graft] val defaultScope = new PinScope
-
-  /** The scope pins currently route to. DynamicVariable rides an
-    * InheritableThreadLocal, so the binding holds across the operator
-    * call stack on the caller's thread (where graft operators persist
-    * and pin — all pinning happens at plan construction on the driver)
-    * and is inherited by threads SPAWNED inside the scope; unrelated
-    * threads keep the default scope. */
-  private val currentScope =
-    new scala.util.DynamicVariable[PinScope](defaultScope)
+  /** Every frame [[pin]] persisted and [[releaseCaches]] has not yet
+    * unpersisted. Every pin exists for reuse only: no operator's answer
+    * depends on a pinned frame staying cached (the two-phase prefix
+    * scans compute inside execution, see [[graft.plans.PrefixScanExec]]).
+    * The queue is shared by every caller in the JVM, and Spark's cache
+    * manager keys entries by canonicalized PLAN (plan-identical frames
+    * share one entry), so one caller's release can cost another caller
+    * a recompute, never a wrong answer. */
+  private[graft] val pinned =
+    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
   /** The one way an operator keeps an intermediate past the consuming
-    * action: persist `df` at MEMORY_AND_DISK, add it to the caller's
-    * current scope, and return the persisted frame. Pin only a subtree
-    * the final plan cannot share by itself — Catalyst's exchange reuse
-    * already computes a subtree once when both readers sit in one query
-    * under plan-identical exchanges. */
+    * action: persist `df` at MEMORY_AND_DISK, queue it for
+    * [[releaseCaches]], and return the persisted frame. Pin only a
+    * subtree the final plan cannot share by itself — Catalyst's exchange
+    * reuse already computes a subtree once when both readers sit in one
+    * query under plan-identical exchanges. */
   private[graft] def pin(df: DataFrame): DataFrame = {
     val persisted =
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    currentScope.value.add(persisted)
+    pinned.add(persisted)
     persisted
   }
 
-  /** Run `body` with all graft pins routed to `scope`. The caller owns
-    * the token: release it with `scope.release()` AFTER the actions
-    * consuming the returned frames (NOT inside this block — results are
-    * usually consumed later). Reentrant; nested scopes shadow outer
-    * ones on the same thread. */
-  def withScope[T](scope: PinScope)(body: => T): T =
-    currentScope.withValue(scope)(body)
-
-  /** Unpersist every frame pinned into the DEFAULT scope (the LSH
-    * signature frames, the funnel's stage completions, the k-hop
-    * adjacency, … when called without [[withScope]]). Call AFTER the
+  /** Unpersist every pinned frame (the LSH signature frames, the
+    * funnel's stage completions, the k-hop adjacency, …). Call AFTER the
     * action(s) consuming their results; releasing earlier only costs a
     * recompute of the pinned stage.
     *
@@ -101,13 +48,14 @@ object Pipeline {
     * call this between queries, end a full-catalog session with zero
     * graft-pinned cache entries (PipelineSpec checks it per pinning
     * operator); long-lived library callers should do the same after
-    * each consuming action.
-    *
-    * CONCURRENCY: this releases ONLY the default scope. Concurrent
-    * pipelines in one JVM isolate themselves with [[withScope]] — their
-    * pins are untouchable from here — rather than serializing release
-    * points. */
-  def releaseCaches(): Unit = defaultScope.release()
+    * each consuming action. */
+  def releaseCaches(): Unit = {
+    var df = pinned.poll()
+    while (df != null) {
+      df.unpersist(blocking = false)
+      df = pinned.poll()
+    }
+  }
 
   /** Exact-k deterministic per-stratum sample: within each stratum, rank
     * rows by a seeded md5 of their key and keep the k smallest. Unlike

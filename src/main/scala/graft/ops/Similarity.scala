@@ -896,8 +896,9 @@ object Similarity {
 
   /** A trained IVF-PQ index: the bounded driver state (coarse seeds +
     * per-subspace codebooks) plus the PQ-encoded corpus
-    * (`vec_id, cid, _c0.._c{m-1}` — persisted and pinned into the
-    * caller's [[Pipeline]] scope; at cluster scale this frame is what
+    * (`vec_id, cid, _c0.._c{m-1}` — persisted and pinned through
+    * [[Pipeline.pin]], so the model lives until the caller's next
+    * [[Pipeline.releaseCaches]]; at cluster scale this frame is what
     * [[writeIvfIndex]] lays down at rest, partitioned by cid).
     * Train ONCE per corpus with [[ivfPqTrain]]; answer any number of
     * query batches with [[ivfPqServe]] — the round-18 split that keeps
@@ -917,12 +918,11 @@ object Similarity {
     * assignment m·updates+2 times, measured 7.7 s → 2.6 s at sf0.1),
     * per-subspace codebooks ([[trainSubspaceBooks]]), and the encoded
     * corpus (persisted + pinned: serving reads codes, never re-encodes).
-    * Both pins land in the caller's current [[Pipeline]] scope — wrap in
-    * `Pipeline.withScope` to keep a long-lived model alive across other
-    * callers' release points, or rely on the default-scope
-    * `releaseCaches` in single-harness loops. Training is lazy Spark-
-    * side: the codebook collects run here, but `encoded` materializes at
-    * the caller's first action (force it to charge encoding to train). */
+    * Both pins live until the caller's next [[Pipeline.releaseCaches]];
+    * a batch served after it gets the same answer but re-encodes the
+    * corpus. Training is lazy Spark-side: the codebook collects run
+    * here, but `encoded` materializes at the caller's first action
+    * (force it to charge encoding to train). */
   def ivfPqTrain(
       corpus: DataFrame, idCol: String, vecCol: String, dim: Int,
       numCoarse: Int = 8, m: Int = 8, codebookSize: Int = 16,

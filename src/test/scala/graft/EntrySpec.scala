@@ -16,6 +16,10 @@ class EntrySpec extends GraftSuite {
     val qs = SparkEntry.queries.keySet
     val orphans = SparkEntry.oracleSql.keySet -- qs
     assert(orphans.isEmpty, s"oracle without query: $orphans")
+    // the timed harnesses time only what the catalog ships
+    val timed = (Bench.headline ++ Bench.llm ++ ScaleCurve.tpchSuite ++
+      ScaleCurve.llmSuite).toSet -- qs
+    assert(timed.isEmpty, s"timed row without query: $timed")
   }
 
   test("entry flagship returns rows") {

@@ -242,7 +242,7 @@ class PipelineSpec extends GraftSuite {
   private lazy val events = Tables.events(spark, sf)
 
   // funnel pins each stage's completion frame (reuse only): the pinning
-  // operator these lifecycle specs drive
+  // operator the lifecycle spec below drives
   private def funnel() = graft.ops.EventAnalytics.funnel(
     events, "user_id", "ts", "event_type", Seq("view", "click", "purchase"))
 
@@ -254,87 +254,13 @@ class PipelineSpec extends GraftSuite {
     stages.count() // the consuming action
     // the operator pinned its stage completions
     assert(!cm.isEmpty)
-    assert(!Pipeline.defaultScope.isEmpty)
+    assert(!Pipeline.pinned.isEmpty)
     Pipeline.releaseCaches()
-    assert(Pipeline.defaultScope.isEmpty)
+    assert(Pipeline.pinned.isEmpty)
     // releasing drops the pin; when no other suite left caches behind,
     // the session's cache manager ends the run empty (the Verify-loop
     // contract: zero graft-pinned entries at exit)
     if (cleanBefore) assert(cm.isEmpty)
-  }
-
-  test("pin scopes isolate concurrent callers from releaseCaches") {
-    // A caller that wraps its operator calls in withScope owns its pins:
-    // a releaseCaches() fired by ANOTHER caller (the global/default
-    // release point) must not unpersist its in-flight frames. Two scoped
-    // callers on their own threads + a default-scope caller, interleaved
-    // releases.
-    // KNOWN LIMIT (pinned in the PinScope scaladoc): Spark's cache is
-    // plan-keyed, so these two callers — whose pinned completions are
-    // identical — actually share ONE cache entry, and the FIRST
-    // scope.release() drops it for both. That costs the survivor a
-    // recompute, never a wrong answer: no operator's result depends on
-    // a pin staying cached. This test therefore pins the scope LIFECYCLE
-    // semantics: default-release can't touch scoped queues, each scope
-    // drains only its own.
-    Pipeline.releaseCaches() // drain pins left over from earlier tests
-    val scopeA = new Pipeline.PinScope
-    val scopeB = new Pipeline.PinScope
-    import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
-    val pool = Executors.newFixedThreadPool(2)
-    val built = new CountDownLatch(2)
-    val released = new CountDownLatch(1)
-    def scopedRun(scope: Pipeline.PinScope) = pool.submit(
-      new java.util.concurrent.Callable[Seq[org.apache.spark.sql.Row]] {
-        def call() = Pipeline.withScope(scope) {
-          val stages = funnel()
-          built.countDown()
-          released.await() // hostile releaseCaches fires BEFORE our action
-          stages.collect().toSeq
-        }
-      })
-    val (ra, rb) = try {
-      val fa = scopedRun(scopeA)
-      val fb = scopedRun(scopeB)
-      assert(built.await(120, TimeUnit.SECONDS), "scoped callers never built")
-      // both scoped callers have pinned; the default scope has not
-      assert(!scopeA.isEmpty && !scopeB.isEmpty)
-      assert(Pipeline.defaultScope.isEmpty)
-      // the hostile global release: must not touch either scope's pins
-      Pipeline.releaseCaches()
-      assert(!scopeA.isEmpty && !scopeB.isEmpty)
-      released.countDown()
-      (fa.get(120, TimeUnit.SECONDS), fb.get(120, TimeUnit.SECONDS))
-    } finally {
-      // a failed assertion must not leave the callers parked on the latch
-      released.countDown()
-      pool.shutdown()
-    }
-    // both callers got the full, identical answer (one row per stage)
-    assert(ra.map(_.getInt(0)) === Seq(1, 2, 3))
-    assert(ra === rb)
-    // each caller releases its own token; the other's QUEUE survives —
-    // but pin the documented plan-identity LIMIT against real cache
-    // state: these two callers' pinned frames are plan-identical, so
-    // they shared ONE cache entry and A's release dropped it for B too
-    val bFrames = scopeB.snapshot
-    assert(bFrames.nonEmpty)
-    scopeA.release()
-    assert(scopeB.isEmpty === false)
-    assert(bFrames.forall(_.storageLevel ===
-        org.apache.spark.storage.StorageLevel.NONE),
-      "plan-identical cross-scope entries share cache: A's release " +
-        "must have dropped B's entry too (if this ever starts FAILING, " +
-        "Spark made caching handle-scoped and the PinScope scaladoc " +
-        "should be revisited)")
-    scopeB.release()
-    assert(scopeA.isEmpty && scopeB.isEmpty)
-    // and an unwrapped call still lands in the default scope, released
-    // by the classic harness release point (back-compat contract)
-    funnel().count()
-    assert(!Pipeline.defaultScope.isEmpty)
-    Pipeline.releaseCaches()
-    assert(Pipeline.defaultScope.isEmpty)
   }
 
   test("every pinning operator leaves no cache entry after releaseCaches") {
@@ -351,7 +277,7 @@ class PipelineSpec extends GraftSuite {
     def rowsOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
     def release(name: String): Unit = {
-      val pinned = !Pipeline.defaultScope.isEmpty
+      val pinned = !Pipeline.pinned.isEmpty
       Pipeline.releaseCaches()
       Tables.partsupp(spark, sf).unpersist(blocking = true)
       assert(cm.isEmpty, s"$name left a cache entry after releaseCaches")

@@ -120,6 +120,20 @@ class ScaleCurveSpec extends GraftSuite {
       s"$joinedSigs of $total copy-1 docs kept their source's full minhash signature")
   }
 
+  test("a replica is regenerated when its marker names another base") {
+    // base A = the fixture, base B = its factor-2 replica: asking for
+    // factor 2 of B where factor 2 of A lies must rebuild, not reuse
+    val work = java.nio.file.Files.createTempDirectory("graft-scale-work-").toString
+    def lineitems(dir: String) = spark.read.parquet(s"$dir/lineitem.parquet").count()
+    val a = ScaleCurve.replica(spark, sf, work, 2, regen = false)
+    assert(lineitems(a) === 2 * base("lineitem").count())
+    val b = ScaleCurve.replica(spark, outDir, work, 2, regen = false)
+    assert(b === a)
+    assert(lineitems(b) === 4 * base("lineitem").count())
+    assert(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(b, "_GRAFT_FACTOR")) === s"2 of $outDir\n")
+  }
+
   test("embedding dimension count unchanged; copy-1 vectors differ from source") {
     val off = base("embeddings").agg(max(col("vec_id"))).head().getLong(0) + 1
     val dims = rep("embeddings").select(size(col("embedding")).as("d"))

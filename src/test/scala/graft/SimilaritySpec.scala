@@ -114,13 +114,11 @@ class SimilaritySpec extends GraftSuite {
     }
   }
 
-  test("ivf-pq train/serve split: one model serves many batches, scoped pins") {
-    // The round-18 split of the bundled ss20 row: training (k-means
-    // codebooks + encoded corpus) happens ONCE per corpus; serving is a
-    // pure probe. The split form must be bit-identical to the one-call
-    // form, the model's pins must live in the caller's scope (immune to
-    // the global releaseCaches between bench reps), and a SECOND query
-    // batch must serve correctly off the same pinned model.
+  test("ivf-pq train/serve split: one pinned model serves many batches") {
+    // Training (k-means codebooks + encoded corpus) happens ONCE per
+    // corpus; serving is a pure probe. The split form must be
+    // bit-identical to the one-call form, and a SECOND query batch must
+    // serve correctly off the same pinned model.
     import graft.ops.Pipeline
     val q1 = emb.filter(col("vec_id") < 20)
     val q2 = emb.filter(col("vec_id") >= 20 && col("vec_id") < 30)
@@ -131,18 +129,8 @@ class SimilaritySpec extends GraftSuite {
       q1, emb, "vec_id", "embedding", 5, dim = 64, numCoarse = 8,
       nprobe = 2, m = 8, codebookSize = 16, updates = 1))
     Pipeline.releaseCaches()
-    val scope = new Pipeline.PinScope
-    val model = Pipeline.withScope(scope) {
-      Similarity.ivfPqTrain(emb, "vec_id", "embedding", dim = 64,
-        numCoarse = 8, m = 8, codebookSize = 16, updates = 1)
-    }
-    // train pinned into the caller's scope, not the default queue
-    assert(!scope.isEmpty && Pipeline.defaultScope.isEmpty)
-    // a hostile global release (what the bench rep loop fires) must not
-    // unpersist the model
-    Pipeline.releaseCaches()
-    assert(model.encoded.storageLevel.useMemory,
-      "model code frame must stay persisted across releaseCaches")
+    val model = Similarity.ivfPqTrain(emb, "vec_id", "embedding", dim = 64,
+      numCoarse = 8, m = 8, codebookSize = 16, updates = 1)
     val served = rows(Similarity.ivfPqServe(
       q1, model, "vec_id", "embedding", 5, nprobe = 2))
     assert(served === oneCall)
@@ -163,8 +151,7 @@ class SimilaritySpec extends GraftSuite {
     val planStr = servePlan.queryExecution.executedPlan.toString
     assert(planStr.contains("InMemoryTableScan"),
       "serve must scan the pinned encoded frame, not recompute it")
-    scope.release()
-    assert(scope.isEmpty)
+    Pipeline.releaseCaches()
     assert(model.encoded.storageLevel ===
       org.apache.spark.storage.StorageLevel.NONE)
   }
@@ -209,20 +196,17 @@ class SimilaritySpec extends GraftSuite {
 
   test("ivf-pq serve and mmr rerank edge shapes: empty batch, unknown ids") {
     import graft.ops.Pipeline
-    val scope = new Pipeline.PinScope
-    val model = Pipeline.withScope(scope) {
-      Similarity.ivfPqTrain(emb, "vec_id", "embedding", dim = 64,
-        numCoarse = 8, m = 8, codebookSize = 16, updates = 1)
-    }
+    val model = Similarity.ivfPqTrain(emb, "vec_id", "embedding", dim = 64,
+      numCoarse = 8, m = 8, codebookSize = 16, updates = 1)
     // an empty query batch serves to an empty result, no error — the
     // shape a scheduler hits between arriving batches
     val empty = emb.filter(col("vec_id") < 0)
     assert(Similarity.ivfPqServe(
       empty, model, "vec_id", "embedding", 5, nprobe = 2).count() === 0L)
-    scope.release()
+    Pipeline.releaseCaches()
     // double release is idempotent (the second drains an empty queue)
-    scope.release()
-    assert(scope.isEmpty)
+    Pipeline.releaseCaches()
+    assert(Pipeline.pinned.isEmpty)
     // mmrRerank drops candidates whose vec_id is absent from the corpus
     // (inner vector join) instead of failing or emitting null vectors
     import spark.implicits._
